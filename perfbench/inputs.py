@@ -117,7 +117,10 @@ def write_page_files(
     for k in range(n_files):
         jobs.append((os.path.join(out_dir, "data", f"part-{k:03d}.parquet"), lo, PAGES_PER_FILE))
         lo += PAGES_PER_FILE
-    ctx = multiprocessing.get_context("spawn")
+    # fork, not spawn: a spawn pool starts a resource-tracker process that
+    # outlives the pool and ends only after this process has exited.
+    # Nothing runs a thread yet (no JVM, no Arrow work), so fork is safe.
+    ctx = multiprocessing.get_context("fork")
     with ProcessPoolExecutor(workers, mp_context=ctx) as pool:
         files = list(pool.map(_write_file, *zip(*jobs)))
     return files[0], files[1:]

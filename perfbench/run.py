@@ -20,6 +20,7 @@ import glob
 import json
 import os
 import shutil
+import signal
 import statistics
 import sys
 import time
@@ -33,12 +34,17 @@ ROOT = os.path.dirname(HERE)
 STATE_DIR = os.path.join(ROOT, ".perfbench")
 
 DRIVER_MEM = "2g"
-#: batch_pages: all files in one operation; trickle_pages: one file each
-FILES = {"batch_pages": 8, "trickle_pages": 8}
+#: batch_pages: all files in one operation; trickle_pages: one file each,
+#: enough for the warm-up ticks and the measured ones
+FILES = {"batch_pages": 8, "trickle_pages": 16}
 #: the traced run repeats its layer probes at least this often
 MIN_TRACE_REPS = 2
 SETUPS = 3
-MIN_ROUNDS = 3
+#: rounds in the first WARM_S seconds of the loop (at least WARM_ROUNDS)
+#: are not sampled: the JIT is still compiling the workload's code
+WARM_S = 10.0
+WARM_ROUNDS = 2
+MIN_SAMPLES = 3
 #: the traced run's funnel probe: documents, and bench.py's stage set
 FUNNEL_DOCS = 1000
 FUNNEL_STAGES = {
@@ -80,6 +86,52 @@ def import_program() -> None:
         sys.exit(2)
 
 
+def adopt_orphans() -> None:
+    """Become the reaper of this process's orphaned descendants (Linux
+    PR_SET_CHILD_SUBREAPER). Spark's Python daemon and its workers, and
+    the JVM's helper processes, outlive the parent that started them by a
+    moment; as orphans they come back to this process, which waits for
+    them before it exits."""
+    import ctypes
+
+    ctypes.CDLL(None, use_errno=True).prctl(36, 1, 0, 0, 0)
+
+
+def child_pids() -> list[int]:
+    pids = []
+    for path in glob.glob(f"/proc/{os.getpid()}/task/*/children"):
+        try:
+            with open(path) as f:
+                pids.extend(int(p) for p in f.read().split())
+        except OSError:
+            pass
+    return pids
+
+
+def reap_children(grace: float = 20.0) -> None:
+    """Wait until this process has no child left, reaping each as it
+    ends. A child still running after ``grace`` seconds gets SIGTERM, and
+    SIGKILL five seconds later."""
+    deadline, signals = time.monotonic() + grace, [signal.SIGTERM, signal.SIGKILL]
+    while True:
+        try:
+            while os.waitpid(-1, os.WNOHANG)[0]:
+                pass
+        except ChildProcessError:  # no child at all, running or not
+            return
+        if time.monotonic() > deadline:
+            sig = signals.pop(0) if signals else signal.SIGKILL
+            for pid in child_pids():
+                print(f"perfbench: child {pid} still running; sending {sig.name}",
+                      file=sys.stderr)
+                try:
+                    os.kill(pid, sig)
+                except ProcessLookupError:
+                    pass
+            deadline = time.monotonic() + 5
+        time.sleep(0.05)
+
+
 def parquet_files(path: str) -> list[str]:
     return glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
 
@@ -94,11 +146,12 @@ def parquet_bytes(path: str) -> int:
     return sum(os.path.getsize(f) for f in parquet_files(path))
 
 
-def cpu_jiffies() -> tuple[int, int]:
-    """(all, stolen) CPU jiffies of the host so far, from /proc/stat."""
+def cpu_jiffies() -> tuple[int, int, int]:
+    """(all, stolen, busy) CPU jiffies of the host so far, from
+    /proc/stat; busy is all but idle, iowait and stolen."""
     with open("/proc/stat") as f:
         v = [int(x) for x in f.readline().split()[1:9]]
-    return sum(v), v[7]
+    return sum(v), v[7], sum(v) - v[3] - v[4] - v[7]
 
 
 def median(xs) -> float:
@@ -140,7 +193,9 @@ class Harness:
         confs = {
             "spark.local.dir": tmp,
             "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
+            # a heap of fixed size: a growing one makes each of the first
+            # rounds faster than the last for about a minute
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -Xms{DRIVER_MEM}",
             "spark.ui.showConsoleProgress": "false",
         }
         if event_log:
@@ -217,6 +272,7 @@ class Ledger:
         self.failed = 0
         self.problems: list[str] = []
         self.steal: list[float] = []
+        self.cpu_s: list[float] = []
 
     def run(self, name: str, fn, check):
         """Time ``fn()``; return (seconds, result), or None if it failed."""
@@ -228,6 +284,7 @@ class Ledger:
             secs = time.monotonic() - t0
             st1 = cpu_jiffies()
             self.steal.append((st1[1] - st0[1]) / max(st1[0] - st0[0], 1))
+            self.cpu_s.append((st1[2] - st0[2]) / os.sysconf("SC_CLK_TCK"))
             problems = check(result)
         except Exception as e:  # the loop keeps running; the failure is counted
             result, problems = None, [f"{type(e).__name__}: {str(e)[:300]}"]
@@ -276,6 +333,7 @@ class Workload:
         self.h, self.files, self.led = h, files, led
         self.samples: list[float] = []
         self.rounds = 0
+        self.warm_rounds = 0
         self.first_multi_out = None
         self.src = os.path.join(h.work, "src")
         self.ticks = os.path.join(h.work, "ticks")
@@ -285,7 +343,7 @@ class Workload:
     def docs_per_op(self) -> int:
         return sum(f.n_pages for f in self.files) if self.batch else self.files[0].n_pages
 
-    def round(self, r: int) -> None:
+    def round(self, r: int, sampled: bool) -> None:
         h, led = self.h, self.led
         if self.batch:
             exp, n = expected_of(self.files), self.docs_per_op
@@ -299,17 +357,23 @@ class Workload:
             res = led.run("tick", lambda: h.tick(self.src, self.ticks),
                           check_pipeline(f.expected.pipeline_counts(), f.n_pages))
         self.rounds += 1
-        if res and r > 0:  # round 0 warms the JIT on this workload's data
+        if res and sampled:
             self.samples.append(res[0])
 
     def run_for(self, seconds: float) -> float:
-        """Rounds until ``seconds`` have passed, at least MIN_ROUNDS; the
-        first is not sampled. Returns the loop's wall time."""
+        """Warm-up rounds, then sampled rounds until ``seconds`` have
+        passed (at least MIN_SAMPLES). Returns the wall time of the sampled
+        rounds."""
         t0 = time.monotonic()
         r = 0
-        while r < MIN_ROUNDS or (time.monotonic() - t0 < seconds
-                                 and (self.batch or r < len(self.files))):
-            self.round(r)
+        while r < WARM_ROUNDS or time.monotonic() - t0 < WARM_S:
+            self.round(r, sampled=False)
+            r += 1
+        self.warm_rounds = r
+        t0 = time.monotonic()
+        while r - self.warm_rounds < MIN_SAMPLES or (
+                time.monotonic() - t0 < seconds and (self.batch or r < len(self.files))):
+            self.round(r, sampled=True)
             r += 1
         return time.monotonic() - t0
 
@@ -374,7 +438,7 @@ def measure(args, h: Harness, led: Ledger, files) -> tuple[dict, dict]:
     named = {**wl.named(), "setup_s": metrics["setup_s"],
              "sink_bytes_per_input_byte": metrics["sink_bytes_per_input_byte"],
              "error_rate": metric(led.failed / max(led.attempted, 1), "fraction")}
-    record = {"docs_per_op": n, "rounds": wl.rounds, "steal": led.steal,
+    record = {"docs_per_op": n, "rounds": wl.rounds, "warm_rounds": wl.warm_rounds, "steal": led.steal, "cpu_s": led.cpu_s,
               "phase_s": {"loop": loop_s, "restarts": restarts_s},
               "samples": {"op_s": wl.samples, "setup_s": setups}, "named": named}
     return metrics, record
@@ -626,6 +690,7 @@ def trace_layers(args, h: Harness, led: Ledger, files) -> tuple[dict, dict]:
 def main(argv=None) -> int:
     args = parse_args(argv)
     import_program()
+    adopt_orphans()
 
     cores = min(4, len(os.sched_getaffinity(0)))
     work = os.path.join(STATE_DIR, f"work-{os.getpid()}")
@@ -649,6 +714,7 @@ def main(argv=None) -> int:
             h.close()
         host = host_record(cores)
     finally:
+        reap_children()
         shutil.rmtree(work, ignore_errors=True)
     record = {"workload": args.workload, "seed": args.seed, "trace": args.trace,
               "host": host, "inputs_s": gen_s, **record,
