@@ -5,7 +5,7 @@ counters (metamonitor.go upstream) and the metrics stage's projection of
 telemetry trees into tagged points (metrics.go) that a TSDB then
 aggregates. The north_star pulls that downstream aggregation in-engine:
 windowed group-bys per (domain, lang, hour(warc_ts)), counter hierarchies
-as rollups, distinct cardinalities, and the salted two-phase variant for
+as rollups, and the salted two-phase variant for
 hot keys.
 
 All shapes here compile to partial+final HashAggregate (map-side combine
@@ -34,17 +34,6 @@ def hourly_counters(
     return df.groupBy(
         *dims, F.date_trunc("hour", F.col(ts)).alias("hour")
     ).agg(*aggs)
-
-
-def distinct_per_key(
-    df: DataFrame, key: str, col: str, approx: bool = False, rsd: float = 0.05
-) -> DataFrame:
-    """A3 — distinct cardinality per key. ``approx=True`` uses HLL
-    (approx_count_distinct): at 10^12 rows exact distinct means shuffling
-    every (key, value) pair, HLL ships fixed-size sketches. The oracle
-    checks the exact form; the approx form is a documented tolerance."""
-    f = F.approx_count_distinct(col, rsd) if approx else F.countDistinct(col)
-    return df.groupBy(key).agg(f.alias("n_distinct"))
 
 
 def rollup_counters(df: DataFrame, dims: list[str]) -> DataFrame:

@@ -51,14 +51,3 @@ def running_sum_per_key(
     )
     return df.withColumn("running_total", F.sum(value).over(w))
 
-
-def rolling_avg_per_key(
-    df: DataFrame, key: str, ts: str, value: str, tiebreak: str, n: int = 10
-) -> DataFrame:
-    """W3 variant — rolling mean over the last n rows per key."""
-    w = (
-        Window.partitionBy(key)
-        .orderBy(F.col(ts), F.col(tiebreak))
-        .rowsBetween(-(n - 1), Window.currentRow)
-    )
-    return df.withColumn("rolling_avg", F.avg(value).over(w))

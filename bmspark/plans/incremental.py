@@ -26,10 +26,10 @@ from __future__ import annotations
 import json
 import os
 import time
+from dataclasses import replace
 
 from pyspark.sql import SparkSession
 
-from bmspark.functions import parse as parse_fns
 from bmspark.plans.spec import PipelineSpec, PipelineResult, run_pipeline
 
 STATE_FILE = "_incremental_state.json"
@@ -86,19 +86,9 @@ def incremental_run(
     # from the skipped sinks.
     import hashlib
 
-    tick_spec = PipelineSpec(
-        source_path=spec.source_path,
+    tick_spec = replace(
+        spec,
         out_dir=f"{spec.out_dir}/ticks/{tick:06d}",
-        routes=spec.routes,
-        subscription=spec.subscription,
-        deadletter=spec.deadletter,
-        enrich_lang_dim=spec.enrich_lang_dim,
-        aggregate_name=spec.aggregate_name,
-        partition_cols=spec.partition_cols,
-        sink_columns=spec.sink_columns,
-        parallel_sinks=spec.parallel_sinks,
-        route_mode=spec.route_mode,
-        version=spec.version,
         input_manifest=hashlib.sha256("\n".join(new).encode()).hexdigest()[:16],
     )
     new_pages = spark.read.parquet(*new)

@@ -26,38 +26,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 MANIFEST = "_lineage.json"
-
-
-def partition_lineage(df: DataFrame) -> list[dict]:
-    """Per-spark-partition lineage rows: (partition id, rows, input files),
-    computed with an extra aggregation over the branch. NOTE: costs a full
-    scan and loses input_file_name() through a cache — prefer
-    ``output_lineage`` (parquet-footer walk, near-free) for written sinks;
-    this form remains for non-parquet sinks."""
-    rows = (
-        df.select(
-            F.spark_partition_id().alias("partition_id"),
-            F.input_file_name().alias("input_file"),
-        )
-        .groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.array_sort(F.collect_set("input_file")).alias("input_files"),
-        )
-        .collect()
-    )
-    return [
-        {
-            "partition_id": r["partition_id"],
-            "rows": r["rows"],
-            "input_files": [f for f in r["input_files"] if f],
-        }
-        for r in sorted(rows, key=lambda r: r["partition_id"])
-    ]
 
 
 def output_lineage(path: str) -> list[dict]:

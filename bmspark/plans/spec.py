@@ -7,10 +7,17 @@ keeps that shape: a PipelineSpec (plain dict / dataclass, loadable from
 JSON) declares source → parse → enrich → route → aggregate, and
 ``run_pipeline`` compiles it into ONE DataFrame DAG:
 
-    scan → parse_full (Arrow UDF) → broadcast-enrich → persist()
-        → N conditional sink writes (+ deadletter)        [router]
+    scan → parse_full (Arrow UDF) → broadcast-enrich → __sink label
+        → per-sink writes (multi) or one partitioned write (single_pass)
         → hourly counter aggregate write                   [metrics]
         → per-sink lineage manifests                       [metamonitor]
+
+The router is one function, ``label_sinks``: every row gets exactly one
+sink label, the first route whose predicate is true, else the
+deadletter (parse failures, no match, NULL predicates). Both route modes
+and the streaming runner write ``filter(__sink == name)`` projected to
+that sink's columns, and per-sink counts are conditional sums over the
+label, so sinks ∪ deadletter partition the input by construction.
 
 Resume: sinks whose ``_lineage.json`` matches the spec fingerprint are
 skipped (SURVEY.md T6); the run is idempotent and crash-resumable.
@@ -21,6 +28,7 @@ from __future__ import annotations
 import hashlib
 import json
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -40,8 +48,8 @@ class RouteRule:
     ``fmt`` is the sink's output encoding — the graft of the reference's
     per-output codec (each output stage declares its wire format and the
     router re-encodes per sink; codec dispatch in the output path,
-    upstream). parquet | json | csv. Only honored in multi-action route
-    mode (single_pass requires a shared format by construction)."""
+    upstream). parquet | json | csv. single_pass mode writes one parquet
+    table for every sink and rejects any other format."""
 
     name: str
     predicate: str
@@ -75,14 +83,10 @@ class PipelineSpec:
         "extracted_text", "text_sha", "n_links", "n_bytes",
         "n_tokens", "simhash",
     )
-    #: write all sinks concurrently from driver threads: tasks interleave
-    #: on the same executors, per-sink driver latency and commit I/O
-    #: overlap. The Go reference does exactly this with per-output
-    #: goroutines (pipeline.go upstream).
-    parallel_sinks: bool = True
-    #: "multi": one write action per sink (per-sink schema/layout — raw
-    #: html only in deadletter; the default, matches reference semantics
-    #: of independent output stages). "single_pass": route label becomes
+    #: "multi": one write action per sink, all sinks written concurrently
+    #: from driver threads like the reference's per-output goroutines
+    #: (per-sink schema/layout — raw html only in deadletter; the
+    #: default). "single_pass": route label becomes
     #: a dynamic partition column and the WHOLE fan-out is one write job
     #: — no persist, no per-sink passes; the cheapest correct fan-out
     #: when sinks share a format (sink tables live at
@@ -148,6 +152,45 @@ def build_enriched(
     return flat
 
 
+def label_sinks(
+    spec: PipelineSpec, enriched: DataFrame
+) -> tuple[DataFrame, dict[str, list[str]]]:
+    """The router: add the ``__sink`` label and say which columns each sink
+    gets. The label is the first route whose predicate is true; parse
+    failures and rows no route matches go to the deadletter, and a NULL
+    predicate counts as false (``lang = 'en'`` on a NULL lang must not
+    make a row vanish from every sink). Routes get ``sink_columns`` plus
+    the lang dims; the deadletter keeps the full row (raw html) for
+    reprocessing. Naming a missing column raises AnalysisException here,
+    before any job runs."""
+    label = F.when(~F.coalesce(F.col("parse_ok"), F.lit(False)), F.lit(spec.deadletter))
+    for rule in spec.routes:
+        label = label.when(F.coalesce(F.expr(rule.predicate), F.lit(False)), F.lit(rule.name))
+    row = enriched.columns
+    projected = [c for c in (*spec.sink_columns, "lang_name", "lang_family") if c in row]
+    columns = {rule.name: projected for rule in spec.routes}
+    columns[spec.deadletter] = row
+    return enriched.withColumn("__sink", label.otherwise(F.lit(spec.deadletter))), columns
+
+
+def _observe_labels(labeled: DataFrame, names, fp: str):
+    """Per-sink counts as one Observation of conditional sums over the
+    label, riding whatever action next runs over the returned frame.
+    Returns that frame and a function giving (input_count, counts)."""
+    obs = Observation(f"route_{fp}_{time.monotonic_ns()}")
+    observed = labeled.observe(
+        obs,
+        F.count(F.lit(1)).alias("__input"),
+        *[F.sum(F.when(F.col("__sink") == n, 1).otherwise(0)).alias(n) for n in names],
+    )
+
+    def read() -> tuple[int, dict[str, int]]:
+        got = obs.get
+        return got["__input"], {n: int(got[n] or 0) for n in names}
+
+    return observed, read
+
+
 def run_pipeline(
     spark: SparkSession,
     spec: PipelineSpec,
@@ -155,32 +198,27 @@ def run_pipeline(
     parse_udf=None,
 ) -> PipelineResult:
     """Compile + execute the spec. Returns exact per-sink counts (taken by
-    Observation inside each write — the metamonitor analog) and writes one
-    lineage manifest per sink."""
+    Observation over the sink label — the metamonitor analog) and writes
+    one lineage manifest per sink."""
     if spec.route_mode == "single_pass":
+        other = [r.name for r in spec.routes if r.fmt != "parquet"]
+        if other:
+            raise ValueError(
+                f"route_mode='single_pass' writes one parquet table; routes {other} "
+                "declare another format (use route_mode='multi')"
+            )
         return _run_single_pass(spark, spec, pages=pages, parse_udf=parse_udf)
     t0 = time.monotonic()
     fp = spec.fingerprint()
-    enriched = build_enriched(spark, spec, pages=pages, parse_udf=parse_udf).persist(
-        StorageLevel.MEMORY_AND_DISK
+    labeled, columns = label_sinks(
+        spec, build_enriched(spark, spec, pages=pages, parse_udf=parse_udf)
     )
+    labeled = labeled.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        counts: dict[str, int] = {}
-        paths: dict[str, str] = {}
-        skipped: list[str] = []
-
-        # fail fast: resolve every route predicate against the enriched
-        # schema BEFORE any action — a typo'd predicate must not cost a
-        # full parse pass (observed: OOM-then-AnalysisException at 400k
-        # rows when validation ran after materialization)
-        for rule in spec.routes:
-            enriched.filter(F.expr(rule.predicate))
-
-        input_obs = Observation("input")
-        enriched.observe(input_obs, F.count(F.lit(1)).alias("n")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        input_count = input_obs.get["n"]
+        observed, read_counts = _observe_labels(labeled, columns, fp)
+        # one cheap action materializes the cache and the counters
+        observed.write.format("noop").mode("overwrite").save()
+        input_count, counts = read_counts()
         # lineage must record what was ACTUALLY consumed: for an explicit
         # pages DataFrame (e.g. an incremental tick's new-file subset)
         # that is pages.inputFiles(), not a relisting of source_path
@@ -192,69 +230,39 @@ def run_pipeline(
         except Exception:
             source_files = []  # inline DataFrame with no file source
 
-        # NULL-safe routing: a predicate like `lang = 'en'` evaluates NULL
-        # for NULL lang; unwrapped, such rows match neither any sink
-        # (~dl_pred & NULL is non-true) nor the deadletter (dl_pred | ~NULL
-        # is non-true) and silently vanish — violating routed-row equality.
-        # coalesce(pred, false) makes NULL-predicate rows fall through to
-        # the deadletter, same as single_pass mode's .otherwise().
-        dl_pred = ~F.coalesce(F.col("parse_ok"), F.lit(False))
-        matched_any = F.lit(False)
-        sink_cols = [c for c in spec.sink_columns if c in enriched.columns]
-        extra_dims = [c for c in ("lang_name", "lang_family") if c in enriched.columns]
-        branches: list[tuple[str, DataFrame]] = []
-        for rule in spec.routes:
-            pred = F.coalesce(F.expr(rule.predicate), F.lit(False))
-            branches.append(
-                (rule.name, enriched.filter(~dl_pred & pred).select(*sink_cols, *extra_dims))
-            )
-            matched_any = matched_any | pred
-        # deadletter keeps the raw payload (html) for reprocessing
-        branches.append(
-            (spec.deadletter, enriched.filter(dl_pred | ~matched_any))
-        )
-
         fmts = {rule.name: rule.fmt for rule in spec.routes}
+        paths = {name: f"{spec.out_dir}/{name}" for name in columns}
 
-        def write_sink(name: str, branch: DataFrame) -> tuple[str, int, bool]:
-            path = f"{spec.out_dir}/{name}"
+        def write_sink(name: str) -> bool:
+            """Write one sink unless already committed; True when skipped."""
+            path = paths[name]
             if lineage.is_committed(path, fp):
-                return name, lineage.read_manifest(path)["row_count"], True
-            obs = Observation(f"sink_{name}_{fp}")
-            fmt = fmts.get(name, "parquet")
-            observed = branch.observe(obs, F.count(F.lit(1)).alias("n"))
-            if fmt == "json":  # binary columns are not JSON-encodable
-                observed = observed.drop("html")
+                return True
             (
-                observed.write.mode("overwrite")
+                labeled.filter(F.col("__sink") == name)
+                .select(*columns[name])
+                .write.mode("overwrite")
                 .partitionBy(*spec.partition_cols)
-                .format(fmt)
+                .format(fmts.get(name, "parquet"))
                 .save(path)
             )
-            n = obs.get["n"]
             lineage.commit_manifest(
                 path,
                 sink=name,
-                row_count=n,
+                row_count=counts[name],
                 plan_fingerprint=fp,
                 partitions=lineage.output_lineage(path),
                 metrics={"input_count": input_count, "source_files": source_files},
             )
-            return name, n, False
+            return False
 
-        for name, _ in branches:
-            paths[name] = f"{spec.out_dir}/{name}"
-        if spec.parallel_sinks and len(branches) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(branches)) as pool:
-                results = list(pool.map(lambda nb: write_sink(*nb), branches))
-        else:
-            results = [write_sink(n, b) for n, b in branches]
-        for name, n, was_skipped in results:
-            counts[name] = n
-            if was_skipped:
-                skipped.append(name)
+        # all sinks write concurrently from driver threads: tasks interleave
+        # on the same executors, per-sink driver latency and commit I/O
+        # overlap (the reference's per-output goroutines, pipeline.go)
+        with ThreadPoolExecutor(max_workers=len(columns)) as pool:
+            skipped = [n for n, s in zip(columns, pool.map(write_sink, columns)) if s]
+        for name in skipped:  # report what the sink holds
+            counts[name] = lineage.read_manifest(paths[name])["row_count"]
 
         # metrics stage: hourly counters (metrics.go analog)
         agg_path = f"{spec.out_dir}/{spec.aggregate_name}"
@@ -264,7 +272,7 @@ def run_pipeline(
             counts[spec.aggregate_name] = lineage.read_manifest(agg_path)["row_count"]
         else:
             agg = agg_ops.hourly_counters(
-                enriched.filter(F.col("parse_ok")),
+                labeled.filter(F.col("parse_ok")),
                 measures={
                     "total_links": F.sum("n_links"),
                     "total_bytes": F.sum("n_bytes"),
@@ -290,7 +298,7 @@ def run_pipeline(
             paths=paths,
         )
     finally:
-        enriched.unpersist()
+        labeled.unpersist()
 
 
 def _run_single_pass(
@@ -303,30 +311,17 @@ def _run_single_pass(
     with the route label as a dynamic partition column, counters riding
     the same pass via Observation. No cache, no per-sink jobs — at 10^12
     docs this halves cluster time vs the multi-action router whenever all
-    sinks share a format. Raw html is retained only on deadletter rows
-    (nulled elsewhere; nulls cost nothing in parquet)."""
+    sinks share a format. The one table carries the routes' columns; raw
+    html is retained only on deadletter rows (nulled elsewhere; nulls
+    cost nothing in parquet)."""
     t0 = time.monotonic()
     fp = spec.fingerprint()
-    enriched = build_enriched(spark, spec, pages=pages, parse_udf=parse_udf)
-
-    # single_pass is NULL-safe by construction: a NULL predicate is
-    # non-true in when(), so the row falls through to .otherwise(deadletter)
-    dl_pred = ~F.coalesce(F.col("parse_ok"), F.lit(False))
-    label = None
-    for rule in spec.routes:
-        pred = F.expr(rule.predicate)
-        branch_label = F.when(~dl_pred & pred, F.lit(rule.name))
-        label = branch_label if label is None else label.when(~dl_pred & pred, F.lit(rule.name))
-    label = (label if label is not None else F.when(F.lit(False), F.lit(""))).otherwise(
-        F.lit(spec.deadletter)
+    labeled, columns = label_sinks(
+        spec, build_enriched(spark, spec, pages=pages, parse_udf=parse_udf)
     )
-
-    sink_cols = [c for c in spec.sink_columns if c in enriched.columns]
-    extra = [c for c in ("lang_name", "lang_family") if c in enriched.columns]
-    routed = enriched.withColumn("__sink", label).select(
+    routed = labeled.select(
         "__sink",
-        *sink_cols,
-        *extra,
+        *next((columns[r.name] for r in spec.routes), []),
         F.when(F.col("__sink") == spec.deadletter, F.col("html")).alias("html"),
     )
 
@@ -342,23 +337,13 @@ def _run_single_pass(
             paths={"routed": routed_path},
         )
 
-    obs = Observation(f"route_{fp}_{time.monotonic_ns()}")
-    aggs = [F.count(F.lit(1)).alias("__input")] + [
-        F.sum(F.when(F.col("__sink") == name, 1).otherwise(0)).alias(name)
-        for name in [r.name for r in spec.routes] + [spec.deadletter]
-    ]
+    observed, read_counts = _observe_labels(routed, columns, fp)
     (
-        routed.observe(obs, *aggs)
-        .write.mode("overwrite")
+        observed.write.mode("overwrite")
         .partitionBy("__sink", *spec.partition_cols)
         .parquet(routed_path)
     )
-    got = obs.get
-    counts = {
-        name: int(got[name] or 0)
-        for name in [r.name for r in spec.routes] + [spec.deadletter]
-    }
-    input_count = got["__input"]
+    input_count, counts = read_counts()
     lineage.commit_manifest(
         routed_path,
         sink="routed",
@@ -375,8 +360,7 @@ def _run_single_pass(
         wall_secs=wall,
         docs_per_sec=input_count / wall if wall else 0.0,
         paths={"routed": routed_path,
-               **{r.name: f"{routed_path}/__sink={r.name}" for r in spec.routes},
-               spec.deadletter: f"{routed_path}/__sink={spec.deadletter}"},
+               **{name: f"{routed_path}/__sink={name}" for name in columns}},
     )
 
 

@@ -24,10 +24,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register the testdata tables as temp views for spark.sql paths."""
     for t in TABLES:
@@ -56,17 +52,3 @@ def replay(
         out = out.limit(count)
     return out
 
-
-def stream_pages(
-    spark: SparkSession,
-    path: str,
-    schema,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """S1/S6 streaming form: file-source readStream over a pages directory.
-    maxFilesPerTrigger=1 is the replay pacing analog (delayusec)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(path)
-    )

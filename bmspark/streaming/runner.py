@@ -9,8 +9,10 @@ Mapping:
   reference's queue-drop counter analog)
 - bounded queues / backpressure→ watermarks: bounded state instead of
   bounded queues; lateness is declared, not emergent
-- multi-output fan-out         → foreachBatch: persist the micro-batch,
-  N conditional writes — same router as batch (single code path)
+- multi-output fan-out         → foreachBatch: the batch pipeline's
+  ``build_enriched`` + ``label_sinks`` on the micro-batch, then one append
+  per sink — the same first-match label, columns and deadletter as a
+  batch run (no lineage manifests, no hourly aggregate)
 - replay-safety                → dropDuplicatesWithinWatermark(url) +
   checkpointLocation for exactly-once progress
 """
@@ -109,14 +111,20 @@ def run_streaming_pipeline(
     trigger_interval: str | None = None,
 ):
     """T7: the full streaming pipeline — parse + route inside foreachBatch
-    (the only multi-sink mechanism in Structured Streaming). Returns the
-    started StreamingQuery; caller awaits/stops it.
+    (the only multi-sink mechanism in Structured Streaming). ``routes`` is
+    a list of (sink name, SQL predicate). Returns the started
+    StreamingQuery; caller awaits/stops it.
 
     foreachBatch receives a batch DataFrame + monotonic batch_id; the body
-    reuses the BATCH router verbatim — one code path for both modes, which
-    is the whole point of the Structured Streaming design."""
-    from bmspark.functions import parse as parse_fns
+    runs the batch pipeline's enrich and ``label_sinks`` on it, so every
+    sink gets the rows and columns a multi-mode batch run gives it."""
+    from bmspark.plans.spec import PipelineSpec, RouteRule, build_enriched, label_sinks
 
+    spec = PipelineSpec(
+        source_path=source_dir,
+        out_dir=out_dir,
+        routes=[RouteRule(name, pred) for name, pred in routes],
+    )
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -126,33 +134,19 @@ def run_streaming_pipeline(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        parsed = parse_fns.with_parsed(batch_df).select(
-            "*",
-            F.col("parsed.parse_ok").alias("parse_ok"),
-            F.col("parsed.n_links").alias("n_links"),
-        ).drop("parsed")
-        parsed = parsed.withColumn("domain", parse_fns.domain_of("url")).persist()
+        enriched = build_enriched(batch_df.sparkSession, spec, pages=batch_df)
+        labeled, columns = label_sinks(spec, enriched)
+        labeled = labeled.persist()
         try:
-            # coalesce(pred, false): NULL-evaluating predicates route to
-            # the deadletter instead of vanishing (see plans/spec.py)
-            matched = F.lit(False)
-            for name, pred_sql in routes:
-                pred = F.coalesce(F.expr(pred_sql), F.lit(False))
+            for name, cols in columns.items():
                 (
-                    parsed.filter(F.coalesce(F.col("parse_ok"), F.lit(False)) & pred)
+                    labeled.filter(F.col("__sink") == name)
+                    .select(*cols)
                     .write.mode("append")
                     .parquet(f"{out_dir}/{name}")
                 )
-                matched = matched | pred
-            (
-                parsed.filter(
-                    ~F.coalesce(F.col("parse_ok"), F.lit(False)) | ~matched
-                )
-                .write.mode("append")
-                .parquet(f"{out_dir}/deadletter")
-            )
         finally:
-            parsed.unpersist()
+            labeled.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

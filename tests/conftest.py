@@ -1,4 +1,5 @@
 import os
+from functools import reduce
 
 import pytest
 
@@ -31,3 +32,33 @@ def duck():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
     return con
+
+
+def check_routed_equality(spark, input_df, sinks, key_cols=("url",)) -> dict[str, bool]:
+    """Routing algebra (SURVEY.md O3, §5.2.4): ``sinks`` (sink name →
+    written directory or DataFrame, deadletter included) partition the
+    input. union(sinks) ≡ input via exceptAll both directions, so a row
+    in two sinks or in none fails, and the sinks are pairwise disjoint.
+    Returns named boolean checks."""
+    def read(sink):
+        return spark.read.parquet(sink) if isinstance(sink, str) else sink
+
+    names = sorted(sinks)
+    parts = {n: read(sinks[n]).select(*key_cols) for n in names}
+    union = reduce(lambda a, b: a.unionByName(b), parts.values())
+    inp = input_df.select(*key_cols)
+    checks = {
+        "no_lost_rows": inp.exceptAll(union).isEmpty(),
+        "no_invented_rows": union.exceptAll(inp).isEmpty(),
+    }
+    for i, a in enumerate(names):
+        for b in names[i + 1:]:
+            checks[f"disjoint_{a}_{b}"] = parts[a].intersect(parts[b]).isEmpty()
+    return checks
+
+
+def sink_paths(result) -> dict[str, str]:
+    """A PipelineResult's routed sinks (routes + deadletter) in either
+    route mode: every path except the aggregate and the single_pass
+    table root."""
+    return {k: v for k, v in result.paths.items() if k not in ("agg_hourly", "routed")}

@@ -3,6 +3,7 @@ union of ticks ≡ full recompute; idle ticks are no-ops."""
 
 from __future__ import annotations
 
+from conftest import check_routed_equality
 from pyspark.sql import functions as F
 
 from bmspark import fixtures
@@ -120,10 +121,9 @@ def test_tick_retry_after_crash_sees_late_files(spark, tmp_path):
     assert r2.input_count == 300  # 200 (B) + 100 (C)
     assert not r2.skipped, f"stale manifests were resumed: {r2.skipped}"
 
-    total = None
-    for sink in ["sink_en", "sink_romance", "sink_other", "deadletter"]:
-        part = incremental.read_sink_union(spark, s, sink).select("url")
-        total = part if total is None else total.unionByName(part)
-    all_pages = spark.read.parquet(src).select("url")
-    assert total.exceptAll(all_pages).isEmpty()
-    assert all_pages.exceptAll(total).isEmpty()
+    sinks = {
+        sink: incremental.read_sink_union(spark, s, sink)
+        for sink in ["sink_en", "sink_romance", "sink_other", "deadletter"]
+    }
+    checks = check_routed_equality(spark, spark.read.parquet(src), sinks)
+    assert all(checks.values()), checks

@@ -1,14 +1,17 @@
 """Router contracts (SURVEY.md §5.2.4-5): routed-row equality, pairwise
-disjointness, exact per-sink counts, resume-from-manifest, countonly."""
+disjointness, exact per-sink counts, resume-from-manifest, first-match
+labels in every router mode, fail-fast route errors."""
 
 from __future__ import annotations
 
 import pytest
+from conftest import check_routed_equality, sink_paths
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from bmspark import fixtures
-from bmspark.operators import route
 from bmspark.plans import lineage, spec
+from bmspark.streaming import runner
 
 
 @pytest.fixture(scope="module")
@@ -34,22 +37,8 @@ def test_routed_row_equality(spark, result):
     """union(sinks ∪ deadletter) ≡ input via exceptAll both ways; sinks
     pairwise disjoint (north_rule routed-row equality)."""
     out, s, res, pages = result
-    sink_paths = {
-        k: v for k, v in res.paths.items() if k.startswith("sink_") or k == "deadletter"
-    }
-    union = None
-    for p in sink_paths.values():
-        part = spark.read.parquet(p).select("url")
-        union = part if union is None else union.unionByName(part)
-    inp = pages.select("url")
-    assert inp.exceptAll(union).isEmpty()
-    assert union.exceptAll(inp).isEmpty()
-    names = sorted(sink_paths)
-    for i in range(len(names)):
-        for j in range(i + 1, len(names)):
-            a = spark.read.parquet(sink_paths[names[i]]).select("url")
-            b = spark.read.parquet(sink_paths[names[j]]).select("url")
-            assert a.intersect(b).isEmpty(), f"{names[i]} ∩ {names[j]} non-empty"
+    checks = check_routed_equality(spark, pages, sink_paths(res))
+    assert all(checks.values()), checks
 
 
 def test_golden_sink_counts(result):
@@ -197,33 +186,13 @@ def test_subscription_filter_prunes_scan(spark, tmp_path):
     assert res.input_count == want
 
 
-def test_countonly_and_broadcast_modes(spark, tmp_path):
-    """tap countonly=true (count, no rows) + broadcast tap (ALL rows —
-    the reference's native every-output-sees-everything semantics)."""
-    pages = fixtures.synth_pages(spark, 500, partitions=4)
-    sinks = [
-        route.SinkSpec("all_tap", mode="broadcast", path=str(tmp_path / "tap")),
-        route.SinkSpec("just_count", predicate=F.lit(True), mode="countonly"),
-        route.SinkSpec("en", predicate=F.col("lang") == "en", path=str(tmp_path / "en")),
-    ]
-    res = route.route(
-        pages, sinks,
-        deadletter_path=str(tmp_path / "dl"),
-        extra_deadletter_pred=F.col("text").isNull(),
-    )
-    n_malformed = 500 // 20
-    assert res.counts["all_tap"] == 500  # broadcast sees everything
-    assert res.counts["just_count"] == 500 - n_malformed  # routable rows only
-    assert res.counts["en"] == spark.read.parquet(str(tmp_path / "en")).count()
-    assert res.counts["deadletter"] == spark.read.parquet(str(tmp_path / "dl")).count()
-    # conditional sinks + deadletter partition the input
-    assert res.counts["en"] + res.counts["deadletter"] == 500
-
-
 def test_null_predicate_rows_fall_to_deadletter(spark, tmp_path):
     """Regression (round-2 advice): a predicate like `lang = 'en'`
     evaluates NULL for NULL lang; such rows must land in the deadletter —
-    not vanish from every sink — in BOTH router modes."""
+    not vanish from every sink — in EVERY router mode (multi, single_pass,
+    streaming). Same for overlapping predicates: a row matching two
+    routes goes to the first one only, so all modes give the same
+    per-sink counts and every row lands in exactly one sink."""
     pages = fixtures.synth_pages(spark, 400, partitions=4).withColumn(
         "lang",
         F.when(F.crc32("url") % 7 == 0, F.lit(None).cast("string")).otherwise(
@@ -232,68 +201,68 @@ def test_null_predicate_rows_fall_to_deadletter(spark, tmp_path):
     )
     n_null = pages.filter(F.col("lang").isNull()).count()
     assert n_null > 0  # the scenario is actually exercised
+    src = str(tmp_path / "src")
+    pages.write.parquet(src)  # the streaming runner's file source
 
-    for mode in ("multi", "single_pass"):
-        out = str(tmp_path / mode)
+    cases = {
+        "default": spec.DEFAULT_ROUTES,
+        "overlap": [spec.RouteRule("a", "lang = 'en'"),
+                    spec.RouteRule("b", "lang IN ('en','fr')")],
+    }
+    for case, routes in cases.items():
+        counts = {}
+        for mode in ("multi", "single_pass", "streaming"):
+            out = str(tmp_path / case / mode)
+            if mode == "streaming":
+                runner.run_streaming_pipeline(
+                    spark, src, fixtures.PAGES_SCHEMA, out, f"{out}_ckpt",
+                    [(r.name, r.predicate) for r in routes],
+                ).awaitTermination(120)
+                paths = {n: f"{out}/{n}" for n in [r.name for r in routes] + ["deadletter"]}
+            else:
+                s = spec.PipelineSpec(
+                    source_path="(inline)",
+                    out_dir=out,
+                    routes=routes,
+                    route_mode=mode,
+                )
+                res = spec.run_pipeline(spark, s, pages=pages)
+                paths = sink_paths(res)
+                routed = sum(res.counts[k] for k in paths)
+                assert routed == res.input_count == 400, mode
+            checks = check_routed_equality(spark, pages, paths)
+            assert all(checks.values()), (case, mode, checks)
+            counts[mode] = {n: spark.read.parquet(p).count() for n, p in paths.items()}
+            if mode != "streaming":
+                assert counts[mode] == {k: res.counts[k] for k in paths}, (case, mode)
+        assert counts["multi"] == counts["single_pass"] == counts["streaming"], case
+    # first match: no 'en' row reaches the second overlapping route
+    assert spark.read.parquet(f"{tmp_path}/overlap/multi/b").filter("lang = 'en'").isEmpty()
+
+
+def test_route_errors_fail_before_any_job(spark, tmp_path):
+    """A route predicate naming a missing column raises AnalysisException
+    in both modes, and single_pass with a non-parquet route raises
+    ValueError (it writes one parquet table), before any Spark job runs:
+    a typo'd route must not cost a parse pass or leave output behind."""
+    pages = fixtures.synth_pages(spark, 100, partitions=2)
+    sc = spark.sparkContext
+    cases = [
+        ("multi", spec.RouteRule("oops", "NOT_A_COLUMN = 1"), AnalysisException),
+        ("single_pass", spec.RouteRule("oops", "NOT_A_COLUMN = 1"), AnalysisException),
+        ("single_pass", spec.RouteRule("en", "lang = 'en'", fmt="json"), ValueError),
+    ]
+    for i, (mode, rule, err) in enumerate(cases):
+        out = tmp_path / f"out{i}"
         s = spec.PipelineSpec(
-            source_path="(inline)",
-            out_dir=out,
-            routes=spec.DEFAULT_ROUTES,
-            route_mode=mode,
+            source_path="(inline)", out_dir=str(out), routes=[rule], route_mode=mode
         )
-        res = spec.run_pipeline(spark, s, pages=pages)
-        routed = sum(
-            v for k, v in res.counts.items()
-            if k.startswith("sink_") or k == "deadletter"
-        )
-        assert routed == res.input_count == 400, mode
-        # equality: union of sinks == input, exactly
-        paths = {
-            k: v for k, v in res.paths.items()
-            if k.startswith("sink_") or k == "deadletter"
-        }
-        union = None
-        for p in paths.values():
-            part = spark.read.parquet(p).select("url")
-            union = part if union is None else union.unionByName(part)
-        assert pages.select("url").exceptAll(union).isEmpty(), mode
-        assert union.exceptAll(pages.select("url")).isEmpty(), mode
-
-
-def test_null_predicate_operator_route(spark, tmp_path):
-    """Same NULL-predicate contract for the standalone route() operator."""
-    pages = fixtures.synth_pages(spark, 300, partitions=3).withColumn(
-        "lang",
-        F.when(F.crc32("url") % 5 == 0, F.lit(None).cast("string")).otherwise(
-            F.col("lang")
-        ),
-    )
-    sinks = [
-        route.SinkSpec("en", predicate=F.col("lang") == "en", path=str(tmp_path / "en")),
-        route.SinkSpec(
-            "rest", predicate=F.col("lang") != "en", path=str(tmp_path / "rest")
-        ),
-    ]
-    res = route.route(pages, sinks, deadletter_path=str(tmp_path / "dl"))
-    assert res.counts["en"] + res.counts["rest"] + res.counts["deadletter"] == 300
-    checks = route.check_routed_equality(spark, pages, res, ["url"])
-    assert all(checks.values()), checks
-
-
-def test_check_routed_equality_excludes_broadcast(spark, tmp_path):
-    """Regression (round-2 advice): broadcast sinks receive ALL rows by
-    design; check_routed_equality must exclude them or every check
-    false-fails."""
-    pages = fixtures.synth_pages(spark, 200, partitions=2)
-    sinks = [
-        route.SinkSpec("tap", mode="broadcast", path=str(tmp_path / "tap")),
-        route.SinkSpec("en", predicate=F.col("lang") == "en", path=str(tmp_path / "en")),
-        route.SinkSpec(
-            "not_en", predicate=F.col("lang") != "en", path=str(tmp_path / "ne")
-        ),
-    ]
-    res = route.route(pages, sinks, deadletter_path=str(tmp_path / "dl"))
-    assert res.modes["tap"] == "broadcast"
-    checks = route.check_routed_equality(spark, pages, res, ["url"])
-    assert all(checks.values()), checks
-    assert not any("tap" in k for k in checks)  # broadcast sink not compared
+        group = f"route_fail_fast_{i}"
+        sc.setJobGroup(group, "route fail-fast probe")
+        try:
+            with pytest.raises(err):
+                spec.run_pipeline(spark, s, pages=pages)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], (mode, rule)
+        assert not out.exists(), (mode, rule)

@@ -1,14 +1,17 @@
-"""Streaming DAG tests (SURVEY.md §2.8): the streaming router must
-produce byte-identical sink contents to the batch router on the same
-input (one code path, two execution modes), and windowed/stateful shapes
-must run with watermarks + checkpoints."""
+"""Streaming DAG tests (SURVEY.md §2.8): on the same input, every
+streaming sink must hold the same rows (compared by url) and the same
+column names as the multi-mode batch sink of the same name (one router,
+two execution modes), and windowed/stateful shapes must run with
+watermarks + checkpoints."""
 
 from __future__ import annotations
 
 import pytest
+from conftest import check_routed_equality
 from pyspark.sql import functions as F
 
 from bmspark import fixtures
+from bmspark.plans import spec
 from bmspark.streaming import runner
 
 ROUTES = [
@@ -49,12 +52,22 @@ def test_stream_router_equals_batch_router(spark, staged_pages, tmp_path_factory
     want_dl = parsed.filter(~F.col("parse_ok")).count()
     assert spark.read.parquet(f"{out}/deadletter").count() == want_dl
     # routed-row equality across modes
-    union = None
-    for name in [r[0] for r in ROUTES] + ["deadletter"]:
-        part = spark.read.parquet(f"{out}/{name}").select("url")
-        union = part if union is None else union.unionByName(part)
-    assert union.exceptAll(pages.select("url")).isEmpty()
-    assert pages.select("url").exceptAll(union).isEmpty()
+    names = [r[0] for r in ROUTES] + ["deadletter"]
+    checks = check_routed_equality(spark, pages, {n: f"{out}/{n}" for n in names})
+    assert all(checks.values()), checks
+    # each streaming sink == the multi-mode batch sink of the same name:
+    # same column names (decoded fields, html only in the deadletter)
+    # and the same url set
+    batch = spec.run_pipeline(spark, spec.PipelineSpec(
+        source_path=src, out_dir=str(tmp_path_factory.mktemp("batch_out")),
+        routes=[spec.RouteRule(*r) for r in ROUTES],
+    ))
+    for name in names:
+        got = spark.read.parquet(f"{out}/{name}")
+        want = spark.read.parquet(batch.paths[name])
+        assert sorted(got.columns) == sorted(want.columns), name
+        assert got.select("url").exceptAll(want.select("url")).isEmpty(), name
+        assert want.select("url").exceptAll(got.select("url")).isEmpty(), name
 
 
 def test_stream_checkpoint_resume_no_reprocess(spark, staged_pages, tmp_path_factory):
@@ -254,9 +267,6 @@ def test_daemon_mode_processing_time_trigger(spark, staged_pages, tmp_path_facto
     finally:
         q.stop()
         q.awaitTermination(30)
-    union = None
-    for name in [r[0] for r in ROUTES] + ["deadletter"]:
-        part = spark.read.parquet(f"{out}/{name}").select("url")
-        union = part if union is None else union.unionByName(part)
-    assert union.count() == 800
-    assert pages.select("url").exceptAll(union).isEmpty()
+    names = [r[0] for r in ROUTES] + ["deadletter"]
+    checks = check_routed_equality(spark, pages, {n: f"{out}/{n}" for n in names})
+    assert all(checks.values()), checks
