@@ -222,15 +222,7 @@ def synth_pages(
 # Dimension tables (enrich stage inputs — SURVEY.md J1-J3)
 # ---------------------------------------------------------------------------
 
-_LANG_DIM = [
-    ("en", "English", "germanic"),
-    ("fr", "French", "romance"),
-    ("es", "Spanish", "romance"),
-    ("zh", "Chinese", "sinitic"),
-    ("de", "German", "germanic"),
-]
-
-#: Inline VALUES form for the DuckDB oracle — keep in sync with _LANG_DIM.
+#: Inline VALUES form, shared by dim_lang and the DuckDB oracle.
 DIM_LANG_SQL = (
     "(VALUES ('en','English','germanic'), ('fr','French','romance'), "
     "('es','Spanish','romance'), ('zh','Chinese','sinitic'), "
@@ -239,7 +231,8 @@ DIM_LANG_SQL = (
 
 
 def dim_lang(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(_LANG_DIM, "lang string, lang_name string, lang_family string")
+    """A local relation: its broadcast sends no Python rows through a worker."""
+    return spark.sql(f"SELECT * FROM {DIM_LANG_SQL}")
 
 
 def dim_domain(spark: SparkSession) -> DataFrame:
@@ -260,18 +253,7 @@ def dim_domain(spark: SparkSession) -> DataFrame:
     )
 
 
-def dim_source(spark: SparkSession) -> DataFrame:
-    """Dimension keyed on documents.source-derived domains (oracle-checkable
-    enrich): src0..src9 → srcN.example.com; src7 deliberately absent."""
-    rows = [
-        (f"src{i}.example.com", ["news", "blog", "shop", "docs"][i % 4], i % 3 + 1)
-        for i in range(10)
-        if i != 7
-    ]
-    return spark.createDataFrame(rows, "domain string, category string, tier int")
-
-
-#: Inline VALUES form of dim_source for the DuckDB oracle.
+#: Inline VALUES form, shared by dim_source and the DuckDB oracle.
 DIM_SOURCE_SQL = (
     "(VALUES "
     + ", ".join(
@@ -281,3 +263,9 @@ DIM_SOURCE_SQL = (
     )
     + ") AS dim_source(domain, category, tier)"
 )
+
+
+def dim_source(spark: SparkSession) -> DataFrame:
+    """Dimension keyed on documents.source-derived domains (oracle-checkable
+    enrich): src0..src9 → srcN.example.com; src7 deliberately absent."""
+    return spark.sql(f"SELECT * FROM {DIM_SOURCE_SQL}")

@@ -55,13 +55,11 @@ def _c(col: str | Column) -> Column:
 
 
 def _word_counts(df: DataFrame, text_col: str, lowercase: bool) -> DataFrame:
-    from bmspark.session import widen_small_scan
-
     txt = F.trim(F.coalesce(_c(text_col), F.lit("")))
     if lowercase:
         txt = F.lower(txt)
     return (
-        widen_small_scan(df).select(F.explode(F.split(txt, r"\s+")).alias("word"))
+        df.select(F.explode(F.split(txt, r"\s+")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))

@@ -162,7 +162,7 @@ def repetition_metrics(
     distinct_token_ratio), fractions rounded to 4 for cross-engine float
     stability.
     """
-    toks = widen_small_scan(df).select(
+    toks = df.select(
         _c(id_col).alias("doc_id"),
         F.split(F.trim(_c(text_col)), r"\s+").alias("toks"),
     ).filter(F.size("toks") >= 2)
@@ -259,7 +259,7 @@ def repetition_ngrams(
     (|top_ns|+|dup_ns| columns, known statically — no pivot() scan).
     Docs too short for an n simply contribute no grams and read 0."""
     all_ns = sorted(set(top_ns) | set(dup_ns))
-    toks = widen_small_scan(df).select(
+    toks = df.select(
         _c(id_col).alias("doc_id"),
         F.split(F.trim(F.coalesce(_c(text_col), F.lit(""))), r"\s+").alias("toks"),
     )
@@ -411,7 +411,6 @@ def dsir_weight(
     from bmspark.functions import sampling
 
     def feats(frame: DataFrame) -> DataFrame:
-        frame = widen_small_scan(frame)
         toks = frame.select(
             _c(id_col).alias("doc_id"),
             F.split(F.trim(F.coalesce(_c(text_col), F.lit(""))), r"\s+").alias("toks"),
@@ -684,7 +683,7 @@ def gopher_quality(
     doc — every signal is a sum/count over tokens, so partials collapse
     to one row per doc per map task before the shuffle. No Python, no
     windows, no joins."""
-    tok = widen_small_scan(df).select(
+    tok = df.select(
         _c(id_col).alias("doc_id"),
         F.explode(F.split(F.trim(_c(text_col)), r"\s+")).alias("w"),
     ).filter(F.col("w") != "")
@@ -767,7 +766,7 @@ def freq_score(
     (both map-side-combinable aggs over one explode) joined on term —
     the same term-keyed shuffle-join shape as tfidf, with the same
     stopword-skew story (AQE skew-split; prune upstream if needed)."""
-    toks = widen_small_scan(df).select(
+    toks = df.select(
         _c(id_col).alias("doc_id"),
         F.explode(F.split(F.trim(_c(text_col)), r"\s+")).alias("term"),
     ).filter(F.col("term") != "")
@@ -839,7 +838,7 @@ def lm_score(
     driver. Unseen bigrams/unigrams coalesce to count 0 (pure
     smoothing mass), never dropped."""
     def toks(frame: DataFrame) -> DataFrame:
-        return widen_small_scan(frame).select(
+        return frame.select(
             _c(id_col).alias("doc_id"),
             F.split(F.trim(F.coalesce(_c(text_col), F.lit(""))), r"\s+")
             .alias("toks"),
@@ -1062,7 +1061,7 @@ def dedup_spans(
     twin): without it Spark still emits the doc (NULL n_spans) while
     DuckDB's generate_series(1, NULL) drops it — a latent oracle
     row-count mismatch on any corpus with NULL text (ADVICE r04)."""
-    toks = widen_small_scan(df).select(
+    toks = df.select(
         _c(id_col).alias("doc_id"),
         F.split(F.trim(F.coalesce(_c(text_col), F.lit(""))), r"\s+").alias("toks"),
     )
@@ -1249,7 +1248,7 @@ def dedup_paragraphs(
     to one row per map task before the exchange); ONE doc-keyed shuffle
     rebuilds. No window over the corpus, no Python, exact DuckDB twin
     (dedup_paragraphs_sql)."""
-    paras = widen_small_scan(df).select(
+    paras = df.select(
         _c(id_col).alias("doc_id"),
         F.split(F.coalesce(_c(text_col), F.lit("")), sep).alias("paras"),
     )
@@ -1350,7 +1349,7 @@ def c4_clean(
     Scale: pure narrow pass — split / higher-order filter / array_join
     inside whole-stage codegen; no shuffle, no Python, no corpus-wide
     state. Exact DuckDB twin (c4_clean_sql)."""
-    lines = widen_small_scan(df).select(
+    lines = df.select(
         _c(id_col).alias("doc_id"),
         _c(text_col).alias("__text"),
         F.split(F.coalesce(_c(text_col), F.lit("")), "\n").alias("lines"),
@@ -1620,7 +1619,7 @@ def vocab(
     tail (most of those 10^8 distinct terms), max_df drops stopwords —
     which are also exactly the skewed join keys downstream consumers
     (tfidf) would otherwise shuffle 10^11 occurrence rows for."""
-    toks = widen_small_scan(df).select(
+    toks = df.select(
         _c(id_col).alias("doc_id"),
         F.explode(F.split(F.trim(_c(text_col)), r"\s+")).alias("term"),
     ).filter(F.col("term") != "")
@@ -1690,7 +1689,7 @@ def tfidf(
 
     Scores rounded to 4 for cross-engine float stability. Output:
     (doc_id, term, tf, doc_freq, tfidf)."""
-    toks = widen_small_scan(df).select(
+    toks = df.select(
         _c(id_col).alias("doc_id"),
         F.explode(F.split(F.trim(_c(text_col)), r"\s+")).alias("term"),
     ).filter(F.col("term") != "")
@@ -1782,7 +1781,7 @@ def pack_sequences(
     (text.token_count), so the DuckDB recursive-CTE oracle
     (pack_sequences_sql) reproduces the packing bin-for-bin.
     """
-    base = widen_small_scan(df).select(
+    base = df.select(
         _c(id_col).alias("doc_id"),
         (_c(id_col) % n_shards).cast("int").alias("shard"),
         token_count(text_col).cast("long").alias("n_tokens"),
@@ -1923,7 +1922,7 @@ def contaminated_docs(
     AQE picks the strategy (the train subtree then pays a shuffle, the
     unavoidable cost of a genuinely big right side)."""
     def grams(df: DataFrame) -> DataFrame:
-        toks = widen_small_scan(df).select(
+        toks = df.select(
             _c(id_col).alias("doc_id"),
             F.split(F.trim(_c(text_col)), r"\s+").alias("toks"),
         ).filter(F.size("toks") >= n)
@@ -2114,7 +2113,7 @@ def corpus_stats(
 
     n_tok = _text.token_count(_c(text_col)).cast("bigint")
     pfn = "percentile_approx" if approx else "percentile"
-    base = widen_small_scan(df).select(
+    base = df.select(
         *[_c(c).alias(c) for c in group_cols],
         n_tok.alias("n_tokens"),
         F.length(_c(text_col)).cast("bigint").alias("n_chars_m"),

@@ -45,7 +45,6 @@ from bmspark.session import widen_small_scan
 def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Duplicate groups by normalized-content fingerprint: (fingerprint,
     keep_id = min id, dup_count). Shuffles only (128-bit hash, id)."""
-    df = widen_small_scan(df)
     return (
         df.select(fingerprint(text_col).alias("fp"), F.col(id_col))
         .groupBy("fp")
@@ -63,7 +62,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     fixed in plans/incremental_dedup round 4)."""
     from pyspark.sql import Window
 
-    df = widen_small_scan(df)
     w = Window.partitionBy(fingerprint(text_col)).orderBy(F.col(id_col).asc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -88,7 +86,6 @@ def exact_dedup_best(
     SEMI-join twice; rn = 1 cannot)."""
     from pyspark.sql import Window
 
-    df = widen_small_scan(df)
     w = Window.partitionBy(fingerprint(text_col)).orderBy(
         F.col(quality_col).desc(), F.col(id_col).asc()
     )
@@ -252,7 +249,6 @@ def minhash_lsh_pairs(
     with exact signature-estimated Jaccard ≥ threshold.
     """
     rows_per_band = _N_HASHES // bands
-    df = widen_small_scan(df)
     sig = df.select(F.col(id_col), minhash_sig(F.col(text_col)).alias("sig"))
     # ids-only banded frame: the 64-long signature does NOT ride the
     # band shuffle. The round-5 form shipped sig on BOTH self-join sides
@@ -511,7 +507,6 @@ def winnow_neardup_pairs(
     """
     from bmspark.functions.text import winnow_fingerprints
 
-    df = widen_small_scan(df)
     groups = (
         df.select(
             F.col(id_col), F.explode(winnow_fingerprints(text_col)).alias("p")

@@ -303,7 +303,7 @@ def embedding_neardup_pairs(
     Scores are numpy-double matmul cosines rounded to 4 (rows-only
     key; pair SET equality with the exact JVM form is what the recall
     tests pin, not the 16th decimal of the score)."""
-    base = widen_small_scan(emb).select(
+    base = emb.select(
         F.col(id_col).alias("__vid"),
         _dvec(vec_col).alias("v"),
         F.posexplode(
@@ -427,7 +427,7 @@ def batch_topk(
     """
     import pandas as pd  # noqa: F401 (schema hint for applyInPandas)
 
-    base = widen_small_scan(emb).select(
+    base = emb.select(
         F.col(id_col).alias("vec_id"),
         _dvec(vec_col).alias("v"),
         srp_signature(vec_col, dim, n_planes).alias("sig"),
@@ -442,7 +442,7 @@ def batch_topk(
             for j in range(i + 1, n_planes)
         ]
     qset = (
-        widen_small_scan(queries).select(
+        queries.select(
             F.col(query_id_col).alias("query_id"),
             _dvec(query_vec_col).alias("qv"),
             srp_signature(query_vec_col, dim, n_planes).alias("qsig"),

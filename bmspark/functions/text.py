@@ -155,9 +155,8 @@ def winnow_fingerprints(
     (measured 1.14 s of dedup_winnow's 2.0 s at sf0.1; the UDF form
     computes the identical values ~3x faster). hashlib.md5 of the same
     UTF-8 bytes == JVM md5, and the selection is pure int64 math —
-    value-exact vs the DuckDB twin and vs ``winnow_fingerprints_jvm``
-    (the original all-JVM form, kept as the equality-pinned twin in
-    tests/test_text_props.py)."""
+    value-exact vs the DuckDB twin and vs the original all-JVM form,
+    kept as the equality-pinned twin in tests/test_text_props.py."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<struct<pos: bigint, fp: bigint>>")
@@ -206,59 +205,6 @@ def winnow_fingerprints(
 
     norm = F.regexp_replace(F.lower(F.trim(_c(text))), r"\s+", " ")
     return _winnow(F.split(norm, " "))
-
-
-def winnow_fingerprints_jvm(
-    text: str | Column, k: int = WINNOW_K, w: int = WINNOW_W
-) -> Column:
-    """All-JVM higher-order-function form of ``winnow_fingerprints`` —
-    the original implementation, value-identical by construction and
-    pinned equal in tests; kept for environments where the Python
-    worker path is undesirable. HOF lambdas are interpreted, so this
-    form is ~3x slower per doc (round-8 measurement).
-
-    Docs shorter than k tokens get one whole-text gram; fewer than w
-    grams collapse to a single window. The token array and the gram-hash
-    array are each _bind-ed so they are computed once per row — never
-    inside a per-element lambda (see _bind)."""
-
-    def _grams(t: Column) -> Column:
-        n = F.size(t)
-        return F.when(
-            n >= k,
-            F.transform(
-                F.sequence(F.lit(1), n - (k - 1)),
-                lambda i: _hash60(F.concat_ws(" ", F.slice(t, i, k))),
-            ),
-            # concat_ws(" ", t) == the normalized text (t = split on " ")
-        ).otherwise(F.array(_hash60(F.concat_ws(" ", t))))
-
-    def _selected(g: Column) -> Column:
-        m = F.size(g)
-        wlen = F.least(m, F.lit(w))
-        return F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), m - wlen + 1),
-                lambda j: _bind(
-                    F.slice(g, j, wlen),
-                    lambda win: F.struct(
-                        # rightmost occurrence of the window minimum:
-                        # position from the END via array_position(reverse)
-                        (
-                            j + wlen
-                            - F.array_position(F.reverse(win), F.array_min(win))
-                        ).cast("long").alias("pos"),
-                        F.array_min(win).alias("fp"),
-                    ),
-                ),
-            )
-        )
-
-    norm = F.regexp_replace(F.lower(F.trim(_c(text))), r"\s+", " ")
-    return _bind(
-        F.split(norm, " "),
-        lambda toks: _bind(_grams(toks), _selected),
-    )
 
 
 #: DuckDB twin of winnow_fingerprints. Same normalization, same md5-60bit

@@ -30,7 +30,7 @@ from dataclasses import replace
 
 from pyspark.sql import SparkSession
 
-from bmspark.plans.spec import PipelineSpec, PipelineResult, run_pipeline
+from bmspark.plans.spec import PipelineResult, PipelineSpec, run_pipeline, sink_path
 
 STATE_FILE = "_incremental_state.json"
 
@@ -110,9 +110,7 @@ def read_sink_union(spark: SparkSession, spec: PipelineSpec, sink: str):
     """All ticks of one sink as a single DataFrame."""
     import glob
 
-    paths = sorted(glob.glob(f"{spec.out_dir}/ticks/*/{sink}"))
-    if spec.route_mode == "single_pass":
-        paths = sorted(glob.glob(f"{spec.out_dir}/ticks/*/routed/__sink={sink}"))
+    paths = sorted(glob.glob(sink_path(spec, sink, out_dir=f"{spec.out_dir}/ticks/*")))
     # one read per tick dir: each is its own hive-partitioned root, so a
     # combined read would trip partition discovery (conflicting bases)
     out = None

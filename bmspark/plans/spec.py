@@ -29,7 +29,7 @@ import hashlib
 import json
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -113,6 +113,16 @@ class PipelineResult:
     wall_secs: float
     docs_per_sec: float
     paths: dict[str, str]
+
+
+def sink_path(spec: PipelineSpec, name: str, out_dir: str | None = None) -> str:
+    """Where a sink's rows land under ``out_dir`` (default the spec's):
+    ``{out_dir}/{name}`` in multi mode, the ``__sink`` partition of the
+    one routed table in single_pass mode."""
+    root = spec.out_dir if out_dir is None else out_dir
+    if spec.route_mode == "single_pass":
+        return f"{root}/routed/__sink={name}"
+    return f"{root}/{name}"
 
 
 def build_enriched(
@@ -231,7 +241,7 @@ def run_pipeline(
             source_files = []  # inline DataFrame with no file source
 
         fmts = {rule.name: rule.fmt for rule in spec.routes}
-        paths = {name: f"{spec.out_dir}/{name}" for name in columns}
+        paths = {name: sink_path(spec, name) for name in columns}
 
         def write_sink(name: str) -> bool:
             """Write one sink unless already committed; True when skipped."""
@@ -359,8 +369,7 @@ def _run_single_pass(
         input_count=input_count,
         wall_secs=wall,
         docs_per_sec=input_count / wall if wall else 0.0,
-        paths={"routed": routed_path,
-               **{name: f"{routed_path}/__sink={name}" for name in columns}},
+        paths={"routed": routed_path, **{name: sink_path(spec, name) for name in columns}},
     )
 
 
@@ -368,22 +377,18 @@ def reprocess_deadletter(spark: SparkSession, spec: PipelineSpec) -> PipelineRes
     """Replay the deadletter archive through the salvage decoder — the
     reference's recover-by-replay pattern (replay.go: re-ingest a tap
     archive after fixing the pipeline). Rows that the lenient parse can
-    now decode are routed into ``{out_dir}/reprocessed/<sink>``; rows
-    that still fail stay in the reprocessed deadletter. The original
-    deadletter archive is never mutated (auditable)."""
-    dl_path = f"{spec.out_dir}/{spec.deadletter}"
+    now decode are routed into ``{out_dir}/reprocessed`` in the spec's
+    route mode; rows that still fail stay in the reprocessed deadletter.
+    The deadletter is read from wherever that route mode wrote it, and
+    the original archive is never mutated (auditable)."""
+    dl_path = sink_path(spec, spec.deadletter)
     raw_cols = ["url", "warc_ts", "html", "lang"]
     dl = spark.read.parquet(dl_path)
     raw = dl.select(*[c for c in raw_cols if c in dl.columns])
-    sub = PipelineSpec(
-        source_path=dl_path,
-        out_dir=f"{spec.out_dir}/reprocessed",
-        routes=spec.routes,
-        deadletter=spec.deadletter,
-        enrich_lang_dim=spec.enrich_lang_dim,
-        partition_cols=spec.partition_cols,
-        sink_columns=spec.sink_columns,
-        version=spec.version,
+    # the subscription already filtered these rows, on raw columns the
+    # archive may not keep
+    sub = replace(
+        spec, source_path=dl_path, out_dir=f"{spec.out_dir}/reprocessed", subscription=None
     )
     return run_pipeline(spark, sub, pages=raw, parse_udf=parse_fns.parse_lenient)
 

@@ -74,9 +74,6 @@ def main(argv: list[str]) -> int:
     args = ap.parse_args(argv)
 
     from bmspark.plans import spec
-    from bmspark.session import get_session
-
-    spark = get_session("bmspark-pipeline", master=args.master)
 
     routes = (
         [spec.RouteRule(*r.split(":", 1)) for r in args.route]
@@ -101,12 +98,31 @@ def main(argv: list[str]) -> int:
             pipeline.subscription = args.subscription
         if args.route_mode:
             pipeline.route_mode = args.route_mode
-        routes = pipeline.routes
     elif args.source is None or args.out is None:
         ap.error("--source and --out are required when --conf is not given")
+    else:
+        pipeline = spec.PipelineSpec(
+            source_path=args.source, out_dir=args.out, routes=routes,
+            route_mode=args.route_mode or "multi",
+            subscription=args.subscription,
+        )
 
-    source = pipeline.source_path if args.conf_file else args.source
-    out = pipeline.out_dir if args.conf_file else args.out
+    if args.streaming:
+        # the streaming runner honours routes only: refuse what it would drop
+        ignored = [
+            flag for flag, given in (
+                ("--subscription", pipeline.subscription),
+                ("--prometheus", args.prometheus),
+                ("--incremental", args.incremental),
+                ("--route-mode single_pass", pipeline.route_mode == "single_pass"),
+            ) if given
+        ]
+        if ignored:
+            ap.error(f"--streaming does not support {', '.join(ignored)}")
+
+    from bmspark.session import get_session
+
+    spark = get_session("bmspark-pipeline", master=args.master)
 
     if args.streaming:
         from bmspark import fixtures
@@ -114,22 +130,16 @@ def main(argv: list[str]) -> int:
 
         q = runner.run_streaming_pipeline(
             spark,
-            source,
+            pipeline.source_path,
             fixtures.PAGES_SCHEMA,
-            out,
-            args.checkpoint or f"{out}/_checkpoint",
-            [(r.name, r.predicate) for r in routes],
+            pipeline.out_dir,
+            args.checkpoint or f"{pipeline.out_dir}/_checkpoint",
+            [(r.name, r.predicate) for r in pipeline.routes],
             trigger_interval=args.daemon_interval,
         )
         q.awaitTermination()
         return 0
 
-    if not args.conf_file:
-        pipeline = spec.PipelineSpec(
-            source_path=source, out_dir=out, routes=routes,
-            route_mode=args.route_mode or "multi",
-            subscription=args.subscription,
-        )
     if args.incremental:
         from bmspark.plans import incremental
 

@@ -167,6 +167,38 @@ def test_cli_conf_precedence_end_to_end(spark, tmp_path):
         main(["--out", "/tmp/nope"])
 
 
+@pytest.mark.parametrize("flags, conf_subscription", [
+    (["--subscription", "lang = 'en'"], False),
+    ([], True),
+    (["--prometheus", "metrics.prom"], False),
+    (["--incremental"], False),
+    (["--route-mode", "single_pass"], False),
+], ids=["subscription", "conf_subscription", "prometheus", "incremental", "single_pass"])
+def test_cli_streaming_rejects_options_it_would_ignore(tmp_path, flags, conf_subscription):
+    """The streaming runner takes routes only: a subscription (flag or
+    conf), a Prometheus file, incremental mode or single_pass routing
+    given with --streaming is an argparse error (exit 2) raised before
+    any session starts or output is written, not silently dropped."""
+    from jobs.run_pipeline import main
+
+    out = tmp_path / "out"
+    argv = ["--streaming", "--source", str(tmp_path / "pages"), "--out", str(out)]
+    if conf_subscription:
+        ini = tmp_path / "sub.conf"
+        ini.write_text(
+            "[pages_in]\nstage = xport_input\ntype = file\n"
+            "subscription = lang = 'en'\n\n"
+            "[sink_en]\nstage = xport_output\npredicate = lang = 'en'\n"
+        )
+        argv += ["--conf", str(ini)]
+    flags = [str(tmp_path / f) if f.endswith(".prom") else f for f in flags]
+    with pytest.raises(SystemExit) as exc:
+        main(argv + flags)
+    assert exc.value.code == 2
+    assert not out.exists()
+    assert not (tmp_path / "metrics.prom").exists()
+
+
 _PROM_LINE = re.compile(
     r'^[a-zA-Z_:][a-zA-Z0-9_:]*(\{[^}]*\})? -?\d+(\.\d+)?$'
 )

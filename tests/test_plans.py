@@ -31,6 +31,26 @@ def test_filter_pushdown_reaches_parquet(spark):
     assert "l_extendedprice" not in read_schema
 
 
+def test_dim_tables_rows_and_schema(spark):
+    """dim_lang and dim_source are their oracle VALUES twins read as local
+    relations: same rows, column names and types as the row lists they
+    replaced."""
+    lang = fixtures.dim_lang(spark)
+    assert lang.dtypes == [("lang", "string"), ("lang_name", "string"), ("lang_family", "string")]
+    assert sorted(map(tuple, lang.collect())) == sorted([
+        ("en", "English", "germanic"), ("fr", "French", "romance"),
+        ("es", "Spanish", "romance"), ("zh", "Chinese", "sinitic"),
+        ("de", "German", "germanic"),
+    ])
+    source = fixtures.dim_source(spark)
+    assert source.dtypes == [("domain", "string"), ("category", "string"), ("tier", "int")]
+    assert sorted(map(tuple, source.collect())) == [
+        (f"src{i}.example.com", ["news", "blog", "shop", "docs"][i % 4], i % 3 + 1)
+        for i in range(10)
+        if i != 7
+    ]
+
+
 def test_broadcast_join_chosen_for_dims(spark):
     pg = fixtures.pages_from_documents(spark, "/root/testdata/sf0.01")
     out = enrich.enrich_broadcast(pg, fixtures.dim_lang(spark), on="lang")
@@ -418,3 +438,58 @@ def test_rep_ngrams_plan_has_no_pivot_scan_and_dsir_broadcasts(spark):
     w.collect()
     plan = w._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+
+
+def test_widen_small_scan_widens_single_split_leaf(spark, tmp_path):
+    """A one-split parquet leaf is round-robined to defaultParallelism."""
+    from bmspark.session import widen_small_scan
+
+    path = str(tmp_path / "one")
+    spark.range(100).coalesce(1).write.parquet(path)
+    target = spark.sparkContext.defaultParallelism
+    out = widen_small_scan(spark.read.parquet(path))
+    assert f"RoundRobinPartitioning({target})" in _plan(out, "simple")
+    assert out.rdd.getNumPartitions() == target
+    assert out.count() == 100
+
+
+def test_widen_small_scan_keeps_wide_leaf(spark, tmp_path):
+    """A leaf with more than defaultParallelism/4 splits is returned as is."""
+    from bmspark.session import widen_small_scan
+
+    path = str(tmp_path / "wide")
+    n = spark.sparkContext.defaultParallelism // 4 + 1
+    spark.range(100).repartition(n).write.parquet(path)
+    leaf = spark.read.parquet(path)
+    assert leaf.rdd.getNumPartitions() == n
+    assert widen_small_scan(leaf) is leaf
+
+
+def test_widen_small_scan_runs_no_job_on_planned_input(spark, tmp_path):
+    """Grouped, joined and cached-on-a-shuffle frames come back unchanged,
+    and deciding so runs no Spark job (counting their partitions would
+    run the upstream shuffles)."""
+    from bmspark.session import widen_small_scan
+
+    path = str(tmp_path / "one")
+    spark.range(100).selectExpr("id", "id % 7 AS k").coalesce(1).write.parquet(path)
+    leaf = spark.read.parquet(path)
+    grouped = leaf.groupBy("k").count()
+    cached = leaf.groupBy("k").count().cache()
+    frames = {
+        "grouped": grouped,
+        "joined": leaf.join(leaf.select("k").distinct(), "k"),
+        "cached": cached,
+    }
+    sc = spark.sparkContext
+    try:
+        for name, df in frames.items():
+            group = f"widen_probe_{name}"
+            sc.setJobGroup(group, "widen_small_scan decision probe")
+            try:
+                assert widen_small_scan(df) is df, name
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+    finally:
+        cached.unpersist()

@@ -4,6 +4,8 @@ labels in every router mode, fail-fast route errors."""
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pytest
 from conftest import check_routed_equality, sink_paths
 from pyspark.errors import AnalysisException
@@ -146,24 +148,33 @@ def test_single_pass_router_equals_multi(spark, result, tmp_path):
     assert rp2.skipped == ["routed"] and rp2.counts == rp.counts
 
 
-def test_deadletter_reprocess_salvages_truncated(spark, result):
+@pytest.mark.parametrize("mode", ["multi", "single_pass"])
+def test_deadletter_reprocess_salvages_truncated(spark, result, tmp_path, mode):
     """Replay the deadletter archive through the lenient decoder
     (reference pattern: re-ingest a tap archive after fixing the
     pipeline). Truncated-markup pages (no </p>) are salvaged via
     tag-stripping; empty and non-utf8 payloads remain deadlettered; the
-    original archive is untouched."""
-    out, s, res, pages = result
-    dl_before = spark.read.parquet(f"{out}/deadletter").count()
+    original archive is untouched. Both route modes: single_pass keeps
+    its deadletter in the routed table's partition."""
+    _, s, _, pages = result
+    if mode == "single_pass":
+        s = replace(s, out_dir=str(tmp_path / "sp"), route_mode=mode)
+        spec.run_pipeline(spark, s, pages=pages)
+    dl_path = spec.sink_path(s, s.deadletter)
+    dl_before = spark.read.parquet(dl_path).count()
     rp = spec.reprocess_deadletter(spark, s)
     salvaged = sum(v for k, v in rp.counts.items() if k.startswith("sink_"))
     n_truncated = len([i for i in range(2000) if i % 60 == 13])
     n_bad = len([i for i in range(2000) if i % 60 in (33, 53)])
     assert salvaged == n_truncated
     assert rp.counts["deadletter"] == n_bad
-    assert spark.read.parquet(f"{out}/deadletter").count() == dl_before  # untouched
+    assert spark.read.parquet(dl_path).count() == dl_before  # untouched
     # salvaged rows re-enter the normal sink layout with lineage manifests
-    m = lineage.read_manifest(f"{out}/reprocessed/sink_en")
-    assert m and m["row_count"] == spark.read.parquet(f"{out}/reprocessed/sink_en").count()
+    assert rp.paths["sink_en"] == spec.sink_path(s, "sink_en", out_dir=f"{s.out_dir}/reprocessed")
+    assert spark.read.parquet(rp.paths["sink_en"]).count() == rp.counts["sink_en"]
+    committed = rp.paths["routed" if mode == "single_pass" else "sink_en"]
+    m = lineage.read_manifest(committed)
+    assert m and m["row_count"] == spark.read.parquet(committed).count()
 
 
 def test_subscription_filter_prunes_scan(spark, tmp_path):

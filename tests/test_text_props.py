@@ -11,8 +11,10 @@ import re
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from bmspark.functions.dedup import simhash_of_tokens
+from bmspark.functions.text import WINNOW_K, WINNOW_W, _bind, _c, _hash60
 from bmspark.oracle_extract import extract
 
 texts = st.text(
@@ -168,6 +170,55 @@ def test_canonical_url_cross_engine_exact(spark, duck):
     assert got[6] == ("example.com/x", "")
 
 
+def winnow_fingerprints_jvm(text, k: int = WINNOW_K, w: int = WINNOW_W):
+    """All-JVM higher-order-function form of ``text.winnow_fingerprints``:
+    the original implementation, kept here as its equality-pinned twin.
+    HOF lambdas are interpreted, so this form is ~3x slower per doc.
+
+    Docs shorter than k tokens get one whole-text gram; fewer than w
+    grams collapse to a single window. The token array and the gram-hash
+    array are each _bind-ed so they are computed once per row — never
+    inside a per-element lambda (see _bind)."""
+
+    def _grams(t):
+        n = F.size(t)
+        return F.when(
+            n >= k,
+            F.transform(
+                F.sequence(F.lit(1), n - (k - 1)),
+                lambda i: _hash60(F.concat_ws(" ", F.slice(t, i, k))),
+            ),
+            # concat_ws(" ", t) == the normalized text (t = split on " ")
+        ).otherwise(F.array(_hash60(F.concat_ws(" ", t))))
+
+    def _selected(g):
+        m = F.size(g)
+        wlen = F.least(m, F.lit(w))
+        return F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), m - wlen + 1),
+                lambda j: _bind(
+                    F.slice(g, j, wlen),
+                    lambda win: F.struct(
+                        # rightmost occurrence of the window minimum:
+                        # position from the END via array_position(reverse)
+                        (
+                            j + wlen
+                            - F.array_position(F.reverse(win), F.array_min(win))
+                        ).cast("long").alias("pos"),
+                        F.array_min(win).alias("fp"),
+                    ),
+                ),
+            )
+        )
+
+    norm = F.regexp_replace(F.lower(F.trim(_c(text))), r"\s+", " ")
+    return _bind(
+        F.split(norm, " "),
+        lambda toks: _bind(_grams(toks), _selected),
+    )
+
+
 def test_winnow_arrow_form_equals_jvm_form(spark):
     """winnow_fingerprints (Arrow-batched gram-hash + numpy selection,
     round 8) must be array-for-array identical to the original all-JVM
@@ -185,7 +236,7 @@ def test_winnow_arrow_form_equals_jvm_form(spark):
     arrow = {r.doc_id: r.f for r in d.select(
         "doc_id", text.winnow_fingerprints("text").alias("f")).collect()}
     jvm = {r.doc_id: r.f for r in d.select(
-        "doc_id", text.winnow_fingerprints_jvm("text").alias("f")).collect()}
+        "doc_id", winnow_fingerprints_jvm("text").alias("f")).collect()}
     assert arrow == jvm
 
 
