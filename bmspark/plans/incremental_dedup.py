@@ -4,20 +4,17 @@ The batch analog of streaming dropDuplicates-with-state, for the corpus
 team's standing job: new crawl files land continuously, and each tick
 must emit only documents whose content has NEVER been emitted before.
 
-Per tick:
-  1. list source data files, subtract the state manifest (same file-CDC
-     mechanism as plans/incremental.py);
-  2. fingerprint the new docs (functions/text.fingerprint — md5 of
+Each tick of plans/ticks.py, on the source files it has not seen:
+  1. fingerprint the new docs (functions/text.fingerprint — md5 of
      normalized text, the repo's exact-dedup content hash);
-  3. within-tick dedup: keep the min id per fingerprint;
-  4. cross-tick dedup: LEFT ANTI join against the fingerprints of every
+  2. within-tick dedup: keep the min id per fingerprint;
+  3. cross-tick dedup: LEFT ANTI join against the fingerprints of every
      previously committed tick — read COLUMN-PRUNED from the prior tick
      outputs themselves (the output IS the state; no side state table to
      drift out of sync);
-  5. overwrite this tick's survivors into ``out/ticks/<n>`` — a retry of
+  4. overwrite this tick's survivors into ``out/ticks/<n>`` — a retry of
      a crashed tick rewrites the same directory, so the emitted corpus
-     never contains duplicates (stronger than append-mode sinks);
-  6. commit the updated state manifest atomically (rename), LAST.
+     never contains duplicates.
 
 Semantics (contract-tested): after any tick sequence, the union of tick
 outputs equals FIRST-SEEN-WINS exact dedup of everything processed —
@@ -34,55 +31,16 @@ ONE column of the prior outputs (parquet column pruning, plan-visible).
 
 from __future__ import annotations
 
-import json
 import os
-import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bmspark.functions import text
+from bmspark.plans import ticks
 
 STATE_FILE = "_dedup_state.json"
-#: separate manifest name for the SPAN-granularity pipeline so both
-#: pipelines may share one out_dir without clobbering each other
 SPAN_STATE_FILE = "_span_dedup_state.json"
-
-
-def read_state(out_dir: str, state_file: str = STATE_FILE) -> dict:
-    p = os.path.join(out_dir, state_file)
-    if not os.path.exists(p):
-        return {"processed_files": [], "runs": []}
-    with open(p) as f:
-        return json.load(f)
-
-
-def _commit_state(
-    out_dir: str, state: dict, state_file: str = STATE_FILE
-) -> None:
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = os.path.join(out_dir, state_file + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(state, f, indent=1, sort_keys=True)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(out_dir, state_file))
-
-
-def _prior_fp_dirs(out_dir: str, state: dict) -> list[str]:
-    """The committed corpus as a read list: the latest compacted state
-    generation (if any) + the non-empty tick outputs AFTER it. Empty
-    ticks write no data files, so reading them would fail schema
-    inference — and they contribute no fingerprints anyway."""
-    comp = state.get("compaction")
-    dirs = [comp["path"]] if comp else []
-    floor = comp["through_tick"] if comp else -1
-    dirs += [
-        os.path.join(out_dir, "ticks", f"{run['tick']:06d}")
-        for run in state["runs"]
-        if run["n_emitted"] > 0 and run["tick"] > floor
-    ]
-    return dirs
 
 
 def _state_scope(out_dir: str) -> str:
@@ -140,27 +98,17 @@ def _ensure_state_table(spark: SparkSession, comp: dict) -> str:
 
 def _state_fp_frames(spark: SparkSession, out_dir: str, state: dict):
     """The committed-fingerprint state as a list of fp-column frames:
-    the latest compacted generation (as a BUCKETED table read when the
-    compaction wrote one — the anti-join then needs no exchange on the
-    state side) followed by one multi-path frame of the non-empty ticks
-    since."""
+    the latest compacted generation as a BUCKETED table read, when the
+    compaction wrote one (the anti-join then needs no exchange on the
+    state side), then one multi-path frame of the other live dirs."""
     frames = []
+    dirs = ticks.live_dirs(out_dir, state)
     comp = state.get("compaction")
     if comp and comp.get("bucketed"):
         frames.append(spark.table(_ensure_state_table(spark, comp)).select("fp"))
-        floor = comp["through_tick"]
-    elif comp:
-        frames.append(spark.read.parquet(comp["path"]).select("fp"))
-        floor = comp["through_tick"]
-    else:
-        floor = -1
-    since = [
-        os.path.join(out_dir, "ticks", f"{run['tick']:06d}")
-        for run in state["runs"]
-        if run["n_emitted"] > 0 and run["tick"] > floor
-    ]
-    if since:
-        frames.append(spark.read.parquet(*since).select("fp"))
+        dirs = dirs[1:]
+    if dirs:
+        frames.append(spark.read.parquet(*dirs).select("fp"))
     return frames
 
 
@@ -173,56 +121,40 @@ def dedup_tick(
 ) -> dict | None:
     """One incremental-dedup tick. Returns the run record, or None when
     the source has no new files."""
-    state = read_state(out_dir)
-    seen = set(state["processed_files"])
-    files = sorted(spark.read.parquet(source_path).inputFiles())
-    new = [f for f in files if f not in seen]
-    if not new:
-        return None
 
-    tick = len(state["runs"])
-    docs = spark.read.parquet(*new).withColumn(
-        "fp", text.fingerprint(text_col)
-    )
-    # within-tick: keep exactly ONE row per fingerprint — the min-id row,
-    # positionally via row_number (a (fp, min_id) semi-join would pass
-    # BOTH copies of a record that re-landed twice in one tick with the
-    # same id, breaking the no-duplicate-fp invariant). One window
-    # shuffle on fp, no join.
-    w = Window.partitionBy("fp").orderBy(F.col(id_col).asc())
-    tick_docs = (
-        docs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    # cross-tick: drop fingerprints any prior tick already emitted.
-    # Chained anti-joins, one per state source group, NOT one anti
-    # against their union: anti-join distributes over union, and keeping
-    # the bucketed state generation as its own join input is what lets
-    # Spark read it exchange-free (a union would erase the bucketing).
-    for prior_fps in _state_fp_frames(spark, out_dir, state):
-        tick_docs = tick_docs.join(prior_fps, on="fp", how="left_anti")
+    def body(tick: int, new: list[str], state: dict) -> dict:
+        docs = spark.read.parquet(*new).withColumn(
+            "fp", text.fingerprint(text_col)
+        )
+        # within-tick: keep exactly ONE row per fingerprint — the min-id
+        # row, positionally via row_number (a (fp, min_id) semi-join would
+        # pass BOTH copies of a record that re-landed twice in one tick
+        # with the same id, breaking the no-duplicate-fp invariant). One
+        # window shuffle on fp, no join.
+        w = Window.partitionBy("fp").orderBy(F.col(id_col).asc())
+        tick_docs = (
+            docs.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+        # cross-tick: drop fingerprints any prior tick already emitted.
+        # Chained anti-joins, one per state source group, NOT one anti
+        # against their union: anti-join distributes over union, and
+        # keeping the bucketed state generation as its own join input is
+        # what lets Spark read it exchange-free (a union would erase the
+        # bucketing).
+        for prior_fps in _state_fp_frames(spark, out_dir, state):
+            tick_docs = tick_docs.join(prior_fps, on="fp", how="left_anti")
 
-    from pyspark.sql import Observation
+        obs = Observation(f"dedup_tick_{tick}")
+        (
+            tick_docs.observe(obs, F.count(F.lit(1)).alias("n"))
+            .write.mode("overwrite")
+            .parquet(ticks.tick_dir(out_dir, tick))
+        )
+        return {"n_new_files": len(new), "n_emitted": obs.get["n"]}
 
-    obs = Observation(f"dedup_tick_{tick}")
-    (
-        tick_docs.observe(obs, F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "ticks", f"{tick:06d}"))
-    )
-    n_emitted = obs.get["n"]
-
-    run = {
-        "tick": tick,
-        "n_new_files": len(new),
-        "n_emitted": n_emitted,
-        "committed_at": time.time(),
-    }
-    state["processed_files"] = sorted(seen | set(new))
-    state["runs"].append(run)
-    _commit_state(out_dir, state)
-    return run
+    return ticks.run_tick(spark, source_path, out_dir, STATE_FILE, body)
 
 
 def compact_ticks(
@@ -232,21 +164,9 @@ def compact_ticks(
     bucketed: bool = False,
     table_prefix: str = "bmspark_dedup_state",
 ) -> dict | None:
-    """Fold the committed corpus (previous generation + tick outputs
-    since) into ONE consolidated state generation, fp-clustered: rows
-    are hash-repartitioned on fp into ``n_files`` files and sorted by fp
-    within each, so the per-tick anti-join's right side is one
-    bounded-file-count, tight-footer-stats read no matter how many ticks
-    have ever run — without compaction, 10^4 ticks means a 10^4-path
-    scan every tick. Returns the compaction record, or None when there
-    is nothing new to fold.
-
-    Crash-safe like dedup_tick: the generation directory is fully
-    written first, the manifest pointer commits LAST (atomic rename); a
-    crash mid-compaction leaves an orphan gen dir that the retry simply
-    overwrites. Tick dirs stay on disk (the generation supersedes them
-    in the read path; prune them out-of-band once the manifest points
-    past them).
+    """Fold the committed corpus into ONE fp-clustered state generation
+    (``ticks.compact``): without it, 10^4 ticks means a 10^4-path scan
+    on the anti-join's right side every tick.
 
     ``bucketed=True`` writes the generation as a BUCKETED-BY-fp external
     table (``bucketBy(n_files, "fp").sortBy("fp").saveAsTable``) instead
@@ -257,31 +177,8 @@ def compact_ticks(
     session catalog, not the files, so reads re-register the table from
     the manifest (``_ensure_state_table``; one table per generation —
     a stale registration can never alias a superseded directory)."""
-    state = read_state(out_dir)
-    if not state["runs"]:
-        return None
-    comp = state.get("compaction")
-    through = state["runs"][-1]["tick"]
-    if comp and comp["through_tick"] >= through:
-        return None  # nothing committed since the last fold
-    sources = _prior_fp_dirs(out_dir, state)
-    if not sources or (comp and len(sources) == 1):
-        return None  # no data at all, or only empty ticks since the fold
-    gen = (comp["gen"] + 1) if comp else 0
-    path = os.path.join(out_dir, "state", f"gen{gen:04d}")
-    folded = (
-        spark.read.parquet(*sources)
-        .repartition(n_files, F.col("fp"))
-        .sortWithinPartitions("fp")
-    )
-    record = {
-        "gen": gen,
-        "through_tick": through,
-        "path": path,
-        "n_files": n_files,
-        "committed_at": time.time(),
-    }
-    if bucketed:
+
+    def save_bucketed(folded: DataFrame, path: str, gen: int) -> dict:
         # name scoped to THIS pipeline's out_dir: two pipelines sharing
         # a catalog must never collide on state tables (ADVICE r04).
         tbl = f"{table_prefix}_{_state_scope(out_dir)}_gen{gen:04d}"
@@ -293,12 +190,12 @@ def compact_ticks(
             .option("path", path)
             .saveAsTable(tbl)
         )
-        record["bucketed"] = {"table": tbl, "n_buckets": n_files}
-    else:
-        folded.write.mode("overwrite").parquet(path)
-    state["compaction"] = record
-    _commit_state(out_dir, state)
-    return record
+        return {"bucketed": {"table": tbl, "n_buckets": n_files}}
+
+    return ticks.compact(
+        spark, out_dir, STATE_FILE, "fp", "state", n_files,
+        save=save_bucketed if bucketed else None,
+    )
 
 
 def read_corpus(spark: SparkSession, out_dir: str) -> DataFrame | None:
@@ -306,11 +203,8 @@ def read_corpus(spark: SparkSession, out_dir: str) -> DataFrame | None:
     as ONE multi-path parquet scan — not an N-deep unionByName chain
     (at 10^4 ticks a Python-loop union is a plan-size / analysis-time
     problem; a multi-path scan is one relation with many files)."""
-    state = read_state(out_dir)
-    dirs = _prior_fp_dirs(out_dir, state)
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    dirs = ticks.live_dirs(out_dir, ticks.read_state(out_dir, STATE_FILE))
+    return spark.read.parquet(*dirs) if dirs else None
 
 
 # ---------------------------------------------------------------------------
@@ -338,18 +232,18 @@ def read_corpus(spark: SparkSession, out_dir: str) -> DataFrame | None:
 # h-clustered generation exactly like the fp pipeline.
 
 
+def _tokens(text_col: str):
+    """Whitespace tokens, NULL text coalesced to '' (the dedup_spans
+    convention)."""
+    return F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
+
+
 def _span_frame(
     docs: DataFrame, span_tokens: int, text_col: str, id_col: str
 ) -> DataFrame:
     """(doc_id, span_idx, span, h) — consecutive non-overlapping
-    ``span_tokens``-token segments, NULL text coalesced to '' (the
-    dedup_spans convention)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(
-            F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"
-        ).alias("toks"),
-    )
+    ``span_tokens``-token segments."""
+    toks = docs.select(F.col(id_col).alias("doc_id"), _tokens(text_col).alias("toks"))
     n_spans = F.ceil(F.size("toks") / F.lit(span_tokens)).cast("int")
     return toks.select(
         "doc_id",
@@ -364,18 +258,6 @@ def _span_frame(
     ).withColumn("h", F.md5("span"))
 
 
-def _prior_span_dirs(out_dir: str, state: dict) -> list[str]:
-    comp = state.get("compaction")
-    dirs = [comp["path"]] if comp else []
-    floor = comp["through_tick"] if comp else -1
-    dirs += [
-        os.path.join(out_dir, "spans", f"{run['tick']:06d}")
-        for run in state["runs"]
-        if run["n_spans_kept"] > 0 and run["tick"] > floor
-    ]
-    return dirs
-
-
 def span_dedup_tick(
     spark: SparkSession,
     source_path: str,
@@ -384,12 +266,10 @@ def span_dedup_tick(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> dict | None:
-    """One incremental span-dedup tick. Emits rebuilt docs to
-    ``out/ticks/<n>`` (doc_id, text, n_spans, n_kept — fully
+    """One incremental span-dedup tick (plans/ticks.py). Emits rebuilt
+    docs to ``out/ticks/<n>`` (doc_id, text, n_spans, n_kept — fully
     deduplicated docs are dropped) and the tick's surviving span hashes
-    to ``out/spans/<n>``; commits the manifest LAST (atomic rename), so
-    a crashed tick's retry overwrites the same directories and the
-    corpus stays exactly-once. Returns the run record, or None when the
+    to ``out/spans/<n>``. Returns the run record, or None when the
     source has no new files.
 
     Scale: within-tick dedup is ONE window shuffle on the uniform
@@ -397,129 +277,80 @@ def span_dedup_tick(
     boilerplate spans); cross-tick is one anti-join whose right side is
     a single-column multi-path scan of prior hashes (compact to bound
     the path count); the rebuild is one doc-keyed shuffle."""
-    state = read_state(out_dir, SPAN_STATE_FILE)
-    seen = set(state["processed_files"])
-    files = sorted(spark.read.parquet(source_path).inputFiles())
-    new = [f for f in files if f not in seen]
-    if not new:
-        return None
 
-    tick = len(state["runs"])
-    docs = spark.read.parquet(*new)
-    spans = _span_frame(docs, span_tokens, text_col, id_col)
+    def body(tick: int, new: list[str], state: dict) -> dict:
+        docs = spark.read.parquet(*new)
+        spans = _span_frame(docs, span_tokens, text_col, id_col)
 
-    # within-tick: first (doc_id, span_idx) occurrence of each span wins
-    w = Window.partitionBy("h").orderBy(
-        F.col("doc_id").asc(), F.col("span_idx").asc()
-    )
-    tick_spans = (
-        spans.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    # cross-tick: drop spans any prior tick emitted (column-pruned scan)
-    prior = _prior_span_dirs(out_dir, state)
-    if prior:
-        prior_h = spark.read.parquet(*prior).select("h")
-        tick_spans = tick_spans.join(prior_h, on="h", how="left_anti")
-
-    # rebuild docs from surviving spans, in span order; drop emptied docs
-    rebuilt = (
-        tick_spans.groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("span_idx", "span"))),
-                    lambda s: s["span"],
-                ),
-                " ",
-            ).alias("text"),
-            F.count(F.lit(1)).alias("n_kept"),
+        # within-tick: first (doc_id, span_idx) occurrence of each span wins
+        w = Window.partitionBy("h").orderBy(
+            F.col("doc_id").asc(), F.col("span_idx").asc()
         )
-    )
-    # n_spans is a per-doc scalar of the token count — no second explode
-    totals = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.ceil(
-            F.size(
-                F.split(
-                    F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"
-                )
+        tick_spans = (
+            spans.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+        # cross-tick: drop spans any prior tick emitted (column-pruned scan)
+        prior = ticks.live_dirs(out_dir, state, "spans", "n_spans_kept")
+        if prior:
+            prior_h = spark.read.parquet(*prior).select("h")
+            tick_spans = tick_spans.join(prior_h, on="h", how="left_anti")
+
+        # rebuild docs from surviving spans, in span order; drop emptied docs
+        rebuilt = (
+            tick_spans.groupBy("doc_id")
+            .agg(
+                F.array_join(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("span_idx", "span"))),
+                        lambda s: s["span"],
+                    ),
+                    " ",
+                ).alias("text"),
+                F.count(F.lit(1)).alias("n_kept"),
             )
-            / F.lit(span_tokens)
-        ).cast("long").alias("n_spans"),
-    )
-    out_docs = totals.join(rebuilt, on="doc_id")  # inner: n_kept >= 1
+        )
+        # n_spans is a per-doc scalar of the token count — no second explode
+        totals = docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.ceil(F.size(_tokens(text_col)) / F.lit(span_tokens))
+            .cast("long").alias("n_spans"),
+        )
+        out_docs = totals.join(rebuilt, on="doc_id")  # inner: n_kept >= 1
 
-    tick_dir = os.path.join(out_dir, "ticks", f"{tick:06d}")
-    span_dir = os.path.join(out_dir, "spans", f"{tick:06d}")
-    out_docs.select("doc_id", "text", "n_spans", "n_kept").write.mode(
-        "overwrite"
-    ).parquet(tick_dir)
-    tick_spans.select("h").write.mode("overwrite").parquet(span_dir)
+        tick_dir = ticks.tick_dir(out_dir, tick)
+        span_dir = ticks.tick_dir(out_dir, tick, "spans")
+        out_docs.select("doc_id", "text", "n_spans", "n_kept").write.mode(
+            "overwrite"
+        ).parquet(tick_dir)
+        tick_spans.select("h").write.mode("overwrite").parquet(span_dir)
 
-    emitted = spark.read.parquet(tick_dir)
-    kept_spans = spark.read.parquet(span_dir)
-    run = {
-        "tick": tick,
-        "n_docs_in": docs.count(),
-        "n_emitted": emitted.count(),
-        "n_spans_kept": kept_spans.count(),
-        "paths": [tick_dir, span_dir],
-        "committed_at": time.time(),
-    }
-    state["processed_files"].extend(new)
-    state["runs"].append(run)
-    _commit_state(out_dir, state, SPAN_STATE_FILE)
-    return run
+        return {
+            "n_docs_in": docs.count(),
+            "n_emitted": spark.read.parquet(tick_dir).count(),
+            "n_spans_kept": spark.read.parquet(span_dir).count(),
+            "paths": [tick_dir, span_dir],
+        }
+
+    return ticks.run_tick(spark, source_path, out_dir, SPAN_STATE_FILE, body)
 
 
 def compact_span_state(
     spark: SparkSession, out_dir: str, n_files: int = 8
 ) -> dict | None:
-    """Fold the span-hash state (previous generation + span dirs since)
-    into ONE h-clustered generation — same crash-safe
-    write-then-commit-pointer protocol as compact_ticks. Bounds the
-    anti-join's path count no matter how many ticks have run."""
-    state = read_state(out_dir, SPAN_STATE_FILE)
-    if not state["runs"]:
-        return None
-    comp = state.get("compaction")
-    through = state["runs"][-1]["tick"]
-    if comp and comp["through_tick"] >= through:
-        return None
-    sources = _prior_span_dirs(out_dir, state)
-    if not sources or (comp and len(sources) == 1):
-        return None
-    gen = (comp["gen"] + 1) if comp else 0
-    path = os.path.join(out_dir, "span_state", f"gen{gen:04d}")
-    (
-        spark.read.parquet(*sources)
-        .repartition(n_files, F.col("h"))
-        .sortWithinPartitions("h")
-        .write.mode("overwrite")
-        .parquet(path)
+    """Fold the span-hash state into ONE h-clustered generation
+    (``ticks.compact``), as compact_ticks does for fingerprints."""
+    return ticks.compact(
+        spark, out_dir, SPAN_STATE_FILE, "h", "span_state", n_files,
+        sub="spans", rows="n_spans_kept",
     )
-    state["compaction"] = {
-        "gen": gen,
-        "through_tick": through,
-        "path": path,
-        "n_files": n_files,
-        "committed_at": time.time(),
-    }
-    _commit_state(out_dir, state, SPAN_STATE_FILE)
-    return state["compaction"]
 
 
 def read_span_corpus(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """The emitted span-deduplicated corpus: one multi-path scan of the
     non-empty tick outputs."""
-    state = read_state(out_dir, SPAN_STATE_FILE)
-    dirs = [
-        os.path.join(out_dir, "ticks", f"{run['tick']:06d}")
-        for run in state["runs"]
-        if run["n_emitted"] > 0
-    ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    state = ticks.read_state(out_dir, SPAN_STATE_FILE)
+    # the span fold compacts hashes, not docs: every tick dir stays live
+    dirs = ticks.live_dirs(out_dir, {"runs": state["runs"]})
+    return spark.read.parquet(*dirs) if dirs else None

@@ -10,11 +10,13 @@ Mapping:
 - bounded queues / backpressure→ watermarks: bounded state instead of
   bounded queues; lateness is declared, not emergent
 - multi-output fan-out         → foreachBatch: the batch pipeline's
-  ``build_enriched`` + ``label_sinks`` on the micro-batch, then one append
-  per sink — the same first-match label, columns and deadletter as a
-  batch run (no lineage manifests, no hourly aggregate)
-- replay-safety                → dropDuplicatesWithinWatermark(url) +
-  checkpointLocation for exactly-once progress
+  ``build_enriched`` + ``label_sinks`` on the micro-batch, then one
+  overwrite per sink into ``{out}/{sink}/batch_id=<n>`` — the same
+  first-match label, columns and deadletter as a batch run (no lineage
+  manifests, no hourly aggregate)
+- replay-safety                → checkpointLocation for exactly-once
+  progress; foreachBatch is at-least-once, and a replayed batch keeps its
+  batch_id, so it overwrites its own directories instead of adding rows
 """
 
 from __future__ import annotations
@@ -117,7 +119,9 @@ def run_streaming_pipeline(
 
     foreachBatch receives a batch DataFrame + monotonic batch_id; the body
     runs the batch pipeline's enrich and ``label_sinks`` on it, so every
-    sink gets the rows and columns a multi-mode batch run gives it."""
+    sink gets the rows and columns a multi-mode batch run gives it. Each
+    sink is read back as ``{out_dir}/{sink}``, with ``batch_id`` as an int
+    partition column."""
     from bmspark.plans.spec import PipelineSpec, RouteRule, build_enriched, label_sinks
 
     spec = PipelineSpec(
@@ -132,8 +136,6 @@ def run_streaming_pipeline(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         enriched = build_enriched(batch_df.sparkSession, spec, pages=batch_df)
         labeled, columns = label_sinks(spec, enriched)
         labeled = labeled.persist()
@@ -142,8 +144,8 @@ def run_streaming_pipeline(
                 (
                     labeled.filter(F.col("__sink") == name)
                     .select(*cols)
-                    .write.mode("append")
-                    .parquet(f"{out_dir}/{name}")
+                    .write.mode("overwrite")
+                    .parquet(f"{out_dir}/{name}/batch_id={batch_id}")
                 )
         finally:
             labeled.unpersist()

@@ -7,7 +7,7 @@ from conftest import check_routed_equality
 from pyspark.sql import functions as F
 
 from bmspark import fixtures
-from bmspark.plans import incremental, spec
+from bmspark.plans import incremental, spec, ticks
 
 
 def test_incremental_ticks_equal_full_recompute(spark, tmp_path):
@@ -22,7 +22,7 @@ def test_incremental_ticks_equal_full_recompute(spark, tmp_path):
 
     # idle tick: nothing new → no-op, state unchanged
     assert incremental.incremental_run(spark, s) is None
-    assert len(incremental.read_state(out)["runs"]) == 1
+    assert len(ticks.read_state(out, incremental.STATE_FILE)["runs"]) == 1
 
     # new data arrives (rows 600..999 — disjoint ids, same generator)
     import pandas as pd
@@ -35,7 +35,7 @@ def test_incremental_ticks_equal_full_recompute(spark, tmp_path):
 
     r2 = incremental.incremental_run(spark, s)
     assert r2 is not None and r2.input_count == 400
-    state = incremental.read_state(out)
+    state = ticks.read_state(out, incremental.STATE_FILE)
     assert len(state["runs"]) == 2
     assert state["runs"][1]["n_new_files"] >= 1
 
@@ -97,9 +97,7 @@ def test_tick_retry_after_crash_sees_late_files(spark, tmp_path):
         df.write.mode("append").parquet(src)
 
     _append(300, 500, 1)
-    state = incremental.read_state(out)
-    seen = set(state["processed_files"])
-    files_b = [f for f in sorted(spark.read.parquet(src).inputFiles()) if f not in seen]
+    files_b = ticks.new_files(spark, src, ticks.read_state(out, incremental.STATE_FILE))
     import hashlib
 
     crashed_spec = spec.PipelineSpec(

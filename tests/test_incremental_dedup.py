@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bmspark.plans import incremental_dedup as idp
+from bmspark.plans import ticks
 
 
 def _ref_fp(t: str) -> str:
@@ -96,16 +97,39 @@ def test_incremental_dedup_crashed_tick_retry_is_idempotent(spark, staged, tmp_p
     idp.dedup_tick(spark, src, out)
 
     _arrive(src, batches[1])
-    state_before = idp.read_state(out)
+    state_before = ticks.read_state(out, idp.STATE_FILE)
     idp.dedup_tick(spark, src, out)
     # simulate the crash: roll the state file back (output stays on disk)
-    idp._commit_state(out, state_before)
+    ticks.commit(out, state_before, idp.STATE_FILE)
 
     run = idp.dedup_tick(spark, src, out)  # the retry
     assert run["tick"] == 1 and run["n_emitted"] == 50
     got = {r.doc_id for r in
            idp.read_corpus(spark, out).select("doc_id").collect()}
     assert got == set(range(150))  # 0-99 + 100-149; dups 150-199 dropped
+
+
+def test_one_tick_state_per_out_dir(spark, staged, tmp_path):
+    """Every tick kind writes ``ticks/<n>``, so a span tick on a doc
+    tick's out_dir would overwrite the doc corpus: it must raise before
+    any Spark job and leave the doc ticks readable."""
+    src, batches, _ = staged
+    out = str(tmp_path / "shared")
+    _arrive(src, batches[0])
+    idp.dedup_tick(spark, src, out)
+    _arrive(src, batches[1])
+
+    sc = spark.sparkContext
+    sc.setJobGroup("shared_out_dir", "one tick state per out_dir probe")
+    try:
+        with pytest.raises(ValueError, match="_dedup_state.json"):
+            idp.span_dedup_tick(spark, src, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("shared_out_dir")) == []
+    corpus = idp.read_corpus(spark, out)
+    assert corpus.columns == ["doc_id", "text", "fp"]
+    assert corpus.count() == 100
 
 
 def test_incremental_dedup_state_read_is_column_pruned(spark, staged, tmp_path):
@@ -118,11 +142,9 @@ def test_incremental_dedup_state_read_is_column_pruned(spark, staged, tmp_path):
     _arrive(src, batches[1])
 
     # rebuild the tick-2 plan by hand to inspect it before execution
-    state = idp.read_state(out)
-    prior = spark.read.parquet(*idp._prior_fp_dirs(out, state)).select("fp")
-    new_files = [f for f in
-                 sorted(spark.read.parquet(src).inputFiles())
-                 if f not in set(state["processed_files"])]
+    state = ticks.read_state(out, idp.STATE_FILE)
+    prior = spark.read.parquet(*ticks.live_dirs(out, state)).select("fp")
+    new_files = ticks.new_files(spark, src, state)
     from bmspark.functions import text
 
     docs = spark.read.parquet(*new_files).withColumn("fp", text.fingerprint("text"))
@@ -182,8 +204,8 @@ def test_many_ticks_with_compaction_state_read_stays_bounded(spark, tmp_path):
             rec = idp.compact_ticks(spark, out, n_files=4)
             assert rec is not None and rec["through_tick"] == tick
 
-    state = idp.read_state(out)
-    dirs = idp._prior_fp_dirs(out, state)
+    state = ticks.read_state(out, idp.STATE_FILE)
+    dirs = ticks.live_dirs(out, state)
     # one gen dir + ticks 41..49 only
     assert len(dirs) == 1 + 9, dirs
     assert "state/gen0001" in dirs[0]
@@ -202,7 +224,7 @@ def test_many_ticks_with_compaction_state_read_stays_bounded(spark, tmp_path):
     assert rec is not None and rec["through_tick"] == 49
     assert idp.compact_ticks(spark, out) is None
     # and the read path is now exactly one generation dir
-    assert idp._prior_fp_dirs(out, idp.read_state(out)) == [rec["path"]]
+    assert ticks.live_dirs(out, ticks.read_state(out, idp.STATE_FILE)) == [rec["path"]]
     got2 = {r.fp: r.doc_id for r in
             idp.read_corpus(spark, out).select("fp", "doc_id").collect()}
     assert got2 == want
@@ -232,7 +254,7 @@ def test_bucketed_state_compaction_exchange_free_anti_join(spark, tmp_path):
     # catalog loss (fresh session analog): drop, then the read path must
     # re-register the bucketed table from the manifest alone
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    state = idp.read_state(out)
+    state = ticks.read_state(out, idp.STATE_FILE)
     frames = idp._state_fp_frames(spark, out, state)
     assert len(frames) == 1 and spark.catalog.tableExists(tbl)
 
@@ -304,8 +326,8 @@ def test_state_tables_are_scoped_per_pipeline(spark, tmp_path):
     assert tbl_a.endswith("_gen0000") and tbl_b.endswith("_gen0000")
 
     # each pipeline's state frame reads ITS OWN fingerprints
-    fa = idp._state_fp_frames(spark, out_a, idp.read_state(out_a))[0]
-    fb = idp._state_fp_frames(spark, out_b, idp.read_state(out_b))[0]
+    fa = idp._state_fp_frames(spark, out_a, ticks.read_state(out_a, idp.STATE_FILE))[0]
+    fb = idp._state_fp_frames(spark, out_b, ticks.read_state(out_b, idp.STATE_FILE))[0]
     assert fa.count() == 10 and fb.count() == 10
     assert {r.fp for r in fa.collect()}.isdisjoint({r.fp for r in fb.collect()})
 
@@ -316,7 +338,7 @@ def test_state_tables_are_scoped_per_pipeline(spark, tmp_path):
         f"CREATE TABLE {tbl_b} (fp string) USING parquet "
         f"LOCATION '{rec_a['path']}'"
     )
-    resolved = idp._ensure_state_table(spark, idp.read_state(out_b)["compaction"])
+    resolved = idp._ensure_state_table(spark, ticks.read_state(out_b, idp.STATE_FILE)["compaction"])
     assert resolved == tbl_b
     loc = idp._table_location(spark, tbl_b)
     assert idp._same_location(loc, rec_b["path"]), loc
@@ -369,8 +391,8 @@ def test_incremental_span_dedup_matches_batch_and_compacts(spark, tmp_path):
             assert rec is not None and rec["through_tick"] == 3
 
     # state read after compaction: one gen dir + span dirs 4..5 only
-    state = idp.read_state(out, idp.SPAN_STATE_FILE)
-    dirs = idp._prior_span_dirs(out, state)
+    state = ticks.read_state(out, idp.SPAN_STATE_FILE)
+    dirs = ticks.live_dirs(out, state, "spans", "n_spans_kept")
     assert len(dirs) == 1 + 2, dirs
     assert "span_state/gen0000" in dirs[0]
 
@@ -391,12 +413,12 @@ def test_incremental_span_dedup_matches_batch_and_compacts(spark, tmp_path):
 
     # crash-retry: rewind the manifest past the last run and re-tick —
     # identical output directory contents (exactly-once)
-    state = idp.read_state(out, idp.SPAN_STATE_FILE)
+    state = ticks.read_state(out, idp.SPAN_STATE_FILE)
     last = state["runs"].pop()
     # each land() stages ONE coalesced part file, so the last tick
     # contributed exactly one processed file
     state["processed_files"] = state["processed_files"][:-1]
-    idp._commit_state(out, state, idp.SPAN_STATE_FILE)
+    ticks.commit(out, state, idp.SPAN_STATE_FILE)
     rerun = idp.span_dedup_tick(spark, src, out, span_tokens=10)
     assert rerun is not None and rerun["tick"] == last["tick"]
     assert rerun["n_emitted"] == last["n_emitted"]

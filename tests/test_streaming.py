@@ -56,8 +56,8 @@ def test_stream_router_equals_batch_router(spark, staged_pages, tmp_path_factory
     checks = check_routed_equality(spark, pages, {n: f"{out}/{n}" for n in names})
     assert all(checks.values()), checks
     # each streaming sink == the multi-mode batch sink of the same name:
-    # same column names (decoded fields, html only in the deadletter)
-    # and the same url set
+    # same column names (decoded fields, html only in the deadletter) plus
+    # the batch_id partition column, and the same url set
     batch = spec.run_pipeline(spark, spec.PipelineSpec(
         source_path=src, out_dir=str(tmp_path_factory.mktemp("batch_out")),
         routes=[spec.RouteRule(*r) for r in ROUTES],
@@ -65,7 +65,7 @@ def test_stream_router_equals_batch_router(spark, staged_pages, tmp_path_factory
     for name in names:
         got = spark.read.parquet(f"{out}/{name}")
         want = spark.read.parquet(batch.paths[name])
-        assert sorted(got.columns) == sorted(want.columns), name
+        assert sorted(got.columns) == sorted(want.columns + ["batch_id"]), name
         assert got.select("url").exceptAll(want.select("url")).isEmpty(), name
         assert want.select("url").exceptAll(got.select("url")).isEmpty(), name
 
@@ -86,6 +86,40 @@ def test_stream_checkpoint_resume_no_reprocess(spark, staged_pages, tmp_path_fac
     )
     q2.awaitTermination(120)
     assert spark.read.parquet(f"{out}/sink_en").count() == n1
+
+
+def test_stream_replayed_batch_adds_no_rows(spark, staged_pages, tmp_path_factory):
+    """foreachBatch is at-least-once: a micro-batch whose commit was lost
+    (a crash after its sink writes) runs again on restart, with the same
+    batch_id. It must rewrite its own output, not add rows to it."""
+    import os
+
+    src, _ = staged_pages
+    out = str(tmp_path_factory.mktemp("replay_out"))
+    ckpt = str(tmp_path_factory.mktemp("replay_ckpt"))
+    names = [r[0] for r in ROUTES] + ["deadletter"]
+
+    def drain():
+        q = runner.run_streaming_pipeline(
+            spark, src, fixtures.PAGES_SCHEMA, out, ckpt, ROUTES,
+            max_files_per_trigger=3,
+        )
+        q.awaitTermination(120)
+        return sum(int(p.numInputRows) for p in q.recentProgress)
+
+    drain()
+    first = {n: spark.read.parquet(f"{out}/{n}").count() for n in names}
+    assert sum(first.values()) == 800
+    # lose the last batch's commit: the restart replays that batch
+    last = max(int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit())
+    assert last >= 1
+    os.remove(f"{ckpt}/commits/{last}")
+    os.remove(f"{ckpt}/commits/.{last}.crc")  # else the restart fails on the orphan checksum
+    assert drain() > 0  # the restart replayed the batch
+    for n in names:
+        sink = spark.read.parquet(f"{out}/{n}")
+        assert sink.count() == first[n], n
+        assert sink.select("url").distinct().count() == first[n], n
 
 
 def test_windowed_counts_stream_equals_batch(spark, staged_pages, tmp_path_factory):
