@@ -11,11 +11,12 @@ Layout
 - ``session``      SparkSession builder with scale-tuned confs
 - ``oracle_extract`` pure-Python reference extractor (byte-identity oracle)
 - ``fixtures``     deterministic synthetic pages + dimension tables
-- ``sources``      table scans, replay source, catalog shim
-- ``functions``    parse UDFs, text analysis, dedup, similarity
-- ``operators``    enrich joins, fan-out router, aggregates, windows, skew
-- ``plans``        declarative pipeline spec compiler + lineage manifests
-- ``streaming``    structured-streaming runner (foreachBatch router)
+- ``sources``      Iceberg/parquet catalog shim (kept; no sink uses it yet)
+- ``functions``    parse UDFs, text analysis, dedup, similarity, curation
+- ``operators``    enrich joins, aggregates, top-k windows, salted skew ops
+- ``plans``        pipeline spec + router, lineage manifests, tick engine
+- ``streaming``    foreachBatch runner (the batch router per micro-batch),
+                   progress listener + Prometheus export
 """
 
 __version__ = "0.1.0"

@@ -235,24 +235,6 @@ def dim_lang(spark: SparkSession) -> DataFrame:
     return spark.sql(f"SELECT * FROM {DIM_LANG_SQL}")
 
 
-def dim_domain(spark: SparkSession) -> DataFrame:
-    """One row per synth_pages domain; ~5% of page domains deliberately
-    absent (every 13th) to exercise left-join nulls + anti-join deadletter."""
-    rows = [
-        (
-            f"domain{i:02d}.test",
-            ["news", "blog", "shop", "docs"][i % 4],
-            ["us", "fr", "de", "cn", "es"][i % 5],
-            i % 3 + 1,
-        )
-        for i in range(N_DOMAINS)
-        if i % 13 != 7
-    ]
-    return spark.createDataFrame(
-        rows, "domain string, category string, country string, tier int"
-    )
-
-
 #: Inline VALUES form, shared by dim_source and the DuckDB oracle.
 DIM_SOURCE_SQL = (
     "(VALUES "

@@ -644,7 +644,11 @@ def connected_components(
     spark = edges.sparkSession
     if n_sym <= small_graph_edges:
         # single-task fixpoint: same min-label + pointer-jump algorithm,
-        # vectorized numpy over the one partition (see docstring)
+        # vectorized numpy over the one partition (see docstring). Vertex
+        # ids keep their column type; for strings, numpy's code-point
+        # order is Spark's UTF-8 byte order, so both paths pick one root.
+        id_type = sym.schema["a"].dataType.simpleString()
+
         def _labels_one_task(batches):
             import numpy as np
             import pandas as pd
@@ -654,8 +658,7 @@ def connected_components(
                 aa.append(pdf["a"].to_numpy())
                 bb.append(pdf["b"].to_numpy())
             if not aa:
-                yield pd.DataFrame({"id": pd.Series(dtype="int64"),
-                                    "root": pd.Series(dtype="int64")})
+                yield pd.DataFrame({"id": [], "root": []})
                 return
             a = np.concatenate(aa)
             b = np.concatenate(bb)
@@ -674,13 +677,10 @@ def connected_components(
                 lbl = lbl[lbl]
                 if np.array_equal(lbl, prev):
                     break
-            yield pd.DataFrame({
-                "id": verts.astype("int64"),
-                "root": verts[lbl].astype("int64"),
-            })
+            yield pd.DataFrame({"id": verts, "root": verts[lbl]})
 
         out = sym.coalesce(1).mapInPandas(
-            _labels_one_task, "id long, root long"
+            _labels_one_task, f"id {id_type}, root {id_type}"
         ).localCheckpoint(eager=True)
         sym.unpersist()
         return out

@@ -9,12 +9,9 @@ typed struct comes back. No per-row Python UDFs anywhere (BASELINE.json
 input_hint; enforced by tests/test_plans.py asserting ArrowEvalPython and
 never BatchEvalPython in physical plans).
 
-Two tiers (SURVEY.md §4.3.1 — Catalyst cannot prune *inside* a UDF, so we
-split it ourselves):
-  - ``parse_light``  — header probe on the first KB (routing metadata only)
-  - ``parse_full``   — full field extraction (title/text/links/charset)
-Branches of the DAG that only route raw bytes never invoke parse_full,
-mirroring the reference's lazy passthrough decode.
+``parse_full`` extracts every field (title/text/links/charset) in one
+walk. Catalyst cannot prune *inside* a UDF (SURVEY.md §4.3.1), so the
+struct comes back whole and downstream selects drop the unused fields.
 """
 
 from __future__ import annotations
@@ -46,12 +43,6 @@ PARSE_SCHEMA = StructType([
     # metrics.go upstream: decode + project measurements in one walk):
     StructField("n_tokens", IntegerType()),
     StructField("simhash", LongType()),
-])
-
-PARSE_LIGHT_SCHEMA = StructType([
-    StructField("charset", StringType()),
-    StructField("n_bytes", LongType()),
-    StructField("looks_html", BooleanType()),
 ])
 
 
@@ -93,14 +84,6 @@ def parse_lenient(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     re-running an archived tap through an updated decoder)."""
     for html in batches:
         yield _extract_batch(html, lenient=True)
-
-
-@pandas_udf(PARSE_LIGHT_SCHEMA)
-def parse_light(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """Header-only probe — cheap routing metadata (SURVEY.md §4.3.1)."""
-    for html in batches:
-        rows = [oracle_extract.extract_light(p) for p in html]
-        yield pd.DataFrame(rows, columns=[f.name for f in PARSE_LIGHT_SCHEMA.fields])
 
 
 def with_parsed(df, html_col: str = "html", out: str = "parsed", udf=None):

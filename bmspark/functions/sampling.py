@@ -40,13 +40,6 @@ SAMPLE_BUCKET_SQL = (
 )
 
 
-def hash_sample(
-    df: DataFrame, key: str, fraction: float, salt: str = "sample"
-) -> DataFrame:
-    """Keep a deterministic ``fraction`` of rows keyed on ``key``."""
-    return df.filter(sample_bucket(key, salt) < int(round(fraction * _BUCKETS)))
-
-
 def stratified_sample(
     df: DataFrame,
     strata_col: str,

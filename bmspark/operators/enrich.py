@@ -58,48 +58,6 @@ def split_matched(
     return matched, unmatched
 
 
-def hybrid_dim_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    head_size: int = 1_000_000,
-    how: str = "left",
-) -> DataFrame:
-    """Broadcast-head / shuffle-tail join for dims too large to broadcast
-    whole (docs/SCALE.md enrich disposition): the ``head_size`` hottest
-    keys BY FACT FREQUENCY are joined via broadcast (covers the Zipf bulk
-    of fact rows with zero shuffle of those rows); only rows with tail
-    keys shuffle. Equivalent to ``fact.join(dim, key, how)`` — proven by
-    test — at a fraction of the shuffle volume whenever the key
-    distribution is skewed.
-
-    The hot-key list is computed from a fact aggregation (one partial-agg
-    shuffle of key counts, tiny vs shuffling fact rows); at a real
-    deployment feed it from yesterday's counts instead.
-    """
-    hot = (
-        fact.groupBy(key)
-        .count()
-        .orderBy(F.desc("count"), key)
-        .limit(head_size)
-        .select(key)
-    )
-    dim_head = dim.join(F.broadcast(hot), on=key, how="left_semi")
-    fact_head = fact.join(F.broadcast(hot), on=key, how="left_semi")
-    fact_tail = fact.join(F.broadcast(hot), on=key, how="left_anti")
-    joined_head = fact_head.join(F.broadcast(dim_head), on=key, how=how)
-    joined_tail = fact_tail.hint("merge").join(dim, on=key, how=how)
-    return joined_head.unionByName(joined_tail)
-
-
-def assert_broadcast_plan(df: DataFrame) -> None:
-    """Plan assertion used by tests: the physical plan must contain a
-    BroadcastHashJoin (SURVEY.md §5.2.6)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if "BroadcastHashJoin" not in plan:
-        raise AssertionError(f"expected BroadcastHashJoin in plan:\n{plan}")
-
-
 # ---------------------------------------------------------------------------
 # Range / theta joins (SURVEY.md J5-J6) — banded equi-join scale path
 # ---------------------------------------------------------------------------

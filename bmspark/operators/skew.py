@@ -18,31 +18,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def choose_salt_buckets(
-    df: DataFrame,
-    key: str,
-    target_rows_per_task: int = 5_000_000,
-    sample_fraction: float = 0.001,
-    max_buckets: int = 256,
-) -> int:
-    """Pick the salt fan-out from the data instead of a constant: sample
-    the key distribution, estimate the hottest key's row count, and size
-    buckets so the hot key's share per reducer stays near
-    ``target_rows_per_task``. One cheap sampled aggregation — at 10^12
-    rows a 0.1% sample is still 10^9 rows, so cap the sample absolutely
-    via fraction AND use the count-scaled estimate.
-    """
-    sampled = df.sample(fraction=sample_fraction, seed=42)
-    top = (
-        sampled.groupBy(key).count().orderBy(F.desc("count")).limit(1).collect()
-    )
-    if not top:
-        return 1
-    est_hot_rows = int(top[0]["count"] / sample_fraction)
-    buckets = max(1, est_hot_rows // target_rows_per_task)
-    return int(min(max_buckets, buckets))
-
-
 def salt_col(unique: str | Column, buckets: int) -> Column:
     c = F.col(unique) if isinstance(unique, str) else unique
     return F.pmod(F.xxhash64(c), F.lit(buckets)).cast("int")

@@ -102,20 +102,3 @@ def extract(html: bytes | None, lenient: bool = False) -> dict:
         "n_bytes": len(raw),
         "parse_ok": ok,
     }
-
-
-def extract_light(html: bytes | None) -> dict:
-    """Cheap header-only probe (first KB): domain-independent metadata
-    without paying for full text extraction. Mirrors the reference's lazy
-    decode — outputs that only need routing metadata never run the full
-    codec (codec dispatch in the output path, upstream). SURVEY.md §4.3.1.
-    """
-    if html is None or len(html) == 0:
-        return {"charset": None, "n_bytes": 0, "looks_html": False}
-    head = bytes(html[:1024])
-    charset_m = _CHARSET_RE.search(head)
-    return {
-        "charset": charset_m.group(1).decode("ascii", errors="replace").lower() if charset_m else None,
-        "n_bytes": len(html),
-        "looks_html": head.lstrip()[:1].startswith(b"<"),
-    }

@@ -317,19 +317,35 @@ def span_dedup_tick(
             F.ceil(F.size(_tokens(text_col)) / F.lit(span_tokens))
             .cast("long").alias("n_spans"),
         )
-        out_docs = totals.join(rebuilt, on="doc_id")  # inner: n_kept >= 1
+        # the run record's counts ride on the two writes as Observations.
+        # Left join, so the observed frame holds every input doc; the
+        # filter then keeps the docs with a surviving span (n_kept >= 1),
+        # which is the inner join
+        docs_obs = Observation(f"span_tick_docs_{tick}")
+        spans_obs = Observation(f"span_tick_spans_{tick}")
+        out_docs = (
+            totals.join(rebuilt, on="doc_id", how="left")
+            .observe(docs_obs, F.count(F.lit(1)).alias("n_docs_in"),
+                     F.count("n_kept").alias("n_emitted"))
+            .filter(F.col("n_kept").isNotNull())
+        )
 
         tick_dir = ticks.tick_dir(out_dir, tick)
         span_dir = ticks.tick_dir(out_dir, tick, "spans")
         out_docs.select("doc_id", "text", "n_spans", "n_kept").write.mode(
             "overwrite"
         ).parquet(tick_dir)
-        tick_spans.select("h").write.mode("overwrite").parquet(span_dir)
+        (
+            tick_spans.select("h")
+            .observe(spans_obs, F.count(F.lit(1)).alias("n"))
+            .write.mode("overwrite")
+            .parquet(span_dir)
+        )
 
         return {
-            "n_docs_in": docs.count(),
-            "n_emitted": spark.read.parquet(tick_dir).count(),
-            "n_spans_kept": spark.read.parquet(span_dir).count(),
+            "n_docs_in": docs_obs.get["n_docs_in"],
+            "n_emitted": docs_obs.get["n_emitted"],
+            "n_spans_kept": spans_obs.get["n"],
             "paths": [tick_dir, span_dir],
         }
 

@@ -76,15 +76,21 @@ def commit_manifest(
         "committed_at": time.time(),
         "version": 1,
     }
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, MANIFEST + ".tmp")
-    final = os.path.join(path, MANIFEST)
+    write_json_atomic(path, MANIFEST, manifest)
+    return manifest
+
+
+def write_json_atomic(dir_path: str, name: str, obj: dict) -> None:
+    """Write ``obj`` as ``dir_path/name``: a ``.tmp`` sibling, fsync,
+    then ``os.replace``. The fsync makes the commit durable and the
+    rename makes it atomic, so a crash leaves the old file or none."""
+    os.makedirs(dir_path, exist_ok=True)
+    tmp = os.path.join(dir_path, name + ".tmp")
     with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+        json.dump(obj, f, indent=1, sort_keys=True)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, final)
-    return manifest
+    os.replace(tmp, os.path.join(dir_path, name))
 
 
 def read_manifest(path: str) -> dict | None:

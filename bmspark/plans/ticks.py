@@ -4,10 +4,11 @@ A tick reads the out_dir's state JSON, lists the source's data files and
 subtracts ``processed_files`` (nothing new → no tick), numbers itself
 ``len(runs)``, lets a body overwrite ``ticks/<n>`` (and any sibling
 ``<sub>/<n>``), then appends the body's run record and commits the state
-LAST by fsync and atomic rename. A crash before the commit leaves the
-state as it was, so the retry gets the same number and overwrites the
-same directories: no tick is ever emitted twice. Every kind writes
-``ticks/<n>``, so an out_dir holds ONE tick state.
+LAST by fsync and atomic rename (``lineage.write_json_atomic``). A crash
+before the commit leaves the state as it was, so the retry gets the same
+number and overwrites the same directories: no tick is ever emitted
+twice. Every kind writes ``ticks/<n>``, so an out_dir holds ONE tick
+state.
 
 Listing is O(files) metadata; the subtraction is a driver-side set lookup
 on file paths (~10^7 at the 10^12-doc design point), not a Spark job.
@@ -24,6 +25,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bmspark.plans import lineage
+
 
 def read_state(out_dir: str, name: str) -> dict:
     p = os.path.join(out_dir, name)
@@ -31,16 +34,6 @@ def read_state(out_dir: str, name: str) -> dict:
         return {"processed_files": [], "runs": []}
     with open(p) as f:
         return json.load(f)
-
-
-def commit(out_dir: str, state: dict, name: str) -> None:
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = os.path.join(out_dir, name + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(state, f, indent=1, sort_keys=True)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(out_dir, name))
 
 
 def new_files(spark: SparkSession, source: str, state: dict) -> list[str]:
@@ -99,7 +92,7 @@ def run_tick(
     # arrival order, not sorted: a rewind by [:-k] must drop the newest
     state["processed_files"] = state["processed_files"] + new
     state["runs"].append(run)
-    commit(out_dir, state, name)
+    lineage.write_json_atomic(out_dir, name, state)
     return run
 
 
@@ -154,5 +147,5 @@ def compact(
     else:
         folded.write.mode("overwrite").parquet(path)
     state["compaction"] = record
-    commit(out_dir, state, name)
+    lineage.write_json_atomic(out_dir, name, state)
     return record

@@ -16,6 +16,11 @@ Partitioning policy for the 10^12-doc design point, either backend:
 ``(dt = days(warc_ts)) × (domain_bucket = bucket(B, domain))`` — bounded
 partition count (days × B), hot domains spread over hash buckets, time
 pruning for typical queries.
+
+Pipeline sinks do not write through this shim: ``run_pipeline``
+partitions them by ``PipelineSpec.partition_cols`` (``dt``). Routing
+sinks here would change the sink layout, so the shim stays on the keep
+list in docs/SCALE.md until a change decides that.
 """
 
 from __future__ import annotations
@@ -83,135 +88,6 @@ def write_table(df: DataFrame, identifier: str, mode: str = "overwrite") -> None
         .partitionBy("dt", "domain_bucket")
         .parquet(identifier)
     )
-
-
-def write_table_sorted(
-    df: DataFrame,
-    identifier: str,
-    sort_cols: list[str],
-    n_files: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Clustered layout for data skipping: range-repartition on the sort
-    keys so each output file covers a narrow, disjoint key range, then
-    sort within files so parquet row-group min/max stats are tight. A
-    point/range predicate on the sort keys then skips whole files via
-    footer stats — the parquet-fallback analog of Iceberg's sort order /
-    Z-order table property. (Verified by footer inspection in
-    tests/test_catalog.py::test_sorted_write_gives_disjoint_file_ranges.)
-    """
-    (
-        df.repartitionByRange(n_files, *[F.col(c) for c in sort_cols])
-        .sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
-        .parquet(identifier)
-    )
-
-
-#: bits per dimension in the interleaved Z-order key (2 dims × 16 → 32-bit key)
-_Z_BITS = 16
-
-
-def zorder_key(cols: list[str], ranges: dict[str, tuple[float, float]]):
-    """Interleaved-bit Z-order key over numeric columns — multi-dimensional
-    clustering so range predicates on ANY of the columns skip files, not
-    just the first sort key (the parquet-fallback analog of Iceberg/Delta
-    ZORDER BY). Each column is min-max scaled to ``_Z_BITS`` bits using
-    the provided ranges, then the bits are interleaved column-round-robin
-    (bit i of column j lands at position i·n_cols + j). Pure JVM
-    shift/mask expressions — whole-stage codegen, no Python.
-
-    Bits per dimension shrink as dimensions grow (min(_Z_BITS, 62 // n))
-    so the interleaved key NEVER reaches bit 63 — shifting into the long
-    sign bit would invert the sort order for high-range values. NULL or
-    missing range bounds default to (0.0, 1.0) (empty input / all-NULL
-    column): every value then saturates to one bucket, which is correct
-    (there is nothing to cluster)."""
-    n = len(cols)
-    if n == 0:
-        raise ValueError("zorder_key needs at least one column")
-    bits = min(_Z_BITS, 62 // n)
-    if bits < 1:
-        raise ValueError(f"too many z-order columns ({n}): <1 bit per dim")
-    scaled = []
-    for c in cols:
-        lo, hi = ranges.get(c) or (0.0, 1.0)
-        if lo is None or hi is None:
-            lo, hi = 0.0, 1.0
-        span = (hi - lo) or 1.0
-        s = F.floor(
-            (F.col(c).cast("double") - F.lit(float(lo)))
-            / F.lit(float(span))
-            * F.lit(float((1 << bits) - 1))
-        ).cast("long")
-        # clamp: values outside the provided range (late data) saturate
-        s = F.greatest(F.lit(0), F.least(s, F.lit((1 << bits) - 1)))
-        scaled.append(s)
-    key = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, s in enumerate(scaled):
-            bit = F.shiftright(s, i).bitwiseAND(F.lit(1))
-            key = key + F.shiftleft(bit, i * n + j)
-    return key
-
-
-def write_table_zordered(
-    df: DataFrame,
-    identifier: str,
-    zorder_cols: list[str],
-    n_files: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered layout: range-repartition + sort on the
-    interleaved key so EVERY z-order column's per-file min/max range is
-    narrow (~span/2^(bits_allocated)) — point/range predicates on any of
-    them skip files via footer stats. With k files and 2 dims each file
-    covers ≈ span/√k of each dimension, vs a single-column sort where the
-    second column's per-file range stays the FULL span. (Verified by
-    footer inspection in tests/test_catalog.py.)
-
-    The min/max scaling ranges come from one bounded 1-row aggregate —
-    a documented exception to the no-driver-action rule (same class as
-    skew.py's top-key sample): 2k doubles cross the driver, not data. At
-    10^12 rows reuse the previous write's ranges instead (they drift
-    slowly) or take them from table-level metadata."""
-    aggs = []
-    for c in zorder_cols:
-        aggs += [F.min(F.col(c).cast("double")).alias(f"__lo_{c}"),
-                 F.max(F.col(c).cast("double")).alias(f"__hi_{c}")]
-    row = df.agg(*aggs).first()
-    ranges = {c: (row[f"__lo_{c}"], row[f"__hi_{c}"]) for c in zorder_cols}
-    key = zorder_key(zorder_cols, ranges)
-    (
-        df.withColumn("__zkey", key)
-        .repartitionByRange(n_files, F.col("__zkey"))
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode(mode)
-        .parquet(identifier)
-    )
-
-
-def file_column_ranges(path: str, column: str) -> list[tuple]:
-    """(min, max) of ``column`` per data file, from parquet footers only."""
-    import pyarrow.parquet as pq
-
-    out = []
-    for dirpath, _d, files in os.walk(path):
-        for fn in sorted(files):
-            if not fn.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(dirpath, fn))
-            idx = md.schema_arrow.get_field_index(column)
-            stats = [
-                md.metadata.row_group(i).column(idx).statistics
-                for i in range(md.metadata.num_row_groups)
-            ]
-            stats = [s for s in stats if s is not None and s.has_min_max]
-            if not stats:  # empty file or stats disabled — nothing to skip on
-                continue
-            out.append((min(s.min for s in stats), max(s.max for s in stats)))
-    return out
 
 
 def read_table(spark: SparkSession, identifier: str) -> DataFrame:

@@ -79,12 +79,6 @@ class MetricsTableListener(StreamingQueryListener):
                 f.write(json.dumps(row) + "\n")
 
 
-def read_metrics(spark, metrics_dir: str):
-    """The metamonitor's query surface: the pipeline's own counters as a
-    DataFrame."""
-    return spark.read.json(os.path.join(metrics_dir, "metrics.jsonl"))
-
-
 # ---------------------------------------------------------------------------
 # Prometheus exposition export (metrics_influx.go / metamonitor analog)
 # ---------------------------------------------------------------------------

@@ -57,6 +57,14 @@ def check_routed_equality(spark, input_df, sinks, key_cols=("url",)) -> dict[str
     return checks
 
 
+def assert_broadcast_plan(df) -> None:
+    """The physical plan must contain a BroadcastHashJoin (SURVEY.md
+    §5.2.6)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "BroadcastHashJoin" not in plan:
+        raise AssertionError(f"expected BroadcastHashJoin in plan:\n{plan}")
+
+
 def sink_paths(result) -> dict[str, str]:
     """A PipelineResult's routed sinks (routes + deadletter) in either
     route mode: every path except the aggregate and the single_pass

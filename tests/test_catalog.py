@@ -45,28 +45,6 @@ def test_partition_pruning_on_read(spark, table):
     assert "dt" in seg, seg
 
 
-def test_sorted_write_gives_disjoint_file_ranges(spark, tmp_path):
-    """Range-partitioned + sorted layout: per-file (min,max) warc_ts
-    ranges must be essentially disjoint, so ts predicates skip whole
-    files via footer stats."""
-    path = str(tmp_path / "sorted_tbl")
-    pages = fixtures.synth_pages(spark, 2000, partitions=8)
-    catalog.write_table_sorted(pages, path, sort_cols=["warc_ts"], n_files=8)
-    ranges = sorted(catalog.file_column_ranges(path, "warc_ts"))
-    assert len(ranges) >= 4
-    overlaps = sum(
-        1 for (a, b), (c, d) in zip(ranges, ranges[1:]) if c < b
-    )
-    assert overlaps == 0, ranges
-    # and a time predicate actually prunes: scanning one hour touches a
-    # strict subset of files worth of rows
-    got = spark.read.parquet(path).filter(
-        (F.col("warc_ts") >= "2024-01-01 10:00:00")
-        & (F.col("warc_ts") < "2024-01-01 11:00:00")
-    )
-    assert 0 < got.count() < 2000
-
-
 def test_bucket_pruning_on_domain_point_lookup(spark, table):
     """Point lookups on a domain can prune to one bucket by computing the
     bucket id driver-side — the parquet fallback's stand-in for Iceberg
@@ -123,78 +101,3 @@ def test_iceberg_writer_plan_constructs(spark):
     plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(ddl)
     s = plan.toString()
     assert "days(warc_ts)" in s and f"bucket({cat.DOMAIN_BUCKETS}, domain)" in s
-
-
-def test_zorder_write_skips_on_both_dimensions(spark, tmp_path):
-    """Z-order clustering (write_table_zordered): with two INDEPENDENT
-    uniform columns, a single-column sort gives tight per-file ranges on
-    the sort key but FULL-span ranges on the other column; the
-    interleaved z-key gives narrow ranges on BOTH — the property that
-    makes predicates on either column skip files via footer stats."""
-    import pyspark.sql.functions as F
-
-    from bmspark.sources import catalog as cat
-
-    n = 40_000
-    df = spark.range(n).select(
-        (F.xxhash64(F.col("id")) % 10_000).alias("x"),
-        (F.xxhash64(F.col("id") + 7_000_000) % 10_000).alias("y"),
-    ).filter("x >= 0 AND y >= 0")  # keep it simple: non-negative uniform
-
-    xs = str(tmp_path / "xsort")
-    zs = str(tmp_path / "zorder")
-    cat.write_table_sorted(df, xs, ["x"], n_files=16)
-    cat.write_table_zordered(df, zs, ["x", "y"], n_files=16)
-
-    def mean_width(path, col):
-        ranges = cat.file_column_ranges(path, col)
-        assert ranges
-        return sum(hi - lo for lo, hi in ranges) / len(ranges)
-
-    span = 10_000
-    # sanity: x-sort is tight on x, blind on y
-    assert mean_width(xs, "x") < span * 0.2
-    assert mean_width(xs, "y") > span * 0.8
-    # z-order: BOTH dimensions much narrower than the blind full span
-    assert mean_width(zs, "x") < span * 0.5
-    assert mean_width(zs, "y") < span * 0.5
-    # row fidelity
-    a = spark.read.parquet(zs).agg(F.sum("x"), F.sum("y"), F.count("*")).first()
-    b = df.agg(F.sum("x"), F.sum("y"), F.count("*")).first()
-    assert tuple(a) == tuple(b)
-
-
-def test_zorder_key_many_dims_stays_off_sign_bit(spark):
-    """4 z-order columns: bits per dim scale down (62 // n) so the key
-    never shifts into the long sign bit — key order stays ascending with
-    the dominant dimension even at range max."""
-    from bmspark.sources import catalog as cat
-
-    cols = ["a", "b", "c", "d"]
-    ranges = {c: (0.0, 100.0) for c in cols}
-    df = spark.createDataFrame(
-        [(0.0, 0.0, 0.0, 0.0), (50.0, 50.0, 50.0, 50.0),
-         (100.0, 100.0, 100.0, 100.0)],
-        "a double, b double, c double, d double",
-    )
-    keys = [r.k for r in
-            df.select(cat.zorder_key(cols, ranges).alias("k")).collect()]
-    assert keys == sorted(keys)
-    assert all(k >= 0 for k in keys)  # sign bit untouched
-
-    with pytest.raises(ValueError):
-        cat.zorder_key([f"c{i}" for i in range(70)],
-                       {f"c{i}": (0.0, 1.0) for i in range(70)})
-    with pytest.raises(ValueError):
-        cat.zorder_key([], {})
-
-
-def test_zorder_write_empty_df_defaults_ranges(spark, tmp_path):
-    """Empty input: min/max aggregate returns NULLs; the write must not
-    raise (ranges default to (0,1))."""
-    from bmspark.sources import catalog as cat
-
-    df = spark.createDataFrame([], "x double, y double")
-    out = str(tmp_path / "zempty")
-    cat.write_table_zordered(df, out, ["x", "y"], n_files=2)
-    assert spark.read.parquet(out).count() == 0

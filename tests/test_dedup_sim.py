@@ -431,7 +431,7 @@ def test_connected_components_adversarial_chain_log_rounds(spark):
 def test_connected_components_small_graph_path_equivalence(spark):
     """The single-task small-graph path (round 8) must produce the
     exact labeling of the distributed pointer-doubling path on chain,
-    star, triangle-plus-isolates and random graphs."""
+    star, triangle-plus-isolates and random graphs, and on string ids."""
     import random
 
     rnd = random.Random(7)
@@ -450,6 +450,15 @@ def test_connected_components_small_graph_path_equivalence(spark):
                 for r in dedup.connected_components(
                     df, small_graph_edges=0).collect()}
         assert small == dist
+
+    # string vertex ids: the small path keeps the id type
+    df = spark.createDataFrame([("a", "b"), ("b", "c"), ("x", "y")],
+                               "id_a string, id_b string")
+    small = dedup.connected_components(df)
+    dist = dedup.connected_components(df, small_graph_edges=0)
+    assert small.dtypes == dist.dtypes
+    assert sorted(map(tuple, small.collect())) == sorted(map(tuple, dist.collect())) == [
+        ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")]
 
 
 def test_winnow_stop_fingerprint_cap(spark):

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bmspark.plans import incremental_dedup as idp
+from bmspark.plans import lineage
 from bmspark.plans import ticks
 
 
@@ -100,7 +101,7 @@ def test_incremental_dedup_crashed_tick_retry_is_idempotent(spark, staged, tmp_p
     state_before = ticks.read_state(out, idp.STATE_FILE)
     idp.dedup_tick(spark, src, out)
     # simulate the crash: roll the state file back (output stays on disk)
-    ticks.commit(out, state_before, idp.STATE_FILE)
+    lineage.write_json_atomic(out, idp.STATE_FILE, state_before)
 
     run = idp.dedup_tick(spark, src, out)  # the retry
     assert run["tick"] == 1 and run["n_emitted"] == 50
@@ -352,6 +353,49 @@ def test_state_tables_are_scoped_per_pipeline(spark, tmp_path):
     assert idp.dedup_tick(spark, src_b, out_b)["n_emitted"] == 10
 
 
+def test_span_tick_counts_come_from_its_writes(spark, tmp_path, monkeypatch):
+    """The span tick's run record counts ride on its two writes as
+    Observations: no DataFrame.count runs inside the tick, and the
+    counts equal what the outputs hold when read back — on a tick with
+    new spans, on one whose every span is a repeat (no doc emitted) and
+    with an empty doc in the input."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+
+    def land(tick, rows):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        staging = str(tmp_path / f"cnt{tick}")
+        df.coalesce(1).write.parquet(staging)
+        _arrive(src, staging)
+
+    def rows_in(path):
+        return sum(pq.ParquetFile(f).metadata.num_rows
+                   for f in glob.glob(f"{path}/*.parquet"))
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count ran inside a span tick")
+
+    ticks_in = [
+        [(0, "a b c d e f g h"), (1, "a b c d x y z w"), (2, "")],
+        [(10, "a b c d e f g h"), (11, "x y z w")],  # every span repeats
+    ]
+    for tick, rows in enumerate(ticks_in):
+        land(tick, rows)
+        with monkeypatch.context() as m:
+            # the session's concrete DataFrame class, which overrides count
+            m.setattr(type(spark.range(1)), "count", no_count)
+            run = idp.span_dedup_tick(spark, src, out, span_tokens=4)
+        assert run["tick"] == tick
+        assert run["n_docs_in"] == len(rows)
+        assert run["n_emitted"] == rows_in(ticks.tick_dir(out, tick))
+        assert run["n_spans_kept"] == rows_in(ticks.tick_dir(out, tick, "spans"))
+    assert run["n_emitted"] == 0 and run["n_spans_kept"] == 0
+
+
 def test_incremental_span_dedup_matches_batch_and_compacts(spark, tmp_path):
     """Cross-tick SPAN dedup: with doc_ids increasing across ticks
     (arrival order == id order) the concatenated tick outputs must
@@ -418,7 +462,7 @@ def test_incremental_span_dedup_matches_batch_and_compacts(spark, tmp_path):
     # each land() stages ONE coalesced part file, so the last tick
     # contributed exactly one processed file
     state["processed_files"] = state["processed_files"][:-1]
-    ticks.commit(out, state, idp.SPAN_STATE_FILE)
+    lineage.write_json_atomic(out, idp.SPAN_STATE_FILE, state)
     rerun = idp.span_dedup_tick(spark, src, out, span_tokens=10)
     assert rerun is not None and rerun["tick"] == last["tick"]
     assert rerun["n_emitted"] == last["n_emitted"]

@@ -1,5 +1,5 @@
 """Metamonitor listener (reference: metamonitor.go — the pipeline
-exporting its own counters) + skew auto-tuning."""
+exporting its own counters) + salted aggregation."""
 
 from __future__ import annotations
 
@@ -44,53 +44,20 @@ def test_listener_records_per_batch_counters(spark, tmp_path):
         assert sum(r["num_input_rows"] for r in prog) == 300
         assert all("processed_rows_per_sec" in r for r in prog)
         # and it reads back as a table (the metamonitor's query surface)
-        got = monitor.read_metrics(spark, str(tmp_path / "metrics"))
+        got = spark.read.json(str(tmp_path / "metrics" / "metrics.jsonl"))
         assert got.filter(F.col("event") == "progress").count() == len(prog)
     finally:
         spark.streams.removeListener(listener)
-
-
-def test_choose_salt_buckets_scales_with_skew(spark):
-    pages = fixtures.synth_pages(spark, 4000, partitions=8).withColumn(
-        "domain", F.regexp_extract("url", r"https?://([^/]+)", 1)
-    )
-    # hot domain holds ~28% of rows; with a tiny per-task target the
-    # chooser must fan it out; with a huge target it must not salt at all
-    many = skew.choose_salt_buckets(
-        pages, "domain", target_rows_per_task=100, sample_fraction=0.5
-    )
-    none = skew.choose_salt_buckets(
-        pages, "domain", target_rows_per_task=10_000_000, sample_fraction=0.5
-    )
-    assert many > 4
-    assert none == 1
-
-
-def test_hybrid_dim_join_equals_plain_join(spark):
-    """Broadcast-head/shuffle-tail join ≡ plain join (docs/SCALE.md
-    enrich disposition), on the Zipf-skewed pages/domain distribution."""
-    from bmspark.operators import enrich
-
-    pages = fixtures.synth_pages(spark, 2000, partitions=8).withColumn(
-        "domain", F.regexp_extract("url", r"https?://([^/]+)", 1)
-    ).select("url", "domain", "lang")
-    dim = fixtures.dim_domain(spark)
-    hybrid = enrich.hybrid_dim_join(pages, dim, key="domain", head_size=5)
-    plain = pages.join(dim, on="domain", how="left")
-    assert hybrid.exceptAll(plain).isEmpty() and plain.exceptAll(hybrid).isEmpty()
 
 
 def test_salted_agg_with_chosen_buckets_equals_plain(spark):
     pages = fixtures.synth_pages(spark, 2000, partitions=8).withColumn(
         "domain", F.regexp_extract("url", r"https?://([^/]+)", 1)
     )
-    b = skew.choose_salt_buckets(
-        pages, "domain", target_rows_per_task=50, sample_fraction=0.5
-    )
     salted = skew.salted_agg(
         pages, keys=["domain"],
         aggs=[F.count(F.lit(1)).alias("n")],
-        unique="url", buckets=b,
+        unique="url", buckets=12,
     )
     plain = pages.groupBy("domain").agg(F.count(F.lit(1)).alias("n"))
     assert salted.exceptAll(plain).isEmpty() and plain.exceptAll(salted).isEmpty()

@@ -129,3 +129,29 @@ def test_rows_only_keys_run(spark, key):
     n = df.count()
     assert n >= 0
     assert df.columns
+
+
+def test_approx_distinct_within_hll_tolerance(spark):
+    """agg_approx_distinct accuracy contract (round-2 advice): the HLL
+    estimate must sit within 3·rsd of exact countDistinct per group —
+    the documented tolerance that makes the rows-only driver key an
+    actually-verified operator."""
+    from pyspark.sql import functions as F
+
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    rsd = 0.02
+    both = (
+        ev.groupBy("event_type")
+        .agg(
+            F.approx_count_distinct("user_id", rsd).alias("approx_users"),
+            F.countDistinct("user_id").alias("exact_users"),
+        )
+        .collect()
+    )
+    assert both
+    for r in both:
+        rel_err = abs(r.approx_users - r.exact_users) / max(r.exact_users, 1)
+        assert rel_err <= 3 * rsd, (
+            f"{r.event_type}: approx={r.approx_users} exact={r.exact_users} "
+            f"rel_err={rel_err:.4f} > {3 * rsd}"
+        )

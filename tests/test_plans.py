@@ -5,6 +5,7 @@ Arrow-vectorized, nothing degenerates to a cartesian product."""
 
 from __future__ import annotations
 
+from conftest import assert_broadcast_plan
 from pyspark.sql import functions as F
 
 from bmspark import fixtures
@@ -54,7 +55,7 @@ def test_dim_tables_rows_and_schema(spark):
 def test_broadcast_join_chosen_for_dims(spark):
     pg = fixtures.pages_from_documents(spark, "/root/testdata/sf0.01")
     out = enrich.enrich_broadcast(pg, fixtures.dim_lang(spark), on="lang")
-    enrich.assert_broadcast_plan(out)
+    assert_broadcast_plan(out)
     assert "SortMergeJoin" not in _plan(out)
 
 

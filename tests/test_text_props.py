@@ -84,11 +84,13 @@ def test_hash_sampling_deterministic_and_calibrated(spark):
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     n = d.count()
 
-    s1 = sampling.hash_sample(d, "doc_id", 0.3, salt="a")
+    def sample(salt):
+        return sampling.stratified_sample(
+            d, "lang", {}, key="doc_id", default_fraction=0.3, salt=salt)
+
+    s1 = sample("a")
     ids1 = {r.doc_id for r in s1.select("doc_id").collect()}
-    ids1_again = {r.doc_id for r in
-                  sampling.hash_sample(d, "doc_id", 0.3, salt="a")
-                  .select("doc_id").collect()}
+    ids1_again = {r.doc_id for r in sample("a").select("doc_id").collect()}
     assert ids1 == ids1_again  # bit-for-bit reproducible
 
     # rate calibration: binomial 3σ bound around 0.3
@@ -98,9 +100,7 @@ def test_hash_sampling_deterministic_and_calibrated(spark):
     assert abs(len(ids1) / n - 0.3) < 3 * sigma + 0.01
 
     # independent salts: overlap ≈ 0.3 * 0.3
-    ids2 = {r.doc_id for r in
-            sampling.hash_sample(d, "doc_id", 0.3, salt="b")
-            .select("doc_id").collect()}
+    ids2 = {r.doc_id for r in sample("b").select("doc_id").collect()}
     overlap = len(ids1 & ids2) / n
     assert abs(overlap - 0.09) < 0.06
 
