@@ -133,22 +133,20 @@ def main() -> None:
     # counters ride the single pass (tap countonly mode) and nothing hits
     # disk — on one box only CPU scales with thread count, so this is the
     # honest N-vs-4N proxy (a real 4N cluster scales its disks too).
-    from pyspark.sql import Observation
+    from bmspark.session import observe
 
     def run_countonly():
         enr = spec.build_enriched(spark, pipeline_spec)
-        obs = Observation(f"counts_{time.monotonic_ns()}")
-        aggs = [F.count(F.lit(1)).alias("__input")] + [
-            F.sum(F.when(F.expr(r.predicate), 1).otherwise(0)).alias(r.name)
+        observed, read = observe(enr, __input=F.count(F.lit(1)), **{
+            r.name: F.sum(F.when(F.expr(r.predicate), 1).otherwise(0))
             for r in pipeline_spec.routes
-        ]
-        observed = enr.observe(obs, *aggs)
+        })
         agg_ops.hourly_counters(
             observed.filter(F.col("parse_ok")),
             measures={"total_links": F.sum("n_links"),
                       "total_tokens": F.sum("n_tokens")},
         ).write.format("noop").mode("overwrite").save()
-        res_holder["countonly"] = obs.get
+        res_holder["countonly"] = read()
 
     timed("pipeline_countonly", run_countonly,
           reps=int(os.environ.get("BMSPARK_BENCH_REPS", "3")))

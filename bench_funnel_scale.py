@@ -99,7 +99,6 @@ def worker(cpus: int, n_docs: int, reps: int) -> None:
             gopher_rep=GOPHER_REP_DEFAULTS,
             ccnet_keep={"head": 1.0, "middle": 0.7, "tail": 0.2},
             benchmark_path=bench_tbl,
-            sample=False,
         )
         dt = time.monotonic() - t0
         best = dt if best is None else min(best, dt)

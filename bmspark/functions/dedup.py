@@ -618,12 +618,9 @@ def connected_components(
     graphs take the unchanged distributed path. Equivalence on chain /
     star / random graphs is pinned in tests/test_dedup_sim.py.
     """
-    import time as _time
-
-    from pyspark.sql import Observation
     from pyspark.storagelevel import StorageLevel
 
-    from bmspark.session import scoped_conf
+    from bmspark.session import observe, scoped_conf
 
     # Persist the (static) symmetrized edge list: each round is its own
     # job, and Spark reuses only map-side shuffle output across jobs —
@@ -741,25 +738,13 @@ def connected_components(
             # job, not checkpoint + a separate count. Iterative rounds
             # are job-latency-bound; a job saved per round is the lever
             # that matters (same lesson as the r4 prev-column change).
-            obs = Observation(f"cc_changed_{_time.monotonic_ns()}")
-            new_labels = new_labels.observe(
-                obs,
-                F.sum(
-                    F.when(F.col("root") != F.col("prev"), 1).otherwise(0)
-                ).alias("changed"),
-            ).localCheckpoint(eager=True)
-            try:
-                changed = int(obs.get["changed"] or 0)
-            except Exception:
-                # AQE empty-relation propagation can complete the
-                # observation with an empty row (degenerate zero-edge
-                # inputs) — recompute directly from the checkpointed
-                # partitions, correctness over the saved job
-                changed = new_labels.filter(
-                    F.col("root") != F.col("prev")
-                ).count()
+            new_labels, read = observe(
+                new_labels,
+                changed=F.sum(F.when(F.col("root") != F.col("prev"), 1)),
+            )
+            new_labels = new_labels.localCheckpoint(eager=True)
             labels = new_labels.drop("prev")
-            if changed == 0:
+            if read()["changed"] == 0:
                 sym.unpersist()  # labels are checkpointed — independent now
                 return labels
     sym.unpersist()

@@ -33,11 +33,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bmspark.functions import text
 from bmspark.plans import ticks
+from bmspark.session import observe
 
 STATE_FILE = "_dedup_state.json"
 SPAN_STATE_FILE = "_span_dedup_state.json"
@@ -146,13 +147,9 @@ def dedup_tick(
         for prior_fps in _state_fp_frames(spark, out_dir, state):
             tick_docs = tick_docs.join(prior_fps, on="fp", how="left_anti")
 
-        obs = Observation(f"dedup_tick_{tick}")
-        (
-            tick_docs.observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(ticks.tick_dir(out_dir, tick))
-        )
-        return {"n_new_files": len(new), "n_emitted": obs.get["n"]}
+        tick_docs, read = observe(tick_docs, n=F.count(F.lit(1)))
+        tick_docs.write.mode("overwrite").parquet(ticks.tick_dir(out_dir, tick))
+        return {"n_new_files": len(new), "n_emitted": read()["n"]}
 
     return ticks.run_tick(spark, source_path, out_dir, STATE_FILE, body)
 
@@ -317,37 +314,23 @@ def span_dedup_tick(
             F.ceil(F.size(_tokens(text_col)) / F.lit(span_tokens))
             .cast("long").alias("n_spans"),
         )
-        # the run record's counts ride on the two writes as Observations.
+        # the run record's counts ride on the two writes (observe).
         # Left join, so the observed frame holds every input doc; the
         # filter then keeps the docs with a surviving span (n_kept >= 1),
         # which is the inner join
-        docs_obs = Observation(f"span_tick_docs_{tick}")
-        spans_obs = Observation(f"span_tick_spans_{tick}")
-        out_docs = (
-            totals.join(rebuilt, on="doc_id", how="left")
-            .observe(docs_obs, F.count(F.lit(1)).alias("n_docs_in"),
-                     F.count("n_kept").alias("n_emitted"))
-            .filter(F.col("n_kept").isNotNull())
+        out_docs, read_docs = observe(
+            totals.join(rebuilt, on="doc_id", how="left"),
+            n_docs_in=F.count(F.lit(1)), n_emitted=F.count("n_kept"),
         )
+        out_spans, read_spans = observe(tick_spans.select("h"), n_spans_kept=F.count(F.lit(1)))
 
         tick_dir = ticks.tick_dir(out_dir, tick)
         span_dir = ticks.tick_dir(out_dir, tick, "spans")
-        out_docs.select("doc_id", "text", "n_spans", "n_kept").write.mode(
-            "overwrite"
-        ).parquet(tick_dir)
-        (
-            tick_spans.select("h")
-            .observe(spans_obs, F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(span_dir)
-        )
-
-        return {
-            "n_docs_in": docs_obs.get["n_docs_in"],
-            "n_emitted": docs_obs.get["n_emitted"],
-            "n_spans_kept": spans_obs.get["n"],
-            "paths": [tick_dir, span_dir],
-        }
+        out_docs.filter(F.col("n_kept").isNotNull()).select(
+            "doc_id", "text", "n_spans", "n_kept"
+        ).write.mode("overwrite").parquet(tick_dir)
+        out_spans.write.mode("overwrite").parquet(span_dir)
+        return {**read_docs(), **read_spans(), "paths": [tick_dir, span_dir]}
 
     return ticks.run_tick(spark, source_path, out_dir, SPAN_STATE_FILE, body)
 

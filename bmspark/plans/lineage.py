@@ -76,21 +76,23 @@ def commit_manifest(
         "committed_at": time.time(),
         "version": 1,
     }
-    write_json_atomic(path, MANIFEST, manifest)
+    write_atomic(os.path.join(path, MANIFEST), manifest)
     return manifest
 
 
-def write_json_atomic(dir_path: str, name: str, obj: dict) -> None:
-    """Write ``obj`` as ``dir_path/name``: a ``.tmp`` sibling, fsync,
-    then ``os.replace``. The fsync makes the commit durable and the
-    rename makes it atomic, so a crash leaves the old file or none."""
-    os.makedirs(dir_path, exist_ok=True)
-    tmp = os.path.join(dir_path, name + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(obj, f, indent=1, sort_keys=True)
+def write_atomic(path: str, data: str | dict) -> None:
+    """Write ``data`` to ``path``: a str as is, a dict as sorted JSON.
+    The bytes go to a ``.tmp`` sibling, are fsynced, then
+    ``os.replace``d: the fsync makes the commit durable and the rename
+    makes it atomic, so a crash leaves the old file or none."""
+    if not isinstance(data, str):
+        data = json.dumps(data, indent=1, sort_keys=True)
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    with open(path + ".tmp", "w") as f:
+        f.write(data)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(dir_path, name))
+    os.replace(path + ".tmp", path)
 
 
 def read_manifest(path: str) -> dict | None:

@@ -31,13 +31,14 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field, replace
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from bmspark.functions import parse as parse_fns
 from bmspark.operators import aggregate as agg_ops
 from bmspark.plans import lineage
+from bmspark.session import observe
 
 
 @dataclass
@@ -183,22 +184,13 @@ def label_sinks(
     return enriched.withColumn("__sink", label.otherwise(F.lit(spec.deadletter))), columns
 
 
-def _observe_labels(labeled: DataFrame, names, fp: str):
-    """Per-sink counts as one Observation of conditional sums over the
-    label, riding whatever action next runs over the returned frame.
-    Returns that frame and a function giving (input_count, counts)."""
-    obs = Observation(f"route_{fp}_{time.monotonic_ns()}")
-    observed = labeled.observe(
-        obs,
-        F.count(F.lit(1)).alias("__input"),
-        *[F.sum(F.when(F.col("__sink") == n, 1).otherwise(0)).alias(n) for n in names],
-    )
-
-    def read() -> tuple[int, dict[str, int]]:
-        got = obs.get
-        return got["__input"], {n: int(got[n] or 0) for n in names}
-
-    return observed, read
+def _label_counts(names) -> dict:
+    """The input row count and one conditional sum per sink label, as
+    ``observe`` aggregates."""
+    return {
+        "__input": F.count(F.lit(1)),
+        **{n: F.sum(F.when(F.col("__sink") == n, 1).otherwise(0)) for n in names},
+    }
 
 
 def run_pipeline(
@@ -207,9 +199,11 @@ def run_pipeline(
     pages: DataFrame | None = None,
     parse_udf=None,
 ) -> PipelineResult:
-    """Compile + execute the spec. Returns exact per-sink counts (taken by
-    Observation over the sink label — the metamonitor analog) and writes
-    one lineage manifest per sink."""
+    """Compile + execute the spec. Returns exact per-sink counts and
+    writes one lineage manifest per sink. The counts (the metamonitor
+    analog) are ``session.observe`` sums over the sink label that ride
+    the action materializing the cache; the hourly aggregate's row count
+    rides its write the same way. A metric Spark drops is recomputed."""
     if spec.route_mode == "single_pass":
         other = [r.name for r in spec.routes if r.fmt != "parquet"]
         if other:
@@ -225,10 +219,11 @@ def run_pipeline(
     )
     labeled = labeled.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        observed, read_counts = _observe_labels(labeled, columns, fp)
+        observed, read_counts = observe(labeled, **_label_counts(columns))
         # one cheap action materializes the cache and the counters
         observed.write.format("noop").mode("overwrite").save()
-        input_count, counts = read_counts()
+        counts = read_counts()
+        input_count = counts.pop("__input")
         # lineage must record what was ACTUALLY consumed: for an explicit
         # pages DataFrame (e.g. an incremental tick's new-file subset)
         # that is pages.inputFiles(), not a relisting of source_path
@@ -288,11 +283,9 @@ def run_pipeline(
                     "total_bytes": F.sum("n_bytes"),
                 },
             )
-            obs = Observation(f"agg_{fp}")
-            agg.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(agg_path)
-            counts[spec.aggregate_name] = obs.get["n"]
+            agg, read_agg = observe(agg, n=F.count(F.lit(1)))
+            agg.write.mode("overwrite").parquet(agg_path)
+            counts[spec.aggregate_name] = read_agg()["n"]
             lineage.commit_manifest(
                 agg_path, sink=spec.aggregate_name, row_count=counts[spec.aggregate_name],
                 plan_fingerprint=fp,
@@ -347,13 +340,14 @@ def _run_single_pass(
             paths={"routed": routed_path},
         )
 
-    observed, read_counts = _observe_labels(routed, columns, fp)
+    observed, read_counts = observe(routed, **_label_counts(columns))
     (
         observed.write.mode("overwrite")
         .partitionBy("__sink", *spec.partition_cols)
         .parquet(routed_path)
     )
-    input_count, counts = read_counts()
+    counts = read_counts()
+    input_count = counts.pop("__input")
     lineage.commit_manifest(
         routed_path,
         sink="routed",

@@ -4,7 +4,7 @@ A tick reads the out_dir's state JSON, lists the source's data files and
 subtracts ``processed_files`` (nothing new → no tick), numbers itself
 ``len(runs)``, lets a body overwrite ``ticks/<n>`` (and any sibling
 ``<sub>/<n>``), then appends the body's run record and commits the state
-LAST by fsync and atomic rename (``lineage.write_json_atomic``). A crash
+LAST by fsync and atomic rename (``lineage.write_atomic``). A crash
 before the commit leaves the state as it was, so the retry gets the same
 number and overwrites the same directories: no tick is ever emitted
 twice. Every kind writes ``ticks/<n>``, so an out_dir holds ONE tick
@@ -92,7 +92,7 @@ def run_tick(
     # arrival order, not sorted: a rewind by [:-k] must drop the newest
     state["processed_files"] = state["processed_files"] + new
     state["runs"].append(run)
-    lineage.write_json_atomic(out_dir, name, state)
+    lineage.write_atomic(os.path.join(out_dir, name), state)
     return run
 
 
@@ -147,5 +147,5 @@ def compact(
     else:
         folded.write.mode("overwrite").parquet(path)
     state["compaction"] = record
-    lineage.write_json_atomic(out_dir, name, state)
+    lineage.write_atomic(os.path.join(out_dir, name), state)
     return record

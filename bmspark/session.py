@@ -12,7 +12,8 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 # Confs that matter at the 10^12-doc design point (SURVEY.md §4):
 #  - AQE on: runtime shuffle-partition coalescing, skew-join splitting,
@@ -92,6 +93,33 @@ def get_session(
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def observe(frame: DataFrame, **aggs: Column):
+    """Attach named aggregates (row counts, conditional sums) to ``frame``
+    as one Observation. They fill during the first action that runs the
+    returned frame, so counting costs no job of its own. Returns
+    ``(observed_frame, read)``; after that action ``read()`` gives
+    ``{name: int}`` in ``aggs`` order, a NULL (a sum over no rows) as 0.
+
+    Spark drops the metric when AQE replaces the subtree holding it by an
+    empty relation (a join whose other side ran empty): the observation
+    completes with an empty row and ``Observation.get`` fails. ``read()``
+    then recomputes the same aggregates over ``frame``, one extra job
+    that only such inputs pay."""
+    cols = [a.alias(name) for name, a in aggs.items()]
+    obs = Observation()
+    observed = frame.observe(obs, *cols)
+
+    def read() -> dict[str, int]:
+        try:
+            got = obs.get
+            vals = [got[name] for name in aggs]
+        except (Py4JJavaError, KeyError):
+            vals = list(frame.agg(*cols).first())
+        return {name: int(v or 0) for name, v in zip(aggs, vals)}
+
+    return observed, read
 
 
 def widen_small_scan(df):

@@ -22,6 +22,8 @@ import time
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+from bmspark.plans import lineage
+
 
 class MetricsTableListener(StreamingQueryListener):
     """Appends one JSON line per micro-batch to ``<dir>/metrics.jsonl``
@@ -146,11 +148,8 @@ def prometheus_text(
 
 
 def export_prometheus(path: str, **kwargs) -> str:
-    """Write prometheus_text(**kwargs) atomically to ``path``; returns
-    the rendered text."""
+    """Write prometheus_text(**kwargs) to ``path`` with
+    ``lineage.write_atomic`` (fsync + rename); returns the text."""
     text = prometheus_text(**kwargs)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(text)
-    os.replace(tmp, path)
+    lineage.write_atomic(path, text)
     return text

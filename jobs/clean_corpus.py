@@ -62,18 +62,20 @@ tests/test_clean_corpus.py).
 Scale notes: metrics+filters are one codegen'd scan pass; exact dedup
 shuffles (hash, id) only; winnow clustering joins on 60-bit content
 hashes (uniform keys); sampling is a pure filter. Funnel counts are
-``observe()`` metrics (CollectMetrics accumulators) that ride the
+``session.observe`` metrics (CollectMetrics accumulators) that ride the
 actions the funnel must run anyway — the connected-components rounds,
-the lineage-boundary checkpoints, the final write — so auditing adds
-ZERO extra jobs (VERDICT r6 #3: the per-stage count() chain serialized
+the lineage-boundary checkpoints, the final write — so auditing adds no
+job of its own (VERDICT r6 #3: the per-stage count() chain serialized
 the DAG and idled a 4N fleet; measured 2→8 scaling efficiency 0.33).
+The exception is a metric Spark drops: when AQE replaces the subtree
+holding an observation by an empty relation (a corpus with no near-dup
+pair empties the whole clustering input), that stage's count is
+recomputed with one job of its own.
 The early per-doc filter stages (quality floor, repetition ceiling,
 Gopher ruleset, Gopher rep-ngrams) are folded into ONE pass: their
 metric frames left-join the quality-filtered corpus once and a single
 conjunctive filter applies them all, with cumulative stage counts as
-conditional sums in one observation. ``--no-audit-counts`` drops even
-the intermediate observation bookkeeping (input/output stay — they are
-free and the manifest needs the row count).
+conditional sums in one observation.
 """
 
 from __future__ import annotations
@@ -89,6 +91,8 @@ GOPHER_REP_DEFAULTS = {
     "top4gram_char_frac": 0.16,
     "dup5gram_char_frac": 0.15,
 }
+#: CCNet terciles, by freq_score (curation.ccnet_buckets)
+CCNET_BUCKETS = ("head", "middle", "tail")
 
 
 def clean_corpus(
@@ -104,12 +108,10 @@ def clean_corpus(
     default_fraction: float = 0.1,
     winnow_min_shared: int = 3,
     winnow_max_df: int | None = None,
-    sample: bool = True,
     neardup_method: str = "winnow",
     dedup_keep: str = "min-id",
     span_dedup: int | None = None,
     minhash_threshold: float = 0.7,
-    cc_max_iters: int = 25,
     max_top_bigram_frac: float | None = None,
     gopher: bool = False,
     gopher_rep: dict[str, float] | None = None,
@@ -129,42 +131,57 @@ def clean_corpus(
     benchmark_path: str | None = None,
     decontaminate_ngram: int = 5,
     broadcast_bench: bool = True,
-    audit_counts: bool = True,
 ):
     """Run the cleaning funnel; returns (counts dict, output path).
 
-    ``audit_counts=False`` drops the intermediate per-stage funnel
-    counts (``input`` and ``output`` are always recorded — they ride
-    actions the funnel runs anyway and the lineage manifest needs the
-    row count). With auditing ON the counts are observe() metrics, not
-    count() actions, so the flag saves only the accumulator bookkeeping
-    — it exists so a production run can pin the output dict shape.
-    """
-    import time as _time
+    The per-lang stratified sample runs when ``lang_fractions`` is set.
+    Arguments are checked before any Spark job runs; a bad one raises
+    ValueError."""
+    if dedup_keep not in ("min-id", "best-quality"):
+        raise ValueError(f"unknown dedup_keep: {dedup_keep!r}")
+    if neardup_method not in ("winnow", "minhash"):
+        raise ValueError(f"unknown neardup_method: {neardup_method!r}")
+    for flag, frac, need, pred in (
+        ("--lm-keep", lm_keep, "--lm-train", lm_train),
+        ("--dsir-keep", dsir_keep, "--dsir-target", dsir_target),
+        ("--quality-model-keep", quality_model_keep, "--quality-target", quality_target),
+    ):
+        if frac is not None and not pred:
+            raise ValueError(f"{flag} requires {need} <pred>")
+    if ccnet_keep is not None and (
+        set(ccnet_keep) - set(CCNET_BUCKETS)
+        or not all(0 <= f <= 1 for f in ccnet_keep.values())
+    ):
+        raise ValueError(
+            f"ccnet_keep takes {'/'.join(CCNET_BUCKETS)} fractions in [0, 1]: {ccnet_keep}"
+        )
+    if gopher_rep is not None and set(gopher_rep) - set(GOPHER_REP_DEFAULTS):
+        raise ValueError(
+            f"unknown gopher_rep ceilings {sorted(set(gopher_rep) - set(GOPHER_REP_DEFAULTS))}"
+            f"; known: {sorted(GOPHER_REP_DEFAULTS)}"
+        )
 
-    from pyspark.sql import Observation, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    from bmspark.functions import curation, dedup, sampling, text
+    from bmspark.functions import curation, dedup, quality_model, sampling, text
     from bmspark.plans import lineage
+    from bmspark.session import observe
 
-    # (Observation, pre-observe frame, [(key, agg)]) in funnel order;
-    # values are read AFTER the final write, by which point every
-    # observation has been filled by one of the funnel's inherent
-    # actions (CC rounds, lineage checkpoints, model training, the
-    # write itself).
-    observed: list[tuple[Observation, object, list]] = []
+    # read() of each observed stage in funnel order; called AFTER the
+    # final write, by which point every observation has been filled by
+    # one of the funnel's inherent actions (CC rounds, lineage
+    # checkpoints, model training, the write itself) or is recomputed
+    reads = []
 
-    def _observe(frame, aggs: list, always: bool = False):
-        """Attach named count metrics to ``frame``; no-op when auditing
-        is off (unless ``always``: input/output feed docs/s + manifest).
-        """
-        if not (audit_counts or always):
-            return frame
-        obs = Observation(f"funnel_{aggs[0][0]}_{_time.monotonic_ns()}")
-        observed.append((obs, frame, aggs))
-        return frame.observe(obs, *[a.alias(k) for k, a in aggs])
+    def observed(frame, **aggs):
+        frame, read = observe(frame, **aggs)
+        reads.append(read)
+        return frame
+
+    def counted(frame, stage: str):
+        return observed(frame, **{stage: F.count(F.lit(1))})
 
     docs = spark.read.parquet(source)
 
@@ -177,11 +194,10 @@ def clean_corpus(
         c4f = curation.c4_clean(
             docs, min_words_per_line=c4_min_words, extra_cols=tuple(extras)
         )
-        c4f = _observe(c4f, [("input", F.count(F.lit(1)))], always=True)
-        docs = c4f.filter(F.col("keep_doc")).select(
+        docs = counted(c4f, "input").filter(F.col("keep_doc")).select(
             "doc_id", F.col("text_clean").alias("text"), *extras
         )
-        docs = _observe(docs, [("after_c4", F.count(F.lit(1)))])
+        docs = counted(docs, "after_c4")
 
     measured = docs.select(
         "*",
@@ -192,9 +208,7 @@ def clean_corpus(
     base_cols = measured.columns
     persisted = [measured]
     try:
-        measured_o = measured if c4 else _observe(
-            measured, [("input", F.count(F.lit(1)))], always=True
-        )
+        measured_o = measured if c4 else counted(measured, "input")
         quality_ok = measured_o.filter(F.col("quality") >= min_quality)
 
         # ---- folded early filter pass ----
@@ -209,7 +223,7 @@ def clean_corpus(
         # join drops them. Cumulative stage counts are conditional sums
         # in a single observation (rows reaching it = quality
         # survivors).
-        early_aggs = [("after_quality", F.count(F.lit(1)))]
+        early_aggs = {"after_quality": F.count(F.lit(1))}
         keep = F.lit(True)
         joined = quality_ok
         if max_top_bigram_frac is not None:
@@ -220,18 +234,14 @@ def clean_corpus(
             keep = keep & ~F.coalesce(
                 F.col("top_bigram_frac") > max_top_bigram_frac, F.lit(False)
             )
-            early_aggs.append(
-                ("after_repetition", F.sum(F.when(keep, 1).otherwise(0)))
-            )
+            early_aggs["after_repetition"] = F.sum(F.when(keep, 1).otherwise(0))
         if gopher:
             gq = curation.gopher_quality(quality_ok).select(
                 "doc_id", "gopher_pass"
             )
             joined = joined.join(gq, on="doc_id", how="left")
             keep = keep & F.coalesce(F.col("gopher_pass"), F.lit(False))
-            early_aggs.append(
-                ("after_gopher", F.sum(F.when(keep, 1).otherwise(0)))
-            )
+            early_aggs["after_gopher"] = F.sum(F.when(keep, 1).otherwise(0))
         if gopher_rep is not None:
             rep_ng = curation.repetition_ngrams(quality_ok).select(
                 "doc_id", *gopher_rep.keys()
@@ -242,31 +252,23 @@ def clean_corpus(
                 c = F.col(col) > ceil_v
                 breach = c if breach is None else (breach | c)
             keep = keep & ~F.coalesce(breach, F.lit(False))
-            early_aggs.append(
-                ("after_gopher_rep", F.sum(F.when(keep, 1).otherwise(0)))
-            )
-        quality_ok = (
-            _observe(joined, early_aggs).filter(keep).select(*base_cols)
-        )
+            early_aggs["after_gopher_rep"] = F.sum(F.when(keep, 1).otherwise(0))
+        quality_ok = observed(joined, **early_aggs).filter(keep).select(*base_cols)
 
         # exact dedup: one survivor per content fingerprint — min doc_id,
         # or the highest-quality copy (crawl duplicates often differ in
         # extraction quality; min-id throws the good copy away whenever
         # the worse one crawled first)
+        order = [F.col("doc_id").asc()]
         if dedup_keep == "best-quality":
-            w = Window.partitionBy("fp").orderBy(
-                F.col("quality").desc(), F.col("doc_id").asc()
-            )
-        elif dedup_keep == "min-id":
-            w = Window.partitionBy("fp").orderBy(F.col("doc_id").asc())
-        else:
-            raise ValueError(f"unknown dedup_keep: {dedup_keep!r}")
+            order.insert(0, F.col("quality").desc())
+        w = Window.partitionBy("fp").orderBy(*order)
         exact = (
             quality_ok.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        exact = _observe(exact, [("after_exact_dedup", F.count(F.lit(1)))])
+        exact = counted(exact, "after_exact_dedup")
         # persist the exact-dedup survivors: every downstream stage
         # (paragraph/span dedup builds AND their join-backs, winnow
         # pairing, the final chain) re-derives this frame, so without
@@ -279,62 +281,43 @@ def clean_corpus(
         exact = exact.persist(StorageLevel.MEMORY_AND_DISK)
         persisted.append(exact)
 
-        # optional CCNet paragraph dedup (Wenzek et al. 2020): coarser
-        # than span dedup, so it runs first — nav bars/cookie banners
-        # vanish at paragraph granularity before spans chase finer
-        # repetition. Same join-back shape as span dedup; docs with no
-        # surviving (or no non-whitespace) paragraphs are dropped.
-        # With --c4 on, cleaned docs carry single newlines only, so
-        # pass para_sep="\n" (--para-sep line) to dedup at line
-        # granularity there.
-        if para_dedup:
-            pdd = curation.dedup_paragraphs(exact, sep=para_sep).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            persisted.append(pdd)
-            pdd_o = _observe(
-                pdd,
-                [("paras_removed", F.sum(F.col("n_paras") - F.col("n_kept")))],
-            )
+        # optional corpus-wide rewrite dedup, coarse to fine. CCNet
+        # paragraph dedup (Wenzek et al. 2020) runs first — nav
+        # bars/cookie banners vanish at paragraph granularity before
+        # spans chase finer repetition. With --c4 on, cleaned docs carry
+        # single newlines only, so pass para_sep="\n" (--para-sep line)
+        # to dedup at line granularity there. Span dedup follows (Lee et
+        # al. 2022 ordering: after exact dedup — identical docs are
+        # already collapsed so their spans don't fight — and BEFORE
+        # near-dup clustering, which then sees boilerplate-stripped text
+        # and stops pairing docs on shared boilerplate alone). Each
+        # rewrites docs from their surviving segments and joins the text
+        # back; docs whose every segment was seen earlier elsewhere come
+        # back empty and are dropped. The rewrite is persisted for the
+        # rest of the funnel (downstream stages re-read the rewritten
+        # text; unpersisted with `measured`), and the removed-segment
+        # count observes ABOVE the cache (rows flow through once at
+        # materialization, from cache afterwards).
+        rewrites = (
+            ("para", "paras", para_dedup,
+             lambda d: curation.dedup_paragraphs(d, sep=para_sep)),
+            ("span", "spans", span_dedup is not None,
+             lambda d: curation.dedup_spans(d, span_dedup)),
+        )
+        for stage, unit, on, rewrite in rewrites:
+            if not on:
+                continue
+            rw = rewrite(exact).persist(StorageLevel.MEMORY_AND_DISK)
+            persisted.append(rw)
+            removed = F.sum(F.col(f"n_{unit}") - F.col("n_kept"))
+            rw = observed(rw, **{f"{unit}_removed": removed})
             exact = exact.drop("text").join(
-                pdd_o.filter(F.col("n_kept") > 0).select(
+                rw.filter(F.col("n_kept") > 0).select(
                     "doc_id", F.col("text_deduped").alias("text")
                 ),
                 on="doc_id",
             )
-            exact = _observe(
-                exact, [("after_para_dedup", F.count(F.lit(1)))]
-            )
-
-        # optional corpus-wide span dedup (Lee et al. 2022 ordering:
-        # after exact dedup — identical docs are already collapsed so
-        # their spans don't fight — and BEFORE near-dup clustering,
-        # which then sees boilerplate-stripped text and stops pairing
-        # docs on shared boilerplate alone). Docs are rewritten from
-        # their surviving spans; docs whose every span was seen earlier
-        # elsewhere come back empty and are dropped.
-        if span_dedup is not None:
-            # persisted for the rest of the funnel (downstream stages
-            # re-read the rewritten text); unpersisted with `measured`.
-            # spans_removed observes ABOVE the cache (rows flow through
-            # once at materialization, from cache afterwards).
-            sd = curation.dedup_spans(exact, span_dedup).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            persisted.append(sd)
-            sd_o = _observe(
-                sd,
-                [("spans_removed", F.sum(F.col("n_spans") - F.col("n_kept")))],
-            )
-            exact = exact.drop("text").join(
-                sd_o.filter(F.col("n_kept") > 0).select(
-                    "doc_id", F.col("text_deduped").alias("text")
-                ),
-                on="doc_id",
-            )
-            exact = _observe(
-                exact, [("after_span_dedup", F.count(F.lit(1)))]
-            )
+            exact = counted(exact, f"after_{stage}_dedup")
 
         # near-dup cluster dedup: candidate pairs → components → keep roots.
         # winnow = exact shared-fingerprint evidence (deterministic, has a
@@ -346,19 +329,16 @@ def clean_corpus(
                 exact, "text", "doc_id", min_shared=winnow_min_shared,
                 max_df=winnow_max_df,
             )
-        elif neardup_method == "minhash":
+        else:
             pairs = dedup.minhash_lsh_pairs(
                 exact, "text", "doc_id", threshold=minhash_threshold
             ).select("id_a", "id_b")
-        else:
-            raise ValueError(f"unknown neardup_method: {neardup_method!r}")
-        clusters = dedup.connected_components(pairs, max_iterations=cc_max_iters)
+        clusters = dedup.connected_components(pairs)
         drop = clusters.filter(F.col("id") != F.col("root")).select(
             F.col("id").alias("doc_id")
         )
-        neardup_free = _observe(
-            exact.join(drop, on="doc_id", how="left_anti"),
-            [("after_neardup_dedup", F.count(F.lit(1)))],
+        neardup_free = counted(
+            exact.join(drop, on="doc_id", how="left_anti"), "after_neardup_dedup"
         )
 
         # lineage boundary: every optional stage below (semantic dedup,
@@ -392,9 +372,9 @@ def clean_corpus(
             sem_drop = sem.filter(~F.col("is_rep")).select(
                 F.col("vec_id").alias("doc_id")
             )
-            final = _observe(
+            final = counted(
                 final.join(sem_drop, on="doc_id", how="left_anti"),
-                [("after_semantic_dedup", F.count(F.lit(1)))],
+                "after_semantic_dedup",
             )
         # optional CCNet bucket sampling: tercile the deduped corpus by
         # the freq_score quality proxy, then keep each bucket at its
@@ -408,101 +388,65 @@ def clean_corpus(
                     default_fraction=0.0, salt="ccnet"))
                 .drop("bucket")
             )
-            final = _observe(final, [("after_ccnet", F.count(F.lit(1)))])
-        # optional bigram-LM perplexity selection — the ACTUAL CCNet
-        # filter (Wenzek et al. 2020: rank by the perplexity of an LM
-        # trained on curated text; --ccnet-keep's freq_score is the
-        # model-free proxy): train the add-k bigram model on the
-        # --lm-train subset, keep the top ``lm_keep`` fraction by mean
-        # log probability (distributed-percentile cutoff, ties keep).
-        # Docs too short to score (NULL logprob) are kept — the DSIR
-        # convention.
-        if lm_keep is not None:
-            if not lm_train:
-                raise ValueError("--lm-keep requires --lm-train <pred>")
-            lm = curation.lm_score(final, final.filter(lm_train))
-            lcut = lm.filter(F.col("lm_logprob").isNotNull()).agg(
-                F.percentile("lm_logprob", F.lit(1.0 - lm_keep)).alias("__lc")
-            )
-            final = (
-                final.crossJoin(F.broadcast(lcut))
-                .join(lm.select("doc_id", "lm_logprob"), on="doc_id", how="left")
-                .filter(
-                    F.col("lm_logprob").isNull()
-                    | (F.col("lm_logprob") >= F.col("__lc"))
-                )
-                .drop("lm_logprob", "__lc")
-            )
-            final = _observe(final, [("after_lm", F.count(F.lit(1)))])
-        # optional DSIR selection (Xie et al. 2023): keep the most
-        # target-like ``dsir_keep`` fraction of docs by hashed-bigram
-        # log importance ratio against the --dsir-target subset. The
-        # cutoff comes from ONE distributed percentile over the
-        # 4-decimal-rounded weights (bounded buffer, same invariant as
+            final = counted(final, "after_ccnet")
+        # optional score selections, each keeping the top FRAC of docs:
+        #  - lm: bigram-LM perplexity — the ACTUAL CCNet filter (Wenzek
+        #    et al. 2020: rank by the perplexity of an LM trained on
+        #    curated text; --ccnet-keep's freq_score is the model-free
+        #    proxy): add-k bigram model trained on the --lm-train
+        #    subset, scored by mean log probability;
+        #  - dsir (Xie et al. 2023): hashed-bigram log importance ratio
+        #    against the --dsir-target subset (most target-like first);
+        #  - quality_model (fastText-style linear model, Brown et al.
+        #    2020 App. A): target-vs-rest logistic regression on
+        #    hashed-bigram features over the CURRENT corpus, scored by
+        #    model probability; every doc gets a score (short docs
+        #    score by bias alone).
+        # The cutoff comes from ONE exact distributed F.percentile over
+        # the rounded scores (bounded buffer, same invariant as
         # ccnet_buckets) — never a corpus-wide rank window. Ties at the
         # cutoff keep (deterministic; may retain slightly more than the
-        # requested fraction). Docs too short to have a bigram feature
-        # (<2 tokens) get NO weight row — they are kept unconditionally
+        # requested fraction). Docs too short to score (<2 tokens: NULL
+        # LM logprob, no DSIR weight row) are kept unconditionally
         # rather than silently dropped (ADVICE r5): only SCORED docs
-        # compete for the percentile cutoff, and an unscored doc is a
-        # quality-floor concern (--min-tokens), not a DSIR one.
-        if dsir_keep is not None:
-            if not dsir_target:
-                raise ValueError("--dsir-keep requires --dsir-target <pred>")
-            weights = curation.dsir_weight(final, final.filter(dsir_target))
-            cut = weights.agg(
-                F.percentile("dsir_logw", F.lit(1.0 - dsir_keep)).alias("__c")
+        # compete for the cutoff, and an unscored doc is a quality-floor
+        # concern (--min-tokens), not a selection one.
+        selections = (
+            ("lm", lm_keep, "lm_logprob",
+             lambda f: curation.lm_score(f, f.filter(lm_train))),
+            ("dsir", dsir_keep, "dsir_logw",
+             lambda f: curation.dsir_weight(f, f.filter(dsir_target))),
+            ("quality_model", quality_model_keep, "q_prob",
+             lambda f: quality_model.quality_classifier(
+                 f, quality_target, iters=quality_model_iters)),
+        )
+        for stage, frac, score_col, score in selections:
+            if frac is None:
+                continue
+            if stage == "quality_model":
+                # second lineage boundary: training reads `final` many
+                # times (pos/neg feature builds + per-round scoring) and
+                # the semantic/ccnet/dsir stages above stack
+                # self-referential joins on it after the first boundary
+                final = final.localCheckpoint(eager=True)
+            scores = score(final).select("doc_id", score_col)
+            cut = scores.agg(
+                F.percentile(score_col, F.lit(1.0 - frac)).alias("__cut")
             )
-            final = (
+            final = counted(
                 final.crossJoin(F.broadcast(cut))
-                .join(weights.select("doc_id", "dsir_logw"),
-                      on="doc_id", how="left")
+                .join(scores, on="doc_id", how="left")
                 .filter(
-                    F.col("dsir_logw").isNull()
-                    | (F.col("dsir_logw") >= F.col("__c"))
+                    F.col(score_col).isNull()
+                    | (F.col(score_col) >= F.col("__cut"))
                 )
-                .drop("dsir_logw", "__c")
-            )
-            final = _observe(final, [("after_dsir", F.count(F.lit(1)))])
-        # optional learned quality filter (fastText-style linear model,
-        # Brown et al. 2020 App. A): train target-vs-rest logistic
-        # regression on hashed-bigram features over the CURRENT corpus,
-        # score every doc, keep the top ``quality_model_keep`` fraction
-        # by model probability (distributed-percentile cutoff, ties
-        # keep — the DSIR convention). Every doc gets a score (short
-        # docs score by bias alone), so nothing is silently dropped.
-        if quality_model_keep is not None:
-            if not quality_target:
-                raise ValueError(
-                    "--quality-model-keep requires --quality-target <pred>"
-                )
-            from bmspark.functions import quality_model
-
-            # second lineage boundary: training reads `final` many times
-            # (pos/neg feature builds + per-round scoring) and the
-            # semantic/ccnet/dsir stages above stack self-referential
-            # joins on it after the first boundary
-            final = final.localCheckpoint(eager=True)
-            scores = quality_model.quality_classifier(
-                final, quality_target, iters=quality_model_iters
-            )
-            qcut = scores.agg(
-                F.percentile("q_prob", F.lit(1.0 - quality_model_keep))
-                .alias("__qc")
-            )
-            qkeep = (
-                scores.crossJoin(F.broadcast(qcut))
-                .filter(F.col("q_prob") >= F.col("__qc"))
-                .select("doc_id")
-            )
-            final = _observe(
-                final.join(qkeep, on="doc_id", how="left_semi"),
-                [("after_quality_model", F.count(F.lit(1)))],
+                .drop(score_col, "__cut"),
+                f"after_{stage}",
             )
         if cap_per_source is not None:
-            final = _observe(
+            final = counted(
                 curation.cap_per_group(final, "source", cap_per_source),
-                [("after_source_cap", F.count(F.lit(1)))],
+                "after_source_cap",
             )
         if benchmark_path is not None:
             bench = spark.read.parquet(benchmark_path)
@@ -510,11 +454,11 @@ def clean_corpus(
                 final, bench, n=decontaminate_ngram, min_shared=1,
                 broadcast_bench=broadcast_bench,
             ).select("doc_id")
-            final = _observe(
+            final = counted(
                 final.join(leaked, on="doc_id", how="left_anti"),
-                [("after_decontaminate", F.count(F.lit(1)))],
+                "after_decontaminate",
             )
-        if sample and lang_fractions:
+        if lang_fractions:
             final = sampling.stratified_sample(
                 final,
                 "lang",
@@ -525,36 +469,12 @@ def clean_corpus(
         # output count observes ABOVE the row-preserving scrub rewrite
         # and fills during the write — the old count()-then-write shape
         # executed the whole post-checkpoint chain twice.
-        final = _observe(
-            final, [("output", F.count(F.lit(1)))], always=True
-        )
+        final = counted(final, "output")
         if scrub:
             final = final.withColumn("text", curation.scrub_pii(F.col("text")))
         final.drop("fp").write.mode("overwrite").parquet(out)
 
-        # every observation has now been filled by one of the funnel's
-        # actions; assemble the counts dict in funnel-stage order
-        counts: dict[str, int] = {}
-        for obs, frame, aggs in observed:
-            try:
-                vals = obs.get
-            except Exception:
-                # Spark completes an observation with an EMPTY row when
-                # a query's LOGICAL plan contains its CollectMetrics
-                # node but the EXECUTED plan never collected it — e.g.
-                # AQE empty-relation propagation replaced the subtree
-                # (a degenerate corpus with zero near-dup pairs empties
-                # the whole CC edge pipeline). pyspark's Observation.get
-                # then fails converting the schema-less row. Recompute
-                # the same aggregates directly — correctness over the
-                # saved job, and only on degenerate inputs.
-                vals = (
-                    frame.agg(*[a.alias(k) for k, a in aggs])
-                    .collect()[0]
-                    .asDict()
-                )
-            for k, _ in aggs:
-                counts[k] = int(vals[k] or 0)
+        counts = {k: v for read in reads for k, v in read().items()}
         lineage.commit_manifest(
             out,
             sink="clean_corpus",
@@ -566,6 +486,15 @@ def clean_corpus(
     finally:
         for frame in persisted:
             frame.unpersist()
+
+
+def _kv_floats(arg: str) -> dict[str, float]:
+    """argparse type for ``key=F,key=F`` options (--langs, --ccnet-keep,
+    --gopher-rep): a malformed value is a usage error (exit 2)."""
+    try:
+        return {k: float(v) for k, v in (kv.split("=") for kv in arg.split(","))}
+    except ValueError:
+        raise argparse.ArgumentTypeError(f"expected key=F[,key=F...], got {arg!r}") from None
 
 
 def main(argv: list[str]) -> int:
@@ -596,7 +525,7 @@ def main(argv: list[str]) -> int:
              "(use with --c4, whose cleaned docs carry single newlines)",
     )
     ap.add_argument(
-        "--langs", default=None,
+        "--langs", type=_kv_floats, default=None,
         help="per-lang sample fractions, e.g. en=0.5,fr=0.25 (omit = no sampling)",
     )
     ap.add_argument("--default-frac", type=float, default=0.1)
@@ -627,11 +556,6 @@ def main(argv: list[str]) -> int:
              "highest-quality copy (quality-score tie-broken by id)",
     )
     ap.add_argument(
-        "--cc-max-iters", type=int, default=25,
-        help="connected-components round cap (O(log diameter) with "
-        "pointer doubling; raise only for pathological graphs)",
-    )
-    ap.add_argument(
         "--max-top-bigram-frac", type=float, default=None,
         help="drop docs whose most frequent bigram exceeds this share "
         "(Gopher-style repetition ceiling; omit = no repetition filter)",
@@ -658,7 +582,7 @@ def main(argv: list[str]) -> int:
              "broadcast ceiling / driver memory",
     )
     ap.add_argument(
-        "--ccnet-keep", default=None,
+        "--ccnet-keep", type=_kv_floats, default=None,
         help="CCNet bucket keep-rates as head=F,middle=F,tail=F — "
              "tercile the deduped corpus by the freq_score quality "
              "proxy and keep each bucket at its rate (deterministic "
@@ -713,7 +637,8 @@ def main(argv: list[str]) -> int:
              "ratio, alpha fraction, stopword hits)",
     )
     ap.add_argument(
-        "--gopher-rep", nargs="?", const="defaults", default=None,
+        "--gopher-rep", type=_kv_floats, nargs="?",
+        const=GOPHER_REP_DEFAULTS, default=None,
         metavar="COL=CEIL,...",
         help="apply Gopher repetition-ngram ceilings: drop docs whose "
              "top-{2,3,4}-gram / dup-5-gram char mass exceeds its "
@@ -721,25 +646,12 @@ def main(argv: list[str]) -> int:
              "(0.20/0.18/0.16/0.15); or pass e.g. "
              "top2gram_char_frac=0.3,dup5gram_char_frac=0.2",
     )
-    ap.add_argument(
-        "--no-audit-counts", action="store_true",
-        help="skip the intermediate per-stage funnel counts (input and "
-             "output are always recorded); counts are observe() metrics "
-             "riding existing actions, so this only drops accumulator "
-             "bookkeeping",
-    )
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
     from bmspark.session import get_session
 
     spark = get_session("bmspark-clean-corpus", master=args.master)
-    fractions = None
-    if args.langs:
-        fractions = {
-            kv.split("=")[0]: float(kv.split("=")[1])
-            for kv in args.langs.split(",")
-        }
     counts, out = clean_corpus(
         spark,
         args.source,
@@ -749,24 +661,17 @@ def main(argv: list[str]) -> int:
         c4_min_words=args.c4_min_words,
         para_dedup=args.para_dedup,
         para_sep="\n\n" if args.para_sep == "blank" else "\n",
-        lang_fractions=fractions,
+        lang_fractions=args.langs,
         default_fraction=args.default_frac,
         winnow_min_shared=args.winnow_min_shared,
         winnow_max_df=args.winnow_max_df,
-        sample=fractions is not None,
         neardup_method=args.neardup_method,
         dedup_keep=args.dedup_keep,
         span_dedup=args.span_dedup,
         minhash_threshold=args.minhash_threshold,
-        cc_max_iters=args.cc_max_iters,
         max_top_bigram_frac=args.max_top_bigram_frac,
         gopher=args.gopher,
-        gopher_rep=(
-            GOPHER_REP_DEFAULTS if args.gopher_rep == "defaults"
-            else {k: float(v) for k, v in
-                  (kv.split("=") for kv in args.gopher_rep.split(","))}
-            if args.gopher_rep else None
-        ),
+        gopher_rep=args.gopher_rep,
         cap_per_source=args.cap_per_source,
         dsir_keep=args.dsir_keep,
         dsir_target=args.dsir_target,
@@ -777,16 +682,11 @@ def main(argv: list[str]) -> int:
         semantic_dedup_path=args.semantic_dedup,
         semantic_threshold=args.semantic_threshold,
         semantic_dim=args.semantic_dim,
-        ccnet_keep=(
-            {k: float(v) for k, v in
-             (kv.split("=") for kv in args.ccnet_keep.split(","))}
-            if args.ccnet_keep else None
-        ),
+        ccnet_keep=args.ccnet_keep,
         scrub=args.scrub_pii,
         benchmark_path=args.benchmark,
         decontaminate_ngram=args.decontaminate_ngram,
         broadcast_bench=not args.no_broadcast_bench,
-        audit_counts=not args.no_audit_counts,
     )
     print(json.dumps({"funnel": counts, "out": out}))
     return 0

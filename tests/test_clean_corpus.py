@@ -4,6 +4,7 @@ whole run byte-deterministic across reruns."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from jobs.clean_corpus import clean_corpus
@@ -64,8 +65,6 @@ def test_clean_corpus_minhash_path(spark, tmp_path):
         f"{SF_DIR}/documents.parquet",
         out,
         min_quality=0.3,
-        lang_fractions=None,
-        sample=False,
         neardup_method="minhash",
         minhash_threshold=0.7,
     )
@@ -112,8 +111,6 @@ def test_clean_corpus_full_options_funnel(spark, tmp_path):
         f"{SF_DIR}/documents.parquet",
         out,
         min_quality=0.3,
-        lang_fractions=None,
-        sample=False,
         max_top_bigram_frac=0.05,
         gopher=True,
         cap_per_source=20,
@@ -154,8 +151,6 @@ def test_clean_corpus_decontaminate_stage(spark, tmp_path):
         f"{SF_DIR}/documents.parquet",
         out,
         min_quality=0.0,
-        lang_fractions=None,
-        sample=False,
         benchmark_path=bench_path,
     )
     assert "after_decontaminate" in counts
@@ -205,10 +200,8 @@ def test_dedup_keep_best_quality_prefers_the_better_copy(spark, tmp_path):
 
     out_min = str(tmp_path / "min")
     out_best = str(tmp_path / "best")
-    c1, _ = clean_corpus(spark, src, out_min, min_quality=0.0,
-                         lang_fractions=None, sample=False)
+    c1, _ = clean_corpus(spark, src, out_min, min_quality=0.0)
     c2, _ = clean_corpus(spark, src, out_best, min_quality=0.0,
-                         lang_fractions=None, sample=False,
                          dedup_keep="best-quality")
     assert c1["after_exact_dedup"] == c2["after_exact_dedup"]
 
@@ -230,7 +223,7 @@ def test_ccnet_keep_rates_stage(spark, tmp_path):
     all_out = str(tmp_path / "ccnet_all")
     c_all, _ = clean_corpus(
         spark, f"{SF_DIR}/documents.parquet", all_out,
-        min_quality=0.0, lang_fractions=None, sample=False,
+        min_quality=0.0,
         ccnet_keep={"head": 1.0, "middle": 1.0, "tail": 1.0},
     )
     assert c_all["after_ccnet"] == c_all["after_neardup_dedup"]
@@ -238,7 +231,7 @@ def test_ccnet_keep_rates_stage(spark, tmp_path):
     head_out = str(tmp_path / "ccnet_head")
     c_head, _ = clean_corpus(
         spark, f"{SF_DIR}/documents.parquet", head_out,
-        min_quality=0.0, lang_fractions=None, sample=False,
+        min_quality=0.0,
         ccnet_keep={"head": 1.0, "middle": 0.0, "tail": 0.0},
     )
     n = c_all["after_ccnet"]
@@ -312,7 +305,7 @@ def test_dsir_keep_stage(spark, tmp_path):
     no-dsir run; requires the target predicate."""
     base_out = str(tmp_path / "dsir_base")
     sel_out = str(tmp_path / "dsir_sel")
-    kwargs = dict(min_quality=0.0, lang_fractions=None, sample=False)
+    kwargs = dict(min_quality=0.0)
     c0, _ = clean_corpus(spark, f"{SF_DIR}/documents.parquet", base_out, **kwargs)
     c1, _ = clean_corpus(
         spark, f"{SF_DIR}/documents.parquet", sel_out,
@@ -353,7 +346,7 @@ def test_dsir_stage_keeps_unscorable_short_docs(spark, tmp_path):
     out = str(tmp_path / "dsir_short")
     counts, _ = clean_corpus(
         spark, src, out,
-        min_quality=0.0, lang_fractions=None, sample=False,
+        min_quality=0.0,
         dsir_keep=0.5, dsir_target="source IN ('src0', 'src1')",
     )
     kept = {r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()}
@@ -382,8 +375,7 @@ def test_gopher_rep_stage(spark, tmp_path):
 
     out = str(tmp_path / "gr")
     counts, _ = clean_corpus(
-        spark, src, out, min_quality=0.0, lang_fractions=None,
-        sample=False, gopher_rep={"dup5gram_char_frac": 0.5},
+        spark, src, out, min_quality=0.0, gopher_rep={"dup5gram_char_frac": 0.5},
     )
     assert list(counts)[:4] == [
         "input", "after_quality", "after_gopher_rep", "after_exact_dedup"
@@ -494,7 +486,7 @@ def test_semantic_dedup_stage_drops_planted_embedding_clones(spark, tmp_path):
     out = str(tmp_path / "clean")
     counts, _ = clean_corpus(
         spark, src, out,
-        min_quality=0.0, lang_fractions=None, sample=False,
+        min_quality=0.0,
         semantic_dedup_path=embp, semantic_threshold=0.95,
     )
     kept = {r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()}
@@ -529,7 +521,7 @@ def test_quality_model_stage_keeps_target_like_docs(spark, tmp_path):
 
     out1, out2 = str(tmp_path / "c1"), str(tmp_path / "c2")
     kwargs = dict(
-        min_quality=0.0, lang_fractions=None, sample=False,
+        min_quality=0.0,
         quality_model_keep=0.5, quality_target="source = 'tgt'",
     )
     c1, _ = clean_corpus(spark, src, out1, **kwargs)
@@ -553,7 +545,7 @@ def test_lm_keep_stage(spark, tmp_path):
     corpus — the most train-like half by bigram-LM log probability —
     deterministically; requires the train predicate."""
     out = str(tmp_path / "lm_sel")
-    kwargs = dict(min_quality=0.0, lang_fractions=None, sample=False)
+    kwargs = dict(min_quality=0.0)
     c1, _ = clean_corpus(
         spark, f"{SF_DIR}/documents.parquet", out,
         lm_keep=0.5, lm_train="source IN ('src0', 'src1')", **kwargs,
@@ -680,3 +672,124 @@ def test_c4_and_para_dedup_compose(spark, tmp_path):
         c4=True, para_dedup=True, para_sep="\n",
     )
     assert counts2 == counts
+
+
+def test_funnel_without_near_dup_pairs_counts_every_stage(spark, tmp_path, monkeypatch):
+    """A corpus with no near-duplicate pair empties the whole clustering
+    input, and AQE replaces the subtrees holding the early stages'
+    observations by empty relations, so Spark drops those metrics. The
+    funnel still reports every stage's true count (observe() recomputes
+    them), and the recompute path is the one taken."""
+    from pyspark.sql import Observation
+
+    from bmspark import session
+
+    dropped = []
+
+    class Spy(Observation):
+        @property
+        def get(self):
+            try:
+                return super().get
+            except Exception:
+                dropped.append(self)
+                raise
+
+    monkeypatch.setattr(session, "Observation", Spy)
+    rows = [
+        (i, "\n\n".join(" ".join(f"d{i}p{p}w{j}" for j in range(12)) + "."
+                        for p in range(3)), "en", "src0")
+        for i in range(20)
+    ]
+    src = str(tmp_path / "distinct")
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string"
+    ).write.parquet(src)
+    counts, out = clean_corpus(
+        spark, src, str(tmp_path / "out"), min_quality=0.0, para_dedup=True
+    )
+    assert counts == {
+        "input": 20, "after_quality": 20, "after_exact_dedup": 20,
+        "paras_removed": 0, "after_para_dedup": 20,
+        "after_neardup_dedup": 20, "output": 20,
+    }
+    assert spark.read.parquet(out).count() == 20
+    assert dropped, "no observation was dropped: the recompute path went untested"
+
+
+@pytest.mark.parametrize("kwargs, match", [
+    (dict(lm_keep=0.5), "lm-train"),
+    (dict(dsir_keep=0.5), "dsir-target"),
+    (dict(quality_model_keep=0.5), "quality-target"),
+    (dict(dedup_keep="newest"), "dedup_keep"),
+    (dict(neardup_method="bogus"), "neardup_method"),
+    (dict(ccnet_keep={"head": 1.0, "middel": 0.5}), "ccnet_keep"),
+    (dict(ccnet_keep={"head": 1.5}), "ccnet_keep"),
+    (dict(ccnet_keep={"tail": -0.1}), "ccnet_keep"),
+    (dict(gopher_rep={"top2gram_frac": 0.2}), "gopher_rep"),
+], ids=["lm", "dsir", "quality_model", "dedup_keep", "neardup_method",
+        "ccnet_key", "ccnet_over_1", "ccnet_negative", "gopher_rep_key"])
+def test_arg_errors_fail_before_any_job(spark, tmp_path, kwargs, match):
+    """Every argument check runs before the funnel's first Spark job: a
+    missing selection predicate, an unknown mode, a CCNet bucket other
+    than head/middle/tail (a typo would silently keep that bucket at 0),
+    a CCNet fraction outside [0, 1] or an unknown Gopher ceiling raises
+    ValueError with no job run and no output written."""
+    out = tmp_path / "out"
+    sc = spark.sparkContext
+    group = f"clean_corpus_fail_fast_{'_'.join(kwargs)}_{match}"
+    sc.setJobGroup(group, "clean_corpus fail-fast probe")
+    try:
+        with pytest.raises(ValueError, match=match):
+            clean_corpus(spark, f"{SF_DIR}/documents.parquet", str(out), **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert not out.exists()
+
+
+@pytest.mark.parametrize("flags", [
+    ["--langs", "en"],
+    ["--langs", "en=half"],
+    ["--ccnet-keep", "head=1,middle"],
+    ["--gopher-rep", "top2gram_char_frac=0.2=0.3"],
+], ids=["langs_no_value", "langs_not_float", "ccnet_no_value", "gopher_two_values"])
+def test_cli_rejects_malformed_key_values(tmp_path, monkeypatch, flags):
+    """A malformed key=value option is an argparse error (exit 2) raised
+    before any session starts, not an IndexError after it."""
+    from bmspark import session
+    from jobs.clean_corpus import main
+
+    def no_session(*a, **k):
+        raise AssertionError("a session started")
+
+    monkeypatch.setattr(session, "get_session", no_session)
+    with pytest.raises(SystemExit) as exc:
+        main(["--source", str(tmp_path / "docs"), "--out", str(tmp_path / "out")] + flags)
+    assert exc.value.code == 2
+    assert not (tmp_path / "out").exists()
+
+
+def test_cli_key_value_options_parse(tmp_path, monkeypatch):
+    """--langs, --ccnet-keep and --gopher-rep (bare = Table A1 defaults)
+    reach clean_corpus as float dicts."""
+    import jobs.clean_corpus as cc
+    from bmspark import session
+
+    seen = {}
+
+    def fake(spark, source, out, **kwargs):
+        seen.update(kwargs)
+        return {"output": 0}, out
+
+    monkeypatch.setattr(session, "get_session", lambda *a, **k: None)
+    monkeypatch.setattr(cc, "clean_corpus", fake)
+    base = ["--source", str(tmp_path / "d"), "--out", str(tmp_path / "o")]
+    assert cc.main(base + ["--langs", "en=0.5,fr=0.25", "--ccnet-keep", "head=1,tail=0",
+                           "--gopher-rep"]) == 0
+    assert seen["lang_fractions"] == {"en": 0.5, "fr": 0.25}
+    assert seen["ccnet_keep"] == {"head": 1.0, "tail": 0.0}
+    assert seen["gopher_rep"] == cc.GOPHER_REP_DEFAULTS
+    assert cc.main(base + ["--gopher-rep", "dup5gram_char_frac=0.5"]) == 0
+    assert seen["gopher_rep"] == {"dup5gram_char_frac": 0.5}
+    assert seen["lang_fractions"] is None and seen["ccnet_keep"] is None

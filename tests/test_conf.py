@@ -230,3 +230,27 @@ def test_prometheus_text_parses_and_matches_counts(tmp_path):
     assert parsed["bmspark_input_rows_total"] == 400000
     assert parsed["bmspark_rows_dropped_by_watermark_total"] == 3
     assert (tmp_path / "metrics.prom").read_text() == text
+
+
+def test_prometheus_export_is_fsynced_and_renamed(tmp_path, monkeypatch):
+    """export_prometheus writes through lineage.write_atomic: the text is
+    fsynced under a .tmp name, then renamed over the target, so a crash
+    leaves the old file or the whole new one and no .tmp behind."""
+    import os
+
+    from bmspark.streaming import monitor
+
+    path = tmp_path / "metrics.prom"
+    path.write_text("old\n")
+    synced = []
+    real_fsync = os.fsync
+
+    def fsync(fd):
+        synced.append(path.read_text())  # the rename has not happened yet
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    text = monitor.export_prometheus(str(path), sink_counts={"sink_en": 3}, input_count=3)
+    assert synced == ["old\n"]
+    assert path.read_text() == text
+    assert os.listdir(tmp_path) == ["metrics.prom"]

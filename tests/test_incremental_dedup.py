@@ -5,6 +5,7 @@ first-seen-wins invariant vs a pure-Python reference, idempotent crashed
 from __future__ import annotations
 
 import hashlib
+import os
 import re
 import shutil
 
@@ -101,7 +102,7 @@ def test_incremental_dedup_crashed_tick_retry_is_idempotent(spark, staged, tmp_p
     state_before = ticks.read_state(out, idp.STATE_FILE)
     idp.dedup_tick(spark, src, out)
     # simulate the crash: roll the state file back (output stays on disk)
-    lineage.write_json_atomic(out, idp.STATE_FILE, state_before)
+    lineage.write_atomic(os.path.join(out, idp.STATE_FILE), state_before)
 
     run = idp.dedup_tick(spark, src, out)  # the retry
     assert run["tick"] == 1 and run["n_emitted"] == 50
@@ -462,7 +463,7 @@ def test_incremental_span_dedup_matches_batch_and_compacts(spark, tmp_path):
     # each land() stages ONE coalesced part file, so the last tick
     # contributed exactly one processed file
     state["processed_files"] = state["processed_files"][:-1]
-    lineage.write_json_atomic(out, idp.SPAN_STATE_FILE, state)
+    lineage.write_atomic(os.path.join(out, idp.SPAN_STATE_FILE), state)
     rerun = idp.span_dedup_tick(spark, src, out, span_tokens=10)
     assert rerun is not None and rerun["tick"] == last["tick"]
     assert rerun["n_emitted"] == last["n_emitted"]

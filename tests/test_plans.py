@@ -5,6 +5,7 @@ Arrow-vectorized, nothing degenerates to a cartesian product."""
 
 from __future__ import annotations
 
+import pytest
 from conftest import assert_broadcast_plan
 from pyspark.sql import functions as F
 
@@ -494,3 +495,38 @@ def test_widen_small_scan_runs_no_job_on_planned_input(spark, tmp_path):
             assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
     finally:
         cached.unpersist()
+
+
+def test_observe_reads_counts_and_recomputes_a_dropped_metric(spark):
+    """session.observe: counts ride the frame's first action, a sum over
+    no rows reads 0, and when AQE replaces the observed side of a join by
+    an empty relation (the other side ran empty) Spark drops the metric,
+    so ``Observation.get`` fails, and read() recomputes the true counts."""
+    from pyspark.sql import Observation
+
+    from bmspark.session import observe
+
+    left = spark.range(100).withColumnRenamed("id", "k")
+    aggs = dict(
+        n=F.count(F.lit(1)),
+        high=F.sum(F.when(F.col("k") >= 90, 1)),
+        none=F.sum(F.when(F.col("k") < 0, 1)),
+    )
+    want = {"n": 100, "high": 10, "none": 0}
+
+    observed, read = observe(left, **aggs)
+    observed.write.format("noop").mode("overwrite").save()
+    assert read() == want
+
+    # empty only at run time: the optimizer cannot prove it, AQE can
+    empty = spark.range(50).withColumnRenamed("id", "k").filter(F.rand(7) > 2.0)
+    raw = Observation()
+    left.observe(raw, F.count(F.lit(1)).alias("n")).join(empty, "k").write.format(
+        "noop").mode("overwrite").save()
+    with pytest.raises(Exception):
+        raw.get["n"]  # the dropped metric this test is about
+
+    observed, read = observe(left, **aggs)
+    observed.join(empty, "k").write.format("noop").mode("overwrite").save()
+    assert read() == want
+    assert list(read()) == list(aggs)
