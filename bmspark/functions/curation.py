@@ -26,8 +26,6 @@ escape hatch).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -261,7 +259,7 @@ def repetition_ngrams(
     all_ns = sorted(set(top_ns) | set(dup_ns))
     toks = df.select(
         _c(id_col).alias("doc_id"),
-        F.split(F.trim(F.coalesce(_c(text_col), F.lit(""))), r"\s+").alias("toks"),
+        tokens(text_col).alias("toks"),
     )
     totals = toks.select(
         "doc_id",
@@ -413,7 +411,7 @@ def dsir_weight(
     def feats(frame: DataFrame) -> DataFrame:
         toks = frame.select(
             _c(id_col).alias("doc_id"),
-            F.split(F.trim(F.coalesce(_c(text_col), F.lit(""))), r"\s+").alias("toks"),
+            tokens(text_col).alias("toks"),
         ).filter(F.size("toks") >= 2)
         return toks.select(
             "doc_id",
@@ -840,8 +838,7 @@ def lm_score(
     def toks(frame: DataFrame) -> DataFrame:
         return frame.select(
             _c(id_col).alias("doc_id"),
-            F.split(F.trim(F.coalesce(_c(text_col), F.lit(""))), r"\s+")
-            .alias("toks"),
+            tokens(text_col).alias("toks"),
         )
 
     def bigrams(frame: DataFrame) -> DataFrame:
@@ -1016,6 +1013,84 @@ def ccnet_buckets_sql(table: str = "documents") -> str:
     """
 
 
+# -- the segment-dedup core ---------------------------------------------------
+#
+# Span, paragraph and substring dedup, and the span tick in
+# plans/incremental_dedup.py, make the same two decisions: which
+# occurrence of a segment survives (its first), and how a doc is put
+# back together from its surviving segments. Each is written once here.
+
+def tokens(col: str | Column) -> Column:
+    """Whitespace tokens, NULL text coalesced to '' BEFORE tokenizing
+    (mirrored in every SQL twin): without it Spark still emits a NULL
+    doc (NULL sizes) while DuckDB's generate_series(1, NULL) drops it —
+    a latent oracle row-count mismatch on any corpus with NULL text
+    (ADVICE r04)."""
+    return F.split(F.trim(F.coalesce(_c(col), F.lit(""))), r"\s+")
+
+
+def span_count(span_tokens: int) -> Column:
+    """Spans per doc, ceil(|toks| / span_tokens), as a long: a per-doc
+    scalar of the token count, so totals need no explode, no aggregation
+    and no second pass over span rows."""
+    return F.ceil(F.size("toks") / F.lit(span_tokens)).cast("long")
+
+
+def span_rows(toks: DataFrame, span_tokens: int) -> DataFrame:
+    """(doc_id, span_idx, span) from a (doc_id, toks) frame: consecutive
+    non-overlapping ``span_tokens``-token segments, joined by spaces."""
+    return toks.select(
+        "doc_id",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), span_count(span_tokens).cast("int") - 1),
+                lambda i: F.array_join(
+                    F.slice("toks", i * span_tokens + 1, span_tokens), " "
+                ),
+            )
+        ).alias("span_idx", "span"),
+    )
+
+
+def first_occurrence(rows: DataFrame, key: str, *fields: str) -> DataFrame:
+    """(key, *fields) of the first occurrence of each ``key``: the min
+    struct(fields) as a regular AGGREGATE, not a window. min(struct) is
+    map-side partial-aggregable, so a boilerplate segment shared by
+    10^6 docs is combined down to one row per map task BEFORE the
+    shuffle — the hot key never concentrates its full occurrence list
+    in one task (the round-5 window form sorted all occurrences of a
+    hot span in a single partition; skew fixture in
+    tests/test_curation.py)."""
+    return (
+        rows.groupBy(key)
+        .agg(F.min(F.struct(*fields)).alias("__first"))
+        .select(key, "__first.*")
+    )
+
+
+def collect_sorted(*fields: str) -> Column:
+    """Aggregate: the group's struct(fields) rows as an array sorted by
+    the first field (then the rest)."""
+    return F.array_sort(F.collect_list(F.struct(*fields)))
+
+
+def rebuild(kept: DataFrame, idx: str, seg: str, sep: str = " ") -> DataFrame:
+    """(doc_id, text, n_kept): each doc of ``kept`` rebuilt from its
+    surviving ``seg`` values in ``idx`` order, joined by ``sep``. Docs
+    with no surviving segment are absent; callers left-join their
+    per-doc totals. A doc-keyed ObjectHashAggregate, the fastest JVM
+    path: its hash map holds one array buffer PER LIVE GROUP per task
+    (spills via the sort-based fallback under pressure — the source of
+    the probe's mild 1.02 exponent at 4M docs; see BENCH/SCALE_PROBE.md
+    r7)."""
+    return kept.groupBy("doc_id").agg(
+        F.array_join(
+            F.transform(collect_sorted(idx, seg), lambda s: s[seg]), sep
+        ).alias("text"),
+        F.count(F.lit(1)).alias("n_kept"),
+    )
+
+
 # -- span-level exact dedup ---------------------------------------------------
 
 def dedup_spans(
@@ -1023,7 +1098,6 @@ def dedup_spans(
     span_tokens: int = 10,
     text_col: str = "text",
     id_col: str = "doc_id",
-    rebuild: str = "agg",
 ) -> DataFrame:
     """Corpus-wide exact SPAN dedup — the fixed-granularity form of
     exact-substring deduplication (Lee et al. 2022, "Deduplicating
@@ -1040,138 +1114,20 @@ def dedup_spans(
     were all seen earlier elsewhere come back with empty text (n_kept=0,
     standard drop condition downstream).
 
-    ``rebuild``: "agg" (default — JVM ObjectHashAggregate; measured
-    15.2→157.8 s over 400k→4M docs, exponent 1.02) or "stream"
-    (repartition + external sort + one-doc-at-a-time Arrow concat;
-    54.5→262.0 s, exponent 0.68 — slower absolute through 4M from the
-    Arrow round-trip, but sublinear with NO per-task group map, so it
-    is the memory-bounded choice past the crossover ~10^7 docs or on
-    small-heap executors). Byte-identical outputs (pinned in
-    tests/test_curation.py).
-
     Scale: explode to ~corpus_tokens/span_tokens span rows; ONE
-    span-keyed partial-agg shuffle (min-struct aggregate, map-side
-    combinable — a boilerplate span shared by 10^6 docs collapses to one
-    row per map task before the exchange, so hot spans cannot
-    concentrate in a single reducer; skew-fixture-tested), then ONE
-    doc-keyed shuffle rebuilds. Deterministic, so unlike near-dup passes
-    this has an exact DuckDB oracle.
-
-    NULL text is coalesced to '' BEFORE tokenizing (mirrored in the SQL
-    twin): without it Spark still emits the doc (NULL n_spans) while
-    DuckDB's generate_series(1, NULL) drops it — a latent oracle
-    row-count mismatch on any corpus with NULL text (ADVICE r04)."""
-    toks = df.select(
-        _c(id_col).alias("doc_id"),
-        F.split(F.trim(F.coalesce(_c(text_col), F.lit(""))), r"\s+").alias("toks"),
-    )
-    n_spans = F.ceil(F.size("toks") / F.lit(span_tokens)).cast("int")
-    spans = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), n_spans - 1),
-                lambda i: F.array_join(
-                    F.slice("toks", i * span_tokens + 1, span_tokens), " "
-                ),
-            )
-        ).alias("span_idx", "span"),
-    )
-    # first occurrence per distinct span = min (doc_id, span_idx) struct,
-    # as a regular AGGREGATE (not a window): min(struct) is map-side
-    # partial-aggregable, so a boilerplate span shared by 10^6 docs is
-    # combined down to one row per map task BEFORE the shuffle — the hot
-    # key never concentrates its full occurrence list in one task (the
-    # round-5 window form sorted all occurrences of a hot span in a
-    # single partition; skew fixture in tests/test_curation.py).
-    kept = (
-        spans.groupBy("span")
-        .agg(F.min(F.struct("doc_id", "span_idx")).alias("__first"))
-        .select(
-            F.col("__first.doc_id").alias("doc_id"),
-            F.col("__first.span_idx").alias("span_idx"),
-            "span",
-        )
-    )
-    if rebuild == "agg":
-        # doc-keyed ObjectHashAggregate: fastest JVM path; its hash map
-        # holds one array buffer PER LIVE GROUP per task (spills via the
-        # sort-based fallback under pressure — the source of the probe's
-        # mild 1.05 exponent at 4M docs; see BENCH/SCALE_PROBE.md r7).
-        rebuilt = kept.groupBy("doc_id").agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("span_idx", "span"))),
-                    lambda s: s["span"],
-                ),
-                " ",
-            ).alias("text_deduped"),
-            F.count(F.lit(1)).alias("n_kept"),
-        )
-    elif rebuild == "stream":
-        # sort-streaming rebuild for memory-constrained executors:
-        # repartition on doc_id + external sort (spill-graceful), then
-        # an iterator Arrow UDF concatenates each doc's spans holding
-        # ONE doc in memory at a time — no per-task group map at all.
-        # Costs the Arrow round-trip of the span text; byte-identical
-        # output to the agg form (pinned in tests).
-        def _concat_docs(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            out_ids: list = []
-            out_txt: list = []
-            out_n: list = []
-            cur_id, parts = None, []
-
-            def _flush_doc():
-                out_ids.append(cur_id)
-                out_txt.append(" ".join(parts))
-                out_n.append(len(parts))
-                parts.clear()
-
-            for pdf in batches:
-                for did, span in zip(
-                    pdf["doc_id"].to_numpy(), pdf["span"].to_numpy()
-                ):
-                    if cur_id is None:
-                        cur_id = did
-                    elif did != cur_id:
-                        _flush_doc()
-                        cur_id = did
-                    parts.append(span)
-                if len(out_ids) >= 2048:
-                    yield pd.DataFrame(
-                        {"doc_id": out_ids, "text_deduped": out_txt,
-                         "n_kept": out_n}
-                    )
-                    out_ids, out_txt, out_n = [], [], []
-            if cur_id is not None:
-                _flush_doc()
-            if out_ids:
-                yield pd.DataFrame(
-                    {"doc_id": out_ids, "text_deduped": out_txt,
-                     "n_kept": out_n}
-                )
-
-        rebuilt = (
-            kept.select("doc_id", "span_idx", "span")
-            .repartition("doc_id")
-            .sortWithinPartitions("doc_id", "span_idx")
-            .mapInPandas(
-                _concat_docs,
-                "doc_id long, text_deduped string, n_kept long",
-            )
-        )
-    else:
-        raise ValueError(f"unknown rebuild: {rebuild!r}")
-    # n_spans is a per-doc scalar of the token count — no explode, no
-    # aggregation, no second pass over span rows
-    totals = toks.select("doc_id", n_spans.cast("long").alias("n_spans"))
+    span-keyed partial-agg shuffle (``first_occurrence``, map-side
+    combinable — hot spans cannot concentrate in a single reducer;
+    skew-fixture-tested), then ONE doc-keyed shuffle rebuilds
+    (``rebuild``). Deterministic, so unlike near-dup passes this has an
+    exact DuckDB oracle. NULL text counts as empty (``tokens``)."""
+    toks = df.select(_c(id_col).alias("doc_id"), tokens(text_col).alias("toks"))
+    kept = first_occurrence(span_rows(toks, span_tokens), "span", "doc_id", "span_idx")
+    totals = toks.select("doc_id", span_count(span_tokens).alias("n_spans"))
     return (
-        totals.join(rebuilt, on="doc_id", how="left")
+        totals.join(rebuild(kept, "span_idx", "span"), on="doc_id", how="left")
         .select(
             "doc_id",
-            F.coalesce("text_deduped", F.lit("")).alias("text_deduped"),
+            F.coalesce("text", F.lit("")).alias("text_deduped"),
             "n_spans",
             F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
         )
@@ -1254,30 +1210,14 @@ def dedup_paragraphs(
     )
     exploded = paras.select(
         "doc_id", F.posexplode("paras").alias("para_idx", "para")
-    ).filter(F.trim(F.col("para")) != "")
-    kept = (
-        exploded.groupBy(F.trim(F.col("para")).alias("key"))
-        .agg(F.min(F.struct("doc_id", "para_idx", "para")).alias("__first"))
-        .select(
-            F.col("__first.doc_id").alias("doc_id"),
-            F.col("__first.para_idx").alias("para_idx"),
-            F.col("__first.para").alias("para"),
-        )
-    )
+    ).withColumn("key", F.trim(F.col("para"))).filter(F.col("key") != "")
+    kept = first_occurrence(exploded, "key", "doc_id", "para_idx", "para")
     totals = exploded.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_paras"))
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("para_idx", "para"))),
-                lambda s: s["para"],
-            ),
-            sep,
-        ).alias("text_deduped"),
-        F.count(F.lit(1)).alias("n_kept"),
-    )
-    return totals.join(rebuilt, on="doc_id", how="left").select(
+    return totals.join(
+        rebuild(kept, "para_idx", "para", sep), on="doc_id", how="left"
+    ).select(
         "doc_id",
-        F.coalesce("text_deduped", F.lit("")).alias("text_deduped"),
+        F.coalesce("text", F.lit("")).alias("text_deduped"),
         "n_paras",
         F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
     )
@@ -1457,7 +1397,7 @@ def dedup_substrings(
     w = window_tokens
     toks = widen_small_scan(df).select(
         _c(id_col).alias("doc_id"),
-        F.split(F.trim(F.coalesce(_c(text_col), F.lit(""))), r"\s+").alias("toks"),
+        tokens(text_col).alias("toks"),
     )
     grams = (
         toks.filter(F.size("toks") >= w)
@@ -1526,28 +1466,18 @@ def dedup_substrings(
             F.sequence(F.col("start"), F.col("start") + F.lit(w - 1))
         ).alias("pos"),
     ).distinct()
-    tokens = toks.select(
+    tok_rows = toks.select(
         "doc_id", F.posexplode("toks").alias("pos0", "tok")
     ).withColumn("pos", F.col("pos0") + 1).drop("pos0")
-    kept = tokens.join(covered, on=["doc_id", "pos"], how="left_anti")
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                lambda s: s["tok"],
-            ),
-            " ",
-        ).alias("text_deduped"),
-        F.count(F.lit(1)).alias("n_kept"),
-    )
+    kept = tok_rows.join(covered, on=["doc_id", "pos"], how="left_anti")
     totals = toks.select(
         "doc_id", F.size("toks").cast("long").alias("n_tokens")
     )
     return (
-        totals.join(rebuilt, on="doc_id", how="left")
+        totals.join(rebuild(kept, "pos", "tok"), on="doc_id", how="left")
         .select(
             "doc_id",
-            F.coalesce("text_deduped", F.lit("")).alias("text_deduped"),
+            F.coalesce("text", F.lit("")).alias("text_deduped"),
             "n_tokens",
             (F.col("n_tokens") - F.coalesce("n_kept", F.lit(0)))
             .cast("long").alias("n_removed"),

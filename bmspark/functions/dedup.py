@@ -52,22 +52,29 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Keep exactly one row (min id) per identical normalized content.
+def keep_first(df: DataFrame, key: str | Column, *order: Column) -> DataFrame:
+    """Keep exactly ONE row per ``key``: the first in ``order``.
 
-    Positional (row_number) rather than (fp, min_id) semi-join: ONE
-    window shuffle on the uniform content hash instead of a groupBy +
-    join pass, and a row that appears twice under the same id passes a
-    semi-join twice but can hold rn = 1 only once (the same defect class
-    fixed in plans/incremental_dedup round 4)."""
+    Positional (row_number) rather than a (key, min) semi-join: ONE
+    window shuffle on the key instead of a groupBy + join pass, and a
+    row that appears twice under the same id passes a semi-join twice
+    but can hold rn = 1 only once. Spark plans the rank-1 filter as a
+    map-side (Partial) WindowGroupLimit, so a hot key ships at most one
+    candidate per map task into the shuffle."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(fingerprint(text_col)).orderBy(F.col(id_col).asc())
+    w = Window.partitionBy(key).orderBy(*order)
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Keep exactly one row (min id) per identical normalized content:
+    ``keep_first`` on the uniform content hash."""
+    return keep_first(df, fingerprint(text_col), F.col(id_col).asc())
 
 
 def exact_dedup_best(
@@ -78,21 +85,10 @@ def exact_dedup_best(
     choice is total and reruns keep the same rows). The knob a corpus
     team wants once quality scores exist — identical crawl duplicates
     often differ in extraction quality, and min-id throws the good copy
-    away whenever the worse one crawled first.
-
-    ONE window shuffle on the 128-bit content hash (uniform keys), a
-    positional row_number — no groupBy + semi-join pass, and no
-    duplicate-(fp, id) leak (the same row landed twice passes a min-id
-    SEMI-join twice; rn = 1 cannot)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(fingerprint(text_col)).orderBy(
-        F.col(quality_col).desc(), F.col(id_col).asc()
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    away whenever the worse one crawled first. ``keep_first`` on the
+    128-bit content hash (uniform keys)."""
+    return keep_first(
+        df, fingerprint(text_col), F.col(quality_col).desc(), F.col(id_col).asc()
     )
 
 

@@ -32,8 +32,10 @@ standard deterministic fix) and a FIXED iteration count:
 - determinism on any partitioning/core count: each doc's contribution
   r·x is fixed-pointed at 12 dp (round(r·x·1e12) as a long) and summed
   as DECIMAL(38,0) — an exact, order-independent sum (the dsir_weight
-  convention, round-8 cheap form: proven value-identical to the old
-  round-12dp DECIMAL(38,12) accumulate) — before the driver applies
+  convention, round-8 cheap form: checked value-identical to the old
+  round-12dp DECIMAL(38,12) accumulate on the round-8 probe corpus,
+  not proven — at a 12-dp half-way tie the two can differ by one
+  fixed-point ulp, 1e-12) — before the driver applies
   the float update. Two runs on any layout produce bit-identical
   weights (tested).
 
@@ -56,6 +58,8 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from bmspark.functions.curation import collect_sorted, tokens
 
 _B = 10_000  # bucket count — fixed by sampling.sample_bucket's hash
 
@@ -88,7 +92,7 @@ def hashed_features(
     keep = keep or {}
     toks = widen_small_scan(df).select(
         _c(id_col).alias("doc_id"),
-        F.split(F.trim(F.coalesce(_c(text_col), F.lit(""))), r"\s+").alias("toks"),
+        tokens(text_col).alias("toks"),
         *[c.alias(k) for k, c in keep.items()],
     )
     grams = toks.select(
@@ -111,9 +115,7 @@ def hashed_features(
     per_doc = (
         docbuck.groupBy("doc_id")
         .agg(
-            F.array_sort(
-                F.collect_list(F.struct("bucket", "cnt"))
-            ).alias("bc"),
+            collect_sorted("bucket", "cnt").alias("bc"),
             F.sum("cnt").alias("tot"),
         )
         .select(
@@ -224,11 +226,13 @@ def _train_rounds(
         # the bias gradient (synthetic bucket -1 with x=1), so each
         # round is ONE partial-agg shuffle + ONE bounded collect of
         # <= B+1 rows. The order-independent exact sum accumulates
-        # scaled-long contributions in DECIMAL(38,0): round(v*1e12, 0)
-        # recovers exactly the integer round(v,12)*1e12 (|v| <= 1, so
-        # the double product sits within ~4e-4 of that integer —
-        # proven equivalent bucket-for-bucket in the round-8 probe),
-        # and a long-valued decimal input more than halves the old
+        # scaled-long contributions in DECIMAL(38,0). round(v*1e12, 0)
+        # matched the integer round(v,12)*1e12 bucket-for-bucket on the
+        # round-8 probe corpus; that is an empirical check, not a proof:
+        # at a 12-dp half-way tie the double product v*1e12 can land
+        # just below .5 and round to the other neighbour, one
+        # fixed-point ulp (1e-12) off (test_quality_model pins such a
+        # v). A long-valued decimal input more than halves the old
         # DECIMAL(38,12) per-row BigDecimal cost while keeping 10^38
         # headroom (a long alone would overflow at corpus scale).
         grad_rows = (

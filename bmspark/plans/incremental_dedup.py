@@ -33,10 +33,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bmspark.functions import text
+from bmspark.functions import curation, dedup, text
 from bmspark.plans import ticks
 from bmspark.session import observe
 
@@ -128,16 +128,11 @@ def dedup_tick(
             "fp", text.fingerprint(text_col)
         )
         # within-tick: keep exactly ONE row per fingerprint — the min-id
-        # row, positionally via row_number (a (fp, min_id) semi-join would
+        # row, positionally via keep_first (a (fp, min_id) semi-join would
         # pass BOTH copies of a record that re-landed twice in one tick
         # with the same id, breaking the no-duplicate-fp invariant). One
         # window shuffle on fp, no join.
-        w = Window.partitionBy("fp").orderBy(F.col(id_col).asc())
-        tick_docs = (
-            docs.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        tick_docs = dedup.keep_first(docs, "fp", F.col(id_col).asc())
         # cross-tick: drop fingerprints any prior tick already emitted.
         # Chained anti-joins, one per state source group, NOT one anti
         # against their union: anti-join distributes over union, and
@@ -229,32 +224,6 @@ def read_corpus(spark: SparkSession, out_dir: str) -> DataFrame | None:
 # h-clustered generation exactly like the fp pipeline.
 
 
-def _tokens(text_col: str):
-    """Whitespace tokens, NULL text coalesced to '' (the dedup_spans
-    convention)."""
-    return F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
-
-
-def _span_frame(
-    docs: DataFrame, span_tokens: int, text_col: str, id_col: str
-) -> DataFrame:
-    """(doc_id, span_idx, span, h) — consecutive non-overlapping
-    ``span_tokens``-token segments."""
-    toks = docs.select(F.col(id_col).alias("doc_id"), _tokens(text_col).alias("toks"))
-    n_spans = F.ceil(F.size("toks") / F.lit(span_tokens)).cast("int")
-    return toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), n_spans - 1),
-                lambda i: F.array_join(
-                    F.slice("toks", i * span_tokens + 1, span_tokens), " "
-                ),
-            )
-        ).alias("span_idx", "span"),
-    ).withColumn("h", F.md5("span"))
-
-
 def span_dedup_tick(
     spark: SparkSession,
     source_path: str,
@@ -269,25 +238,22 @@ def span_dedup_tick(
     to ``out/spans/<n>``. Returns the run record, or None when the
     source has no new files.
 
-    Scale: within-tick dedup is ONE window shuffle on the uniform
-    128-bit span hash (map-side WindowGroupLimit pre-thins hot
-    boilerplate spans); cross-tick is one anti-join whose right side is
-    a single-column multi-path scan of prior hashes (compact to bound
-    the path count); the rebuild is one doc-keyed shuffle."""
+    Scale: within-tick dedup is ONE partial-agg shuffle on the uniform
+    128-bit span hash (``curation.first_occurrence``: hot boilerplate
+    spans collapse to one row per map task before the exchange);
+    cross-tick is one anti-join whose right side is a single-column
+    multi-path scan of prior hashes (compact to bound the path count);
+    the rebuild is one doc-keyed shuffle (``curation.rebuild``)."""
 
     def body(tick: int, new: list[str], state: dict) -> dict:
         docs = spark.read.parquet(*new)
-        spans = _span_frame(docs, span_tokens, text_col, id_col)
+        toks = docs.select(
+            F.col(id_col).alias("doc_id"), curation.tokens(text_col).alias("toks")
+        )
+        spans = curation.span_rows(toks, span_tokens).withColumn("h", F.md5("span"))
 
         # within-tick: first (doc_id, span_idx) occurrence of each span wins
-        w = Window.partitionBy("h").orderBy(
-            F.col("doc_id").asc(), F.col("span_idx").asc()
-        )
-        tick_spans = (
-            spans.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        tick_spans = curation.first_occurrence(spans, "h", "doc_id", "span_idx", "span")
         # cross-tick: drop spans any prior tick emitted (column-pruned scan)
         prior = ticks.live_dirs(out_dir, state, "spans", "n_spans_kept")
         if prior:
@@ -295,25 +261,8 @@ def span_dedup_tick(
             tick_spans = tick_spans.join(prior_h, on="h", how="left_anti")
 
         # rebuild docs from surviving spans, in span order; drop emptied docs
-        rebuilt = (
-            tick_spans.groupBy("doc_id")
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("span_idx", "span"))),
-                        lambda s: s["span"],
-                    ),
-                    " ",
-                ).alias("text"),
-                F.count(F.lit(1)).alias("n_kept"),
-            )
-        )
-        # n_spans is a per-doc scalar of the token count — no second explode
-        totals = docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.ceil(F.size(_tokens(text_col)) / F.lit(span_tokens))
-            .cast("long").alias("n_spans"),
-        )
+        rebuilt = curation.rebuild(tick_spans, "span_idx", "span")
+        totals = toks.select("doc_id", curation.span_count(span_tokens).alias("n_spans"))
         # the run record's counts ride on the two writes (observe).
         # Left join, so the observed frame holds every input doc; the
         # filter then keeps the docs with a surviving span (n_kept >= 1),

@@ -161,7 +161,6 @@ def clean_corpus(
             f"; known: {sorted(GOPHER_REP_DEFAULTS)}"
         )
 
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
@@ -262,13 +261,7 @@ def clean_corpus(
         order = [F.col("doc_id").asc()]
         if dedup_keep == "best-quality":
             order.insert(0, F.col("quality").desc())
-        w = Window.partitionBy("fp").orderBy(*order)
-        exact = (
-            quality_ok.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        exact = counted(exact, "after_exact_dedup")
+        exact = counted(dedup.keep_first(quality_ok, "fp", *order), "after_exact_dedup")
         # persist the exact-dedup survivors: every downstream stage
         # (paragraph/span dedup builds AND their join-backs, winnow
         # pairing, the final chain) re-derives this frame, so without

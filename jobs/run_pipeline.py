@@ -108,13 +108,17 @@ def main(argv: list[str]) -> int:
         )
 
     if args.streaming:
-        # the streaming runner honours routes only: refuse what it would drop
+        # the streaming runner honours route names and predicates only
+        # (parquet sinks, the default deadletter): refuse what it would drop
+        encodings = sorted({r.fmt for r in pipeline.routes} - {"parquet"})
         ignored = [
             flag for flag, given in (
                 ("--subscription", pipeline.subscription),
                 ("--prometheus", args.prometheus),
                 ("--incremental", args.incremental),
                 ("--route-mode single_pass", pipeline.route_mode == "single_pass"),
+                (f"encoding = {', '.join(encodings)}", encodings),
+                (f"deadletter = {pipeline.deadletter}", pipeline.deadletter != "deadletter"),
             ) if given
         ]
         if ignored:

@@ -168,9 +168,6 @@ def main() -> None:
     def op_spans(d):
         noop(curation.dedup_spans(d, 10))
 
-    def op_spans_stream(d):
-        noop(curation.dedup_spans(d, 10, rebuild="stream"))
-
     def op_substrings(d):
         noop(curation.dedup_substrings(d, 10))
 
@@ -234,7 +231,6 @@ def main() -> None:
     DOC_OPS = {
         "exact_dedup": op_exact_dedup,
         "dedup_spans": op_spans,
-        "dedup_spans_stream": op_spans_stream,
         "dedup_substrings": op_substrings,
         "dedup_substrings_hashed": op_substrings_hashed,
         "dedup_minhash": op_minhash,

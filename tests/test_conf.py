@@ -167,29 +167,34 @@ def test_cli_conf_precedence_end_to_end(spark, tmp_path):
         main(["--out", "/tmp/nope"])
 
 
-@pytest.mark.parametrize("flags, conf_subscription", [
-    (["--subscription", "lang = 'en'"], False),
-    ([], True),
-    (["--prometheus", "metrics.prom"], False),
-    (["--incremental"], False),
-    (["--route-mode", "single_pass"], False),
-], ids=["subscription", "conf_subscription", "prometheus", "incremental", "single_pass"])
-def test_cli_streaming_rejects_options_it_would_ignore(tmp_path, flags, conf_subscription):
-    """The streaming runner takes routes only: a subscription (flag or
-    conf), a Prometheus file, incremental mode or single_pass routing
-    given with --streaming is an argparse error (exit 2) raised before
-    any session starts or output is written, not silently dropped."""
+_SINK_EN = "[sink_en]\nstage = xport_output\npredicate = lang = 'en'\n"
+
+
+@pytest.mark.parametrize("flags, conf", [
+    (["--subscription", "lang = 'en'"], None),
+    ([], "[pages_in]\nstage = xport_input\ntype = file\n"
+         "subscription = lang = 'en'\n\n" + _SINK_EN),
+    (["--prometheus", "metrics.prom"], None),
+    (["--incremental"], None),
+    (["--route-mode", "single_pass"], None),
+    ([], _SINK_EN + "encoding = json\n"),
+    ([], "[default]\ndeadletter = dl\n\n" + _SINK_EN),
+], ids=["subscription", "conf_subscription", "prometheus", "incremental",
+        "single_pass", "conf_encoding", "conf_deadletter"])
+def test_cli_streaming_rejects_options_it_would_ignore(tmp_path, flags, conf):
+    """The streaming runner takes route names and predicates only: a
+    subscription (flag or conf), a Prometheus file, incremental mode,
+    single_pass routing, a non-parquet sink encoding or a renamed
+    deadletter given with --streaming is an argparse error (exit 2)
+    raised before any session starts or output is written, not
+    silently dropped."""
     from jobs.run_pipeline import main
 
     out = tmp_path / "out"
     argv = ["--streaming", "--source", str(tmp_path / "pages"), "--out", str(out)]
-    if conf_subscription:
-        ini = tmp_path / "sub.conf"
-        ini.write_text(
-            "[pages_in]\nstage = xport_input\ntype = file\n"
-            "subscription = lang = 'en'\n\n"
-            "[sink_en]\nstage = xport_output\npredicate = lang = 'en'\n"
-        )
+    if conf:
+        ini = tmp_path / "streaming.conf"
+        ini.write_text(conf)
         argv += ["--conf", str(ini)]
     flags = [str(tmp_path / f) if f.endswith(".prom") else f for f in flags]
     with pytest.raises(SystemExit) as exc:

@@ -515,28 +515,6 @@ def test_mix_plan_strict_guards_high_cardinality_source_col(spark):
     assert {r.source for r in plan} == {"s0", "s1"}
 
 
-def test_dedup_spans_stream_rebuild_byte_identical_to_agg(spark):
-    """rebuild='stream' (sort + one-doc-at-a-time Arrow concat) must
-    produce byte-identical output to the default JVM agg rebuild —
-    including multi-batch docs and fully-deduplicated (empty) docs."""
-    import numpy as np
-
-    rnd = np.random.RandomState(7)
-    pool = [" ".join(f"q{p}t{t}" for t in range(10)) for p in range(15)]
-    rows = []
-    for i in range(300):
-        k = rnd.randint(1, 8)
-        rows.append((i, " ".join(pool[j] for j in rnd.randint(0, 15, k))))
-    df = spark.createDataFrame(rows, "doc_id long, text string").repartition(7)
-    a = {r.doc_id: (r.text_deduped, r.n_spans, r.n_kept)
-         for r in curation.dedup_spans(df, 10, rebuild="agg").collect()}
-    s = {r.doc_id: (r.text_deduped, r.n_spans, r.n_kept)
-         for r in curation.dedup_spans(df, 10, rebuild="stream").collect()}
-    assert a == s
-    with pytest.raises(ValueError, match="unknown rebuild"):
-        curation.dedup_spans(df, 10, rebuild="nope")
-
-
 def test_dedup_spans_null_text_parity_with_oracle(spark):
     """NULL text: Spark and the DuckDB twin must agree on the row
     (coalesced to '' on both sides) — without the coalesce Spark emits

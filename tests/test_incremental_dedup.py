@@ -427,6 +427,12 @@ def test_incremental_span_dedup_matches_batch_and_compacts(spark, tmp_path):
         # tick 0 the span survives, later appearances are stripped
         if tick % 2 == 0:
             rows.append((tick * 10 + 9, span + f" tail{tick} x y z"))
+        # edge cases: NULL and whitespace-only text (each one empty
+        # span: the first keeps it, the second is emptied and dropped),
+        # a doc shorter than one span, a doc repeating its own span
+        if tick == 1:
+            rows += [(14, None), (15, "    "), (16, "short doc"),
+                     (17, "r1 r2 r3 r4 r5 r6 r7 r8 r9 r10 " * 2 + "end")]
         all_rows += rows
         land(tick, rows)
         run = idp.span_dedup_tick(spark, src, out, span_tokens=10)

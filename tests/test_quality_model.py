@@ -68,6 +68,20 @@ def test_quality_train_bit_identical_across_partitionings(spark):
     assert s1 == s2
 
 
+def test_fixed_point_form_is_one_ulp_off_at_a_half_way_tie(spark):
+    """The gradient sum fixes each contribution as round(v*1e12, 0).
+    That equals the old round(v, 12) * 1e12 away from ties, but not at
+    every 12-dp half-way tie: v*1e12 is a double, and for this v it
+    lands just below .5, so the two integers differ by one ulp."""
+    v = 0.5173266249315
+    row = spark.createDataFrame([(v,)], "v double").select(
+        F.round(F.col("v") * 1e12, 0).cast("long").alias("cheap"),
+        (F.round("v", 12).cast("decimal(38,12)") * 10**12)
+        .cast("long").alias("old"),
+    ).first()
+    assert (row.cheap, row.old) == (517326624931, 517326624932)
+
+
 def test_quality_score_handles_short_and_null_docs(spark):
     """Docs with <2 tokens have no bigram feature: they are scored by
     the bias alone — present in the output, never dropped (the

@@ -186,3 +186,74 @@ def test_keep_list_names_live_code_and_gives_reasons():
                     if d == name and (not qual or m.split(".")[-1] == qual[-1])}
             assert hits, f"keep list names {n!r}, which does not exist"
             assert not hits & from_programs, f"{n!r} now has a production caller"
+
+
+# -- the dedup idioms live in one place -----------------------------------------
+
+#: idiom -> (file, top-level def) of the one place it may appear
+DEDUP_CORE = {
+    "NULL-safe whitespace split": ("bmspark/functions/curation.py", "tokens"),
+    "array_sort(collect_list(...))": ("bmspark/functions/curation.py", "collect_sorted"),
+    "row_number() window filtered to == 1": ("bmspark/functions/dedup.py", "keep_first"),
+}
+
+
+def _callee(n) -> str | None:
+    """The called name of a Call node (``F.split(...)`` -> ``split``)."""
+    if isinstance(n, ast.Call):
+        f = n.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+    return None
+
+
+def _first_arg_calls(n, name: str) -> bool:
+    return bool(getattr(n, "args", None)) and _callee(n.args[0]) == name
+
+
+def _dedup_idiom_sites() -> set[tuple[str, str, str]]:
+    """(idiom, file, top-level def) for each use in ``bmspark/`` and
+    ``jobs/``. A row_number column is one named by ``withColumn(name,
+    ...row_number()...)`` or ``...row_number()....alias(name)``; the
+    idiom is a ``col(name) == 1`` comparison in the same def."""
+    out = set()
+    for p in sorted([*PKG.rglob("*.py"), *ROOT.glob("jobs/*.py")]):
+        for top in ast.parse(p.read_text(), str(p)).body:
+            rn_cols = set()
+            for n in ast.walk(top):
+                if _callee(n) == "withColumn" and len(n.args) == 2:
+                    name, expr = n.args
+                elif _callee(n) == "alias" and n.args and isinstance(n.func, ast.Attribute):
+                    name, expr = n.args[0], n.func.value
+                else:
+                    continue
+                if isinstance(name, ast.Constant) \
+                        and any(_callee(c) == "row_number" for c in ast.walk(expr)):
+                    rn_cols.add(name.value)
+            for n in ast.walk(top):
+                if _callee(n) == "split" and _first_arg_calls(n, "trim") \
+                        and _first_arg_calls(n.args[0], "coalesce"):
+                    idiom = "NULL-safe whitespace split"
+                elif _callee(n) == "array_sort" and _first_arg_calls(n, "collect_list"):
+                    idiom = "array_sort(collect_list(...))"
+                elif isinstance(n, ast.Compare) and isinstance(n.ops[0], ast.Eq) \
+                        and _callee(n.left) == "col" and n.left.args \
+                        and getattr(n.left.args[0], "value", None) in rn_cols \
+                        and getattr(n.comparators[0], "value", None) == 1:
+                    idiom = "row_number() window filtered to == 1"
+                else:
+                    continue
+                out.add((idiom, str(p.relative_to(ROOT)), getattr(top, "name", "<module>")))
+    return out
+
+
+def test_dedup_idioms_live_only_in_the_core():
+    """Keep-first and segment rebuild are written once (functions/dedup
+    ``keep_first``, the functions/curation segment core): each idiom
+    appears exactly at its core def and nowhere else in the program.
+    Finding the core defs themselves shows the scan still recognises
+    each idiom."""
+    sites = _dedup_idiom_sites()
+    core = {(idiom, f, d) for idiom, (f, d) in DEDUP_CORE.items()}
+    assert sites == core, (
+        f"outside the core: {sorted(sites - core)}; core not found: {sorted(core - sites)}"
+    )
