@@ -1310,11 +1310,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # oracles
 # ---------------------------------------------------------------------------
 
-_BIGRAM_SETS_SQL = """
+_BIGRAM_SETS_SQL = f"""
 tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-         generate_subscripts(string_split(text, ' '), 1) AS i
-  FROM documents
+  SELECT doc_id, unnest(t) AS w, generate_subscripts(t, 1) AS i
+  FROM (SELECT doc_id, {text.TOKENS_SQL.format(t='text')} AS t FROM documents)
 ), big AS (
   SELECT doc_id, w || ' ' || lead(w) OVER (PARTITION BY doc_id ORDER BY i) AS bg
   FROM tok
@@ -1648,13 +1647,13 @@ def oracle_sql() -> dict[str, str]:
         # hashed-bigram tf features (quality_model.hashed_features,
         # exploded to atomic rows; salt 'qmodel', floor-rounding both
         # sides; docs with <2 tokens contribute no feature row)
-        "quality_feats": """
+        "quality_feats": f"""
         WITH toks AS (
-          SELECT doc_id,
-                 string_split_regex(trim(coalesce(text, '')), '\\s+') AS t
-          FROM documents
+          SELECT doc_id, {text.TOKENS_SQL.format(t='text')} AS t FROM documents
         ), feats AS (
-          SELECT doc_id, CAST(__BUCKET__ AS BIGINT) AS bucket
+          SELECT doc_id,
+                 CAST({sampling.SAMPLE_BUCKET_SQL.format(salt='qmodel', key='gram')}
+                      AS BIGINT) AS bucket
           FROM (
             SELECT doc_id, array_to_string(t[i:i+1], ' ') AS gram
             FROM toks, LATERAL unnest(generate_series(1, len(t) - 1)) AS u(i)
@@ -1668,10 +1667,7 @@ def oracle_sql() -> dict[str, str]:
         SELECT c.doc_id, c.bucket,
                floor((CAST(c.c AS DOUBLE) / t.tot) * 1000000) / 1000000 AS tf
         FROM cts c JOIN tot t USING (doc_id)
-        """.replace(
-            "__BUCKET__",
-            sampling.SAMPLE_BUCKET_SQL.format(salt="qmodel", key="gram"),
-        ),
+        """,
         "mix_plan": curation.mix_plan_sql(
             {"src0": 3.0, "src1": 2.0, "src2": 2.0, "src3": 1.0},
             "documents",

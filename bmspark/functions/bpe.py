@@ -47,20 +47,15 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-
-def _c(col: str | Column) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from bmspark.functions.text import _c, tokens
 
 
 def _word_counts(df: DataFrame, text_col: str, lowercase: bool) -> DataFrame:
-    txt = F.trim(F.coalesce(_c(text_col), F.lit("")))
-    if lowercase:
-        txt = F.lower(txt)
+    txt = F.lower(_c(text_col)) if lowercase else _c(text_col)
     return (
-        df.select(F.explode(F.split(txt, r"\s+")).alias("word"))
-        .filter(F.col("word") != "")
+        df.select(F.explode(tokens(txt)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -230,7 +225,7 @@ def bpe_encode(
                 [[t for w in doc.split() for t in enc_word(w)] for doc in ser]
             )
 
-    txt = F.trim(F.coalesce(_c(text_col), F.lit("")))
+    txt = F.coalesce(_c(text_col), F.lit(""))
     if lowercase:
         txt = F.lower(txt)
     return df.select(

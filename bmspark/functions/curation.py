@@ -30,12 +30,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from bmspark.functions.text import token_count
+from bmspark.functions.text import TOKEN_COUNT_SQL, TOKENS_SQL, _c, token_count, tokens
 from bmspark.session import widen_small_scan
 
 
-def _c(col: str | Column) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+#: the tokens of a twin's ``text`` column (text.TOKENS_SQL)
+_TOKS = TOKENS_SQL.format(t="text")
 
 
 # -- per-group caps ----------------------------------------------------------
@@ -162,7 +162,7 @@ def repetition_metrics(
     """
     toks = df.select(
         _c(id_col).alias("doc_id"),
-        F.split(F.trim(_c(text_col)), r"\s+").alias("toks"),
+        tokens(text_col).alias("toks"),
     ).filter(F.size("toks") >= 2)
     # bigrams: materialized `toks` column referenced in the lambda (the
     # _bind rule: never build the array inside the lambda — HOF lambdas
@@ -206,8 +206,8 @@ def repetition_metrics_sql(table: str = "documents") -> str:
     """DuckDB twin of repetition_metrics."""
     return f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-      FROM {table} WHERE len(string_split_regex(trim(text), '\\s+')) >= 2
+      SELECT * FROM (SELECT doc_id, {_TOKS} AS t FROM {table})
+      WHERE len(t) >= 2
     ), tok AS (
       SELECT doc_id, unnest(t) AS w, generate_subscripts(t, 1) AS i, len(t) AS n
       FROM toks
@@ -348,7 +348,7 @@ def repetition_ngrams_sql(
     )
     return f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(coalesce(text, '')), '\\s+') AS t
+      SELECT doc_id, {_TOKS} AS t
       FROM {table}
     ), totals AS (
       SELECT doc_id, CAST(len(array_to_string(t, ' ')) AS BIGINT) AS n_chars
@@ -485,7 +485,7 @@ def dsir_weight_sql(
     B = 10_000
     return f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(coalesce(text, '')), '\\s+') AS t,
+      SELECT doc_id, {_TOKS} AS t,
              {target_pred} AS is_target
       FROM {table}
     ), feats AS (
@@ -622,10 +622,7 @@ def mix_plan_sql(
     vals = ", ".join(
         f"('{s}', {w / total_w!r})" for s, w in sorted(targets.items())
     )
-    tok = (
-        "CASE WHEN trim(text) = '' THEN 0 "
-        "ELSE len(string_split_regex(trim(text), '\\s+')) END"
-    )
+    tok = TOKEN_COUNT_SQL.format(t="text")
     return f"""
     WITH per AS (
       SELECT {source_col}, CAST(sum({tok}) AS BIGINT) AS n_tokens
@@ -683,8 +680,8 @@ def gopher_quality(
     windows, no joins."""
     tok = df.select(
         _c(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(_c(text_col)), r"\s+")).alias("w"),
-    ).filter(F.col("w") != "")
+        F.explode(tokens(text_col)).alias("w"),
+    )
     stats = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.round(F.avg(F.length("w")), 4).alias("mean_word_len"),
@@ -722,7 +719,7 @@ def gopher_quality_sql(
     stops = ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS)
     return f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
+      SELECT doc_id, unnest({_TOKS}) AS w
       FROM {table}
     ), stats AS (
       SELECT doc_id,
@@ -734,7 +731,7 @@ def gopher_quality_sql(
                        THEN 1.0 ELSE 0.0 END), 4) AS alpha_frac,
              CAST(sum(CASE WHEN lower(w) IN ({stops}) THEN 1 ELSE 0 END)
                   AS BIGINT) AS stop_hits
-      FROM tok WHERE w <> '' GROUP BY doc_id
+      FROM tok GROUP BY doc_id
     )
     SELECT *,
            (n_tokens BETWEEN {min_tokens} AND {max_tokens}
@@ -766,8 +763,8 @@ def freq_score(
     stopword-skew story (AQE skew-split; prune upstream if needed)."""
     toks = df.select(
         _c(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(_c(text_col)), r"\s+")).alias("term"),
-    ).filter(F.col("term") != "")
+        F.explode(tokens(text_col)).alias("term"),
+    )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     cf = toks.groupBy("term").agg(F.count(F.lit(1)).alias("corpus_freq"))
     return (
@@ -786,14 +783,14 @@ def freq_score_sql(table: str = "documents") -> str:
     """DuckDB twin of freq_score."""
     return f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS term
+      SELECT doc_id, unnest({_TOKS}) AS term
       FROM {table}
     ), tf AS (
       SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-      FROM tok WHERE term <> '' GROUP BY 1, 2
+      FROM tok GROUP BY 1, 2
     ), cf AS (
       SELECT term, CAST(count(*) AS BIGINT) AS corpus_freq
-      FROM tok WHERE term <> '' GROUP BY 1
+      FROM tok GROUP BY 1
     )
     SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS n_tokens,
            round(sum(tf.tf * log10(cf.corpus_freq)) / sum(tf.tf), 4)
@@ -856,15 +853,13 @@ def lm_score(
             ).alias("bg"),
         ).select("doc_id", "bg.w1", "bg.w2")
 
-    def unigrams(frame: DataFrame) -> DataFrame:
-        return toks(frame).select(F.explode("toks").alias("w")).filter(
-            F.col("w") != ""
-        )
-
     tr_bg = bigrams(train).groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("cb")
     )
-    tr_uni = unigrams(train).groupBy("w").agg(F.count(F.lit(1)).alias("cu"))
+    tr_uni = (
+        toks(train).select(F.explode("toks").alias("w"))
+        .groupBy("w").agg(F.count(F.lit(1)).alias("cu"))
+    )
     vocab_n = tr_uni.agg(F.count(F.lit(1)).alias("V"))
 
     doc_bg = bigrams(df)
@@ -908,7 +903,7 @@ def lm_score_sql(
     return f"""
     WITH toks AS (
       SELECT doc_id,
-             string_split_regex(trim(coalesce(text, '')), '\\s+') AS t,
+             {_TOKS} AS t,
              {train_pred} AS is_train
       FROM {table}
     ), bg AS (
@@ -916,9 +911,7 @@ def lm_score_sql(
       FROM toks, LATERAL unnest(generate_series(1, len(t) - 1)) AS u(i)
       WHERE len(t) >= 2
     ), uni AS (
-      SELECT w FROM (
-        SELECT unnest(t) AS w FROM toks WHERE is_train
-      ) WHERE w <> ''
+      SELECT unnest(t) AS w FROM toks WHERE is_train
     ), tr_bg AS (
       SELECT w1, w2, count(*) AS cb FROM bg WHERE is_train GROUP BY 1, 2
     ), tr_uni AS (
@@ -1020,15 +1013,6 @@ def ccnet_buckets_sql(table: str = "documents") -> str:
 # occurrence of a segment survives (its first), and how a doc is put
 # back together from its surviving segments. Each is written once here.
 
-def tokens(col: str | Column) -> Column:
-    """Whitespace tokens, NULL text coalesced to '' BEFORE tokenizing
-    (mirrored in every SQL twin): without it Spark still emits a NULL
-    doc (NULL sizes) while DuckDB's generate_series(1, NULL) drops it —
-    a latent oracle row-count mismatch on any corpus with NULL text
-    (ADVICE r04)."""
-    return F.split(F.trim(F.coalesce(_c(col), F.lit(""))), r"\s+")
-
-
 def span_count(span_tokens: int) -> Column:
     """Spans per doc, ceil(|toks| / span_tokens), as a long: a per-doc
     scalar of the token count, so totals need no explode, no aggregation
@@ -1038,17 +1022,17 @@ def span_count(span_tokens: int) -> Column:
 
 def span_rows(toks: DataFrame, span_tokens: int) -> DataFrame:
     """(doc_id, span_idx, span) from a (doc_id, toks) frame: consecutive
-    non-overlapping ``span_tokens``-token segments, joined by spaces."""
+    non-overlapping ``span_tokens``-token segments, joined by spaces. A
+    doc without tokens has none: its NULL array explodes to no row (a
+    bare sequence(0, -1) would count down to two spans)."""
     return toks.select(
         "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), span_count(span_tokens).cast("int") - 1),
-                lambda i: F.array_join(
-                    F.slice("toks", i * span_tokens + 1, span_tokens), " "
-                ),
-            )
-        ).alias("span_idx", "span"),
+        F.posexplode(F.when(F.size("toks") > 0, F.transform(
+            F.sequence(F.lit(0), span_count(span_tokens).cast("int") - 1),
+            lambda i: F.array_join(
+                F.slice("toks", i * span_tokens + 1, span_tokens), " "
+            ),
+        ))).alias("span_idx", "span"),
     )
 
 
@@ -1119,10 +1103,12 @@ def dedup_spans(
     combinable — hot spans cannot concentrate in a single reducer;
     skew-fixture-tested), then ONE doc-keyed shuffle rebuilds
     (``rebuild``). Deterministic, so unlike near-dup passes this has an
-    exact DuckDB oracle. NULL text counts as empty (``tokens``)."""
+    exact DuckDB oracle. Docs with no token (NULL, empty or whitespace-
+    only text) have no span and are absent, as in the twin."""
     toks = df.select(_c(id_col).alias("doc_id"), tokens(text_col).alias("toks"))
     kept = first_occurrence(span_rows(toks, span_tokens), "span", "doc_id", "span_idx")
     totals = toks.select("doc_id", span_count(span_tokens).alias("n_spans"))
+    totals = totals.filter(F.col("n_spans") > 0)
     return (
         totals.join(rebuild(kept, "span_idx", "span"), on="doc_id", how="left")
         .select(
@@ -1138,7 +1124,7 @@ def dedup_spans_sql(table: str = "documents", span_tokens: int = 10) -> str:
     """DuckDB twin of dedup_spans."""
     return f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(coalesce(text, '')), '\\s+') AS t
+      SELECT doc_id, {_TOKS} AS t
       FROM {table}
     ), spans AS (
       SELECT doc_id, i - 1 AS span_idx,
@@ -1272,8 +1258,9 @@ def c4_clean(
     (gopher_quality) accepts/rejects whole documents, C4's cleaning
     edits inside them: each line is kept only if it
 
-    - ends in a terminal punctuation mark (``. ! ? "``) after trimming,
-    - has at least ``min_words_per_line`` whitespace words, and
+    - ends in a terminal punctuation mark (``. ! ? "``) once edge
+      whitespace is stripped (CRLF text included),
+    - has at least ``min_words_per_line`` tokens, and
     - does not contain the word "javascript" (case-insensitive),
 
     and the document as a whole is flagged keep_doc = false if its
@@ -1297,10 +1284,12 @@ def c4_clean(
     )
 
     def _keep(l: Column) -> Column:
-        t = F.trim(l)
+        # joined tokens end where l.strip() does, with no line
+        # terminator for Java's `$` to match before
+        toks = tokens(l)
         return (
-            t.rlike('[.!?"]$')
-            & (F.size(F.split(t, r"\s+")) >= min_words_per_line)
+            F.array_join(toks, " ").rlike('[.!?"]$')
+            & (F.size(toks) >= min_words_per_line)
             & (F.locate("javascript", F.lower(l)) == 0)
         )
 
@@ -1332,6 +1321,7 @@ def c4_clean_sql(
 ) -> str:
     """DuckDB twin of c4_clean (list_filter lambda mirrors the Spark
     higher-order filter rule for rule)."""
+    toks = TOKENS_SQL.format(t="l")
     return f"""
     WITH split AS (
       SELECT doc_id, text,
@@ -1340,11 +1330,10 @@ def c4_clean_sql(
     ), cleaned AS (
       SELECT doc_id, text,
              CAST(len(lines) AS BIGINT) AS n_lines,
-             list_filter(lines, x ->
-               regexp_matches(trim(x), '[.!?"]$')
-               AND len(string_split_regex(trim(x), '\\s+'))
-                   >= {min_words_per_line}
-               AND NOT contains(lower(x), 'javascript')) AS kept
+             list_filter(lines, l ->
+               regexp_matches(array_to_string({toks}, ' '), '[.!?"]$')
+               AND len({toks}) >= {min_words_per_line}
+               AND NOT contains(lower(l), 'javascript')) AS kept
       FROM split
     )
     SELECT doc_id,
@@ -1491,7 +1480,7 @@ def dedup_substrings_sql(table: str = "documents", window_tokens: int = 10) -> s
     w = window_tokens
     return f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(coalesce(text, '')), '\\s+') AS t
+      SELECT doc_id, {_TOKS} AS t
       FROM {table}
     ), grams AS (
       SELECT doc_id, i AS start,
@@ -1551,8 +1540,8 @@ def vocab(
     (tfidf) would otherwise shuffle 10^11 occurrence rows for."""
     toks = df.select(
         _c(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(_c(text_col)), r"\s+")).alias("term"),
-    ).filter(F.col("term") != "")
+        F.explode(tokens(text_col)).alias("term"),
+    )
     out = toks.groupBy("term").agg(
         F.count(F.lit(1)).alias("term_count"),
         F.countDistinct("doc_id").alias("doc_freq"),
@@ -1573,12 +1562,12 @@ def vocab_sql(
     having = _df_bounds_sql(min_df, max_df)
     return f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS term
+      SELECT doc_id, unnest({_TOKS}) AS term
       FROM {table}
     )
     SELECT term, CAST(count(*) AS BIGINT) AS term_count,
            CAST(count(DISTINCT doc_id) AS BIGINT) AS doc_freq
-    FROM tok WHERE term <> '' GROUP BY term{having}
+    FROM tok GROUP BY term{having}
     """
 
 
@@ -1621,8 +1610,8 @@ def tfidf(
     (doc_id, term, tf, doc_freq, tfidf)."""
     toks = df.select(
         _c(id_col).alias("doc_id"),
-        F.explode(F.split(F.trim(_c(text_col)), r"\s+")).alias("term"),
-    ).filter(F.col("term") != "")
+        F.explode(tokens(text_col)).alias("term"),
+    )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = toks.groupBy("term").agg(F.countDistinct("doc_id").alias("doc_freq"))
     if min_df is not None:
@@ -1662,14 +1651,14 @@ def tfidf_sql(
     having = _df_bounds_sql(min_df, max_df)
     return f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS term
+      SELECT doc_id, unnest({_TOKS}) AS term
       FROM {table}
     ), tf AS (
       SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-      FROM tok WHERE term <> '' GROUP BY 1, 2
+      FROM tok GROUP BY 1, 2
     ), dfreq AS (
       SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS doc_freq
-      FROM tok WHERE term <> '' GROUP BY 1{having}
+      FROM tok GROUP BY 1{having}
     ), n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM {table})
     SELECT tf.doc_id, tf.term, tf.tf, dfreq.doc_freq,
            round(tf.tf * ln(CAST(n.n_docs AS DOUBLE) / dfreq.doc_freq), 4)
@@ -1743,10 +1732,7 @@ def pack_sequences_sql(
     """DuckDB recursive-CTE twin of pack_sequences: steps one row per
     shard per iteration, carrying (seq_id, acc) exactly like the
     sequential fill."""
-    tok = (
-        "CASE WHEN trim(text) = '' THEN 0 "
-        "ELSE len(string_split_regex(trim(text), '\\s+')) END"
-    )
+    tok = TOKEN_COUNT_SQL.format(t="text")
     return f"""
     WITH RECURSIVE base AS (
       SELECT doc_id, CAST(doc_id % {n_shards} AS INT) AS shard,
@@ -1854,7 +1840,7 @@ def contaminated_docs(
     def grams(df: DataFrame) -> DataFrame:
         toks = df.select(
             _c(id_col).alias("doc_id"),
-            F.split(F.trim(_c(text_col)), r"\s+").alias("toks"),
+            tokens(text_col).alias("toks"),
         ).filter(F.size("toks") >= n)
         return toks.select(
             "doc_id",
@@ -1886,8 +1872,7 @@ def contaminated_docs_sql(
     predicates (mirrors how the driver query splits one table)."""
     return f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-      FROM {table}
+      SELECT doc_id, {_TOKS} AS t FROM {table}
     ), g AS (
       SELECT doc_id, array_to_string(t[i:i+{n - 1}], ' ') AS gram
       FROM toks, LATERAL unnest(generate_series(1, len(t) - {n - 1})) AS u(i)
@@ -1936,7 +1921,7 @@ def contamination_fraction(
     flip; rounding to 6 digits happens only in the projected output."""
     toks = widen_small_scan(train).select(
         _c(id_col).alias("doc_id"),
-        F.split(F.trim(_c(text_col)), r"\s+").alias("toks"),
+        tokens(text_col).alias("toks"),
     ).filter(F.size("toks") >= n)
     dg = toks.select(
         "doc_id",
@@ -1952,7 +1937,7 @@ def contamination_fraction(
     )
 
     btoks = benchmark.select(
-        F.split(F.trim(_c(text_col)), r"\s+").alias("toks")
+        tokens(text_col).alias("toks")
     ).filter(F.size("toks") >= n)
     bench_grams = btoks.select(
         F.explode(
@@ -1990,8 +1975,7 @@ def contamination_fraction_sql(
     train-bench split predicates over one table)."""
     return f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-      FROM {table}
+      SELECT doc_id, {_TOKS} AS t FROM {table}
     ), g AS (
       SELECT doc_id, array_to_string(t[i:i+{n - 1}], ' ') AS gram
       FROM toks, LATERAL unnest(generate_series(1, len(t) - {n - 1})) AS u(i)
@@ -2039,9 +2023,7 @@ def corpus_stats(
     sketch-mergeable, so partials combine map-side like the other
     measures and no reducer ever materializes a group (the aggregate.py
     A6 convention; no oracle guarantee in that mode)."""
-    from bmspark.functions import text as _text
-
-    n_tok = _text.token_count(_c(text_col)).cast("bigint")
+    n_tok = token_count(text_col).cast("bigint")
     pfn = "percentile_approx" if approx else "percentile"
     base = df.select(
         *[_c(c).alias(c) for c in group_cols],
@@ -2064,9 +2046,7 @@ def corpus_stats_sql(
     group_cols: tuple[str, ...] = ("source", "lang"),
 ) -> str:
     """DuckDB twin of corpus_stats (exact-percentile mode only)."""
-    from bmspark.functions import text as _text
-
-    tok = _text.TOKEN_COUNT_SQL.format(t="text")
+    tok = TOKEN_COUNT_SQL.format(t="text")
     gcols = ", ".join(group_cols)
     return f"""
     WITH base AS (

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from bmspark.functions.text import fingerprint
+from bmspark.functions.text import fingerprint, tokens
 from bmspark.session import widen_small_scan
 
 # ---------------------------------------------------------------------------
@@ -103,7 +103,7 @@ def _bigram_sets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     from pyspark.sql import Window
 
     toks = df.select(
-        F.col(id_col), F.posexplode(F.split(F.col(text_col), " ")).alias("i", "w")
+        F.col(id_col), F.posexplode(tokens(text_col)).alias("i", "w")
     )
     w = Window.partitionBy(id_col).orderBy("i")
     big = (

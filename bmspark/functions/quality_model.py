@@ -59,13 +59,10 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from bmspark.functions.curation import collect_sorted, tokens
+from bmspark.functions.curation import collect_sorted
+from bmspark.functions.text import _c, tokens
 
 _B = 10_000  # bucket count — fixed by sampling.sample_bucket's hash
-
-
-def _c(col: str | Column) -> Column:
-    return F.col(col) if isinstance(col, str) else col
 
 
 def hashed_features(

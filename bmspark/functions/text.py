@@ -23,19 +23,49 @@ def _c(col: str | Column) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-# -- token counting ---------------------------------------------------------
+# -- tokens -----------------------------------------------------------------
+#
+# The one token rule: a text's tokens are text.split() — runs of non-
+# whitespace, whitespace being the 29 code points of str.isspace(), so
+# NULL, '' and whitespace-only text have none. Python code calls
+# str.split(); the JVM calls ``tokens``, DuckDB formats ``TOKENS_SQL``.
+# (Both engines' trim strip spaces only; Java's \s has \v, RE2's not.)
+
+#: one or more whitespace code points, spelled so Java regex and RE2 agree
+WS = (
+    r"[\t\n\x0b\x0c\r\x1c-\x20\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+    r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+"
+)
+#: WS as a SQL literal inside a str.format template (its braces doubled)
+_WS_SQL = "'" + WS.replace("{", "{{").replace("}", "}}") + "'"
+
+
+def tokens(text: str | Column) -> Column:
+    """array<string> of the text's tokens; built-ins only (codegen)."""
+    return F.array_remove(F.split(F.coalesce(_c(text), F.lit("")), WS), "")
+
+
+TOKENS_SQL = (
+    "list_filter(string_split_regex(coalesce({t}, ''), " + _WS_SQL + "), "
+    "x -> x <> '')"
+)
+
+
+def normalized(text: str | Column) -> Column:
+    """Lowercase text with each whitespace run as one space and none at
+    the edges: ' '.join(text.lower().split()). NULL stays NULL."""
+    return F.trim(F.regexp_replace(F.lower(_c(text)), WS, " "))
+
+
+NORMALIZED_SQL = "trim(regexp_replace(lower({t}), " + _WS_SQL + ", ' ', 'g'))"
+
 
 def token_count(text: str | Column) -> Column:
-    """Whitespace tokenization count. split on \\s+ after trim; empty
-    string → 0 (size of split('') is 1, so special-case)."""
-    t = F.trim(_c(text))
-    return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
+    """Number of tokens; 0 for NULL."""
+    return F.size(tokens(text))
 
 
-TOKEN_COUNT_SQL = (
-    "CASE WHEN trim({t}) = '' THEN 0 "
-    "ELSE len(string_split_regex(trim({t}), '\\s+')) END"
-)
+TOKEN_COUNT_SQL = "len(" + TOKENS_SQL + ")"
 
 # -- BPE-ish subword token estimate (regex segmentation) --------------------
 
@@ -61,13 +91,10 @@ def fingerprint(text: str | Column) -> Column:
     """Document fingerprint: md5 of whitespace-normalized lowercase text.
     Stable across engines (md5 is md5); the content-hash used by exact
     dedup and lineage manifests."""
-    norm = F.regexp_replace(F.lower(F.trim(_c(text))), r"\s+", " ")
-    return F.md5(norm)
+    return F.md5(normalized(text))
 
 
-FINGERPRINT_SQL = (
-    "md5(regexp_replace(lower(trim({t})), '\\s+', ' ', 'g'))"
-)
+FINGERPRINT_SQL = "md5(" + NORMALIZED_SQL + ")"
 
 # -- quality scoring --------------------------------------------------------
 
@@ -83,7 +110,7 @@ def quality_score(text: str | Column) -> Column:
     Deterministic, built-ins only, mirrored in QUALITY_SQL."""
     t = _c(text)
     n = F.length(t)
-    toks = F.split(F.trim(t), r"\s+")
+    toks = tokens(t)
     n_tok = F.greatest(F.size(toks), F.lit(1))
     stop = F.size(F.filter(toks, lambda x: x.isin(_STOPWORDS)))
     punct = n - F.length(F.regexp_replace(t, r"[.,!?;:]", ""))
@@ -101,9 +128,9 @@ QUALITY_SQL = (
     "0.4 * least(length({t}) / 500.0, 1.0) "
     "+ 0.3 * (1.0 - least((length({t}) - length(regexp_replace({t}, '[.,!?;:]', '', 'g')))"
     "::DOUBLE / greatest(length({t}), 1) * 10, 1.0)) "
-    "+ 0.3 * least(len(list_filter(string_split_regex(trim({t}), '\\s+'), "
+    "+ 0.3 * least(len(list_filter(" + TOKENS_SQL + ", "
     f"x -> x IN ({_STOP_IN})))"
-    "::DOUBLE / greatest(len(string_split_regex(trim({t}), '\\s+')), 1) / 0.3, 1.0)"
+    "::DOUBLE / greatest(" + TOKEN_COUNT_SQL + ", 1) / 0.3, 1.0)"
     ") * 10000) / 10000"
 )
 
@@ -203,8 +230,7 @@ def winnow_fingerprints(
                 out.append([{"pos": p, "fp": f} for p, f in pairs])
             yield pd.Series(out)
 
-    norm = F.regexp_replace(F.lower(F.trim(_c(text))), r"\s+", " ")
-    return _winnow(F.split(norm, " "))
+    return _winnow(F.split(normalized(text), " "))
 
 
 #: DuckDB twin of winnow_fingerprints. Same normalization, same md5-60bit
@@ -212,9 +238,7 @@ def winnow_fingerprints(
 #: as CTEs: toks → grams → pairs → unnest. Concrete k=3, w=4 (matching
 #: WINNOW_K/WINNOW_W); DuckDB list slices are 1-based inclusive, so a
 #: k-gram at i is toks[i:i+2] and a window at j is grams[j:j+wlen-1].
-WINNOW_TOKS_SQL = (
-    "string_split(regexp_replace(lower(trim({t})), '\\s+', ' ', 'g'), ' ')"
-)
+WINNOW_TOKS_SQL = "string_split(" + NORMALIZED_SQL + ", ' ')"
 WINNOW_GRAMS_SQL = (
     "CASE WHEN len(toks) >= 3 THEN "
     "list_transform(generate_series(1, len(toks) - 2), "

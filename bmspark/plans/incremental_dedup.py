@@ -248,7 +248,7 @@ def span_dedup_tick(
     def body(tick: int, new: list[str], state: dict) -> dict:
         docs = spark.read.parquet(*new)
         toks = docs.select(
-            F.col(id_col).alias("doc_id"), curation.tokens(text_col).alias("toks")
+            F.col(id_col).alias("doc_id"), text.tokens(text_col).alias("toks")
         )
         spans = curation.span_rows(toks, span_tokens).withColumn("h", F.md5("span"))
 

@@ -516,33 +516,36 @@ def test_mix_plan_strict_guards_high_cardinality_source_col(spark):
 
 
 def test_dedup_spans_null_text_parity_with_oracle(spark):
-    """NULL text: Spark and the DuckDB twin must agree on the row
-    (coalesced to '' on both sides) — without the coalesce Spark emits
-    the doc while generate_series(1, NULL) silently drops it."""
+    """NULL and whitespace-only text have no token, so no span: Spark
+    and the DuckDB twin both leave the doc out, rather than emit an
+    empty span the first such doc would own corpus-wide."""
     import duckdb
     import pandas as pd
 
-    rows = [
+    def both(rows):
+        sdf = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {
+            r.doc_id: (r.text_deduped, r.n_spans, r.n_kept)
+            for r in curation.dedup_spans(sdf, 10).collect()
+        }
+        con = duckdb.connect()
+        con.register("docs_null", pd.DataFrame(rows, columns=["doc_id", "text"]))
+        ora = {
+            int(r[0]): (r[1], int(r[2]), int(r[3]))
+            for r in con.execute(
+                curation.dedup_spans_sql("docs_null", 10)
+            ).fetchall()
+        }
+        assert got == ora
+        return got
+
+    assert both([(1, None), (2, "  \t "), (3, "a b")]) == {3: ("a b", 1, 1)}
+    got = both([
         (1, "a b c d e f g h i j k l"),
         (2, None),
         (3, "a b c d e f g h i j z z"),
-    ]
-    sdf = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: (r.text_deduped, r.n_spans, r.n_kept)
-        for r in curation.dedup_spans(sdf, 10).collect()
-    }
-
-    con = duckdb.connect()
-    con.register("docs_null", pd.DataFrame(rows, columns=["doc_id", "text"]))
-    ora = {
-        int(r[0]): (r[1], int(r[2]), int(r[3]))
-        for r in con.execute(
-            curation.dedup_spans_sql("docs_null", 10)
-        ).fetchall()
-    }
-    assert got == ora
-    assert 2 in got  # the NULL-text doc is present on BOTH sides
+    ])
+    assert sorted(got) == [1, 3]
 
 
 def test_contaminated_docs_broadcast_knob_same_answer(spark, docs):
@@ -643,7 +646,7 @@ def test_dedup_substrings_overlapping_window_semantics(spark):
     assert got[1] == (f"{span} tail1 one", 12, 0)
     assert got[2] == ("lead2 tail2", 12, 10)
     assert got[3] == ("x1 x2 x3 x4 x5", 5, 0)
-    assert got[4] == ("", 1, 0)
+    assert got[4] == ("", 0, 0)                 # NULL text: no token
     assert got[5] == ("", 20, 20)
     # precision vs dedup_spans: the fixed-segment form can only strip
     # aligned segments — here the restated 10-gram in doc 2 is OFFSET
@@ -756,7 +759,11 @@ def test_c4_clean_line_rules(spark):
     """Each C4 rule fires independently: terminal punctuation, minimum
     words per line, the javascript marker, and the doc-level lorem
     ipsum / curly-brace / no-surviving-lines flags (Raffel et al. 2020
-    §2.2)."""
+    §2.2). The DuckDB twin agrees row for row, CRLF lines included:
+    a line's trailing \\r is whitespace, neither a word nor the end."""
+    import duckdb
+    import pandas as pd
+
     rows = [
         # one good line, one unterminated, one short, one javascript
         (1, 'Good sentence with words here.\nno terminal punct line\n'
@@ -766,9 +773,14 @@ def test_c4_clean_line_rules(spark):
         (4, 'Contains lorem ipsum filler text here.\nKept line or not?'),
         (5, 'function f() { return 1; }\nReal sentence here though.'),
         (6, None),                                      # NULL text
+        (7, 'First line ends here.\r\nToo short.\r\nno terminal here\r\n'),
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r.doc_id: r for r in curation.c4_clean(d).collect()}
+    con = duckdb.connect()
+    con.register("c4_docs", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    ora = {r[0]: tuple(r[1:]) for r in con.execute(curation.c4_clean_sql("c4_docs")).fetchall()}
+    assert {i: tuple(r[1:]) for i, r in out.items()} == ora
     assert out[1].n_lines == 4 and out[1].n_kept == 1
     assert out[1].text_clean == "Good sentence with words here."
     assert out[1].keep_doc
@@ -780,6 +792,7 @@ def test_c4_clean_line_rules(spark):
     assert out[5].n_kept == 1 and not out[5].keep_doc      # curly brace
     assert out[6].n_lines == 1 and out[6].n_kept == 0 \
         and not out[6].keep_doc
+    assert out[7].n_lines == 4 and out[7].text_clean == "First line ends here.\r"
 
 
 def test_c4_clean_min_words_knob(spark):

@@ -427,12 +427,13 @@ def test_incremental_span_dedup_matches_batch_and_compacts(spark, tmp_path):
         # tick 0 the span survives, later appearances are stripped
         if tick % 2 == 0:
             rows.append((tick * 10 + 9, span + f" tail{tick} x y z"))
-        # edge cases: NULL and whitespace-only text (each one empty
-        # span: the first keeps it, the second is emptied and dropped),
-        # a doc shorter than one span, a doc repeating its own span
+        # edge cases: NULL and whitespace-only text (no token, so no
+        # span: never emitted), docs shorter than one span, a doc
+        # repeating its own span
         if tick == 1:
             rows += [(14, None), (15, "    "), (16, "short doc"),
-                     (17, "r1 r2 r3 r4 r5 r6 r7 r8 r9 r10 " * 2 + "end")]
+                     (17, "r1 r2 r3 r4 r5 r6 r7 r8 r9 r10 " * 2 + "end"),
+                     (18, None), (19, "  \t "), (13, "a b")]
         all_rows += rows
         land(tick, rows)
         run = idp.span_dedup_tick(spark, src, out, span_tokens=10)
@@ -458,6 +459,7 @@ def test_incremental_span_dedup_matches_batch_and_compacts(spark, tmp_path):
         ).filter(F.col("n_kept") > 0).collect()
     }
     assert got == batch
+    assert not {14, 15, 18, 19} & set(got) and got[13] == ("a b", 1, 1)
     # the planted span survives exactly once, in its tick-0 doc
     carriers = [i for i, (t, _n, _k) in got.items() if span in t]
     assert carriers == [9]

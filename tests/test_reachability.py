@@ -190,12 +190,17 @@ def test_keep_list_names_live_code_and_gives_reasons():
 
 # -- the dedup idioms live in one place -----------------------------------------
 
-#: idiom -> (file, top-level def) of the one place it may appear
+#: idiom -> (file, top-level defs) of the one place it may appear
 DEDUP_CORE = {
-    "NULL-safe whitespace split": ("bmspark/functions/curation.py", "tokens"),
-    "array_sort(collect_list(...))": ("bmspark/functions/curation.py", "collect_sorted"),
-    "row_number() window filtered to == 1": ("bmspark/functions/dedup.py", "keep_first"),
+    "whitespace split or replace": (
+        "bmspark/functions/text.py",
+        ("tokens", "TOKENS_SQL", "normalized", "NORMALIZED_SQL", "_WS_SQL"),
+    ),
+    "array_sort(collect_list(...))": ("bmspark/functions/curation.py", ("collect_sorted",)),
+    "row_number() window filtered to == 1": ("bmspark/functions/dedup.py", ("keep_first",)),
 }
+#: names of the whitespace class (functions/text.py WS and its SQL literal)
+WS_NAMES = {"WS", "_WS_SQL"}
 
 
 def _callee(n) -> str | None:
@@ -210,13 +215,24 @@ def _first_arg_calls(n, name: str) -> bool:
     return bool(getattr(n, "args", None)) and _callee(n.args[0]) == name
 
 
+def _is_whitespace_rule(n) -> bool:
+    """A use of the whitespace class (``WS``, ``_WS_SQL``), a ``\\s+``
+    pattern, or a DuckDB ``string_split_regex(`` call."""
+    if isinstance(n, (ast.Name, ast.Attribute)) and isinstance(n.ctx, ast.Load):
+        return (n.id if isinstance(n, ast.Name) else n.attr) in WS_NAMES
+    return isinstance(n, ast.Constant) and isinstance(n.value, str) \
+        and ("\\s+" in n.value or "string_split_regex(" in n.value)
+
+
 def _dedup_idiom_sites() -> set[tuple[str, str, str]]:
-    """(idiom, file, top-level def) for each use in ``bmspark/`` and
-    ``jobs/``. A row_number column is one named by ``withColumn(name,
-    ...row_number()...)`` or ``...row_number()....alias(name)``; the
-    idiom is a ``col(name) == 1`` comparison in the same def."""
+    """(idiom, file, top-level def or assigned name) for each use in
+    ``bmspark/``, ``jobs/`` and ``__spark_entry__.py``. A row_number
+    column is one named by ``withColumn(name, ...row_number()...)`` or
+    ``...row_number()....alias(name)``; the idiom is a ``col(name) ==
+    1`` comparison in the same def."""
     out = set()
-    for p in sorted([*PKG.rglob("*.py"), *ROOT.glob("jobs/*.py")]):
+    files = [*PKG.rglob("*.py"), *ROOT.glob("jobs/*.py"), ROOT / "__spark_entry__.py"]
+    for p in sorted(files):
         for top in ast.parse(p.read_text(), str(p)).body:
             rn_cols = set()
             for n in ast.walk(top):
@@ -230,9 +246,8 @@ def _dedup_idiom_sites() -> set[tuple[str, str, str]]:
                         and any(_callee(c) == "row_number" for c in ast.walk(expr)):
                     rn_cols.add(name.value)
             for n in ast.walk(top):
-                if _callee(n) == "split" and _first_arg_calls(n, "trim") \
-                        and _first_arg_calls(n.args[0], "coalesce"):
-                    idiom = "NULL-safe whitespace split"
+                if _is_whitespace_rule(n):
+                    idiom = "whitespace split or replace"
                 elif _callee(n) == "array_sort" and _first_arg_calls(n, "collect_list"):
                     idiom = "array_sort(collect_list(...))"
                 elif isinstance(n, ast.Compare) and isinstance(n.ops[0], ast.Eq) \
@@ -242,18 +257,21 @@ def _dedup_idiom_sites() -> set[tuple[str, str, str]]:
                     idiom = "row_number() window filtered to == 1"
                 else:
                     continue
-                out.add((idiom, str(p.relative_to(ROOT)), getattr(top, "name", "<module>")))
+                name = top.targets[0].id if isinstance(top, ast.Assign) \
+                    else getattr(top, "name", "<module>")
+                out.add((idiom, str(p.relative_to(ROOT)), name))
     return out
 
 
 def test_dedup_idioms_live_only_in_the_core():
-    """Keep-first and segment rebuild are written once (functions/dedup
-    ``keep_first``, the functions/curation segment core): each idiom
-    appears exactly at its core def and nowhere else in the program.
+    """Keep-first, segment rebuild and the token rule are written once
+    (functions/dedup ``keep_first``, the functions/curation segment
+    core, the functions/text token rule and normalization): each idiom
+    appears exactly at its core defs and nowhere else in the program.
     Finding the core defs themselves shows the scan still recognises
     each idiom."""
     sites = _dedup_idiom_sites()
-    core = {(idiom, f, d) for idiom, (f, d) in DEDUP_CORE.items()}
+    core = {(idiom, f, d) for idiom, (f, defs) in DEDUP_CORE.items() for d in defs}
     assert sites == core, (
         f"outside the core: {sorted(sites - core)}; core not found: {sorted(core - sites)}"
     )

@@ -1,37 +1,69 @@
 """Property-based tests for the text-analysis surface (hypothesis) —
 the upgrade over the reference's table-driven-only tests (SURVEY.md §5.2.7).
-Spark-free: the properties constrain the SHARED semantics (the same
-expressions run JVM-side and in the DuckDB oracle), so we check the
-pure-Python equivalents of each contract."""
+Where a contract is shared by the JVM and the DuckDB twin, the test runs
+both engines against the pure-Python reference."""
 
 from __future__ import annotations
 
 import hashlib
-import re
+import random
 
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bmspark.functions.dedup import simhash_of_tokens
-from bmspark.functions.text import WINNOW_K, WINNOW_W, _bind, _c, _hash60
+from bmspark.functions.text import WINNOW_K, WINNOW_W, _bind, _hash60, normalized
 from bmspark.oracle_extract import extract
 
-texts = st.text(
-    alphabet=st.characters(blacklist_categories=("Cs",)), max_size=400
-)
 
+def test_token_rule_is_str_split_in_both_engines(spark, duck):
+    """text.tokens (JVM) and TOKENS_SQL (DuckDB) both give s.split(),
+    and both fingerprint normalizations give ' '.join(s.lower().split())
+    (so fingerprint is the md5 of that), on ~2k seeded random strings
+    over letters, every whitespace code point and U+200B (which is not
+    whitespace), plus NULL, '' and edge whitespace."""
+    from bmspark.functions import text
 
-@settings(max_examples=200, deadline=None)
-@given(texts)
-def test_fingerprint_whitespace_invariance(t):
-    """fingerprint(x) is invariant under leading/trailing/extra internal
-    whitespace — the normalization contract both engines implement."""
-    def fp(s):
-        norm = re.sub(r"\s+", " ", s.strip().lower())
-        return hashlib.md5(norm.encode()).hexdigest()
+    spaces = [chr(c) for c in range(0x110000) if chr(c).isspace()]
+    assert len(spaces) == 29
+    rng = random.Random(0)
+    cases = [None, "", "  \t ", "\n\nhello world\n", "a\x0bb", "x\u3000y"] + [
+        "".join(
+            rng.choice("abcXYZé" if rng.random() < 0.5 else spaces + ["\u200b"])
+            for _ in range(rng.randint(0, 12))
+        )
+        for _ in range(2000)
+    ]
+    want = {}
+    for i, s in enumerate(cases):
+        norm = None if s is None else " ".join(s.lower().split())
+        fp = None if s is None else hashlib.md5(norm.encode()).hexdigest()
+        want[i] = ((s or "").split(), norm, fp)
 
-    assert fp(t) == fp("  " + t + "\t") == fp(t.replace(" ", "  "))
+    df = spark.createDataFrame(list(enumerate(cases)), "i int, s string")
+    jvm = {
+        r.i: (r.toks, r.norm, r.fp)
+        for r in df.select(
+            "i", text.tokens("s").alias("toks"),
+            text.normalized("s").alias("norm"), text.fingerprint("s").alias("fp"),
+        ).collect()
+    }
+    duck.register("__ws_cases", pd.DataFrame({"i": range(len(cases)), "s": cases}))
+    try:
+        ddb = {
+            i: (toks, norm, fp)
+            for i, toks, norm, fp in duck.execute(
+                f"SELECT i, {text.TOKENS_SQL.format(t='s')}, "
+                f"{text.NORMALIZED_SQL.format(t='s')}, "
+                f"{text.FINGERPRINT_SQL.format(t='s')} FROM __ws_cases"
+            ).fetchall()
+        }
+    finally:
+        duck.unregister("__ws_cases")
+    assert jvm == want
+    assert ddb == want
 
 
 @settings(max_examples=200, deadline=None)
@@ -212,9 +244,8 @@ def winnow_fingerprints_jvm(text, k: int = WINNOW_K, w: int = WINNOW_W):
             )
         )
 
-    norm = F.regexp_replace(F.lower(F.trim(_c(text))), r"\s+", " ")
     return _bind(
-        F.split(norm, " "),
+        F.split(normalized(text), " "),
         lambda toks: _bind(_grams(toks), _selected),
     )
 
