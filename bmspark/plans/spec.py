@@ -214,9 +214,11 @@ def run_pipeline(
         return _run_single_pass(spark, spec, pages=pages, parse_udf=parse_udf)
     t0 = time.monotonic()
     fp = spec.fingerprint()
-    labeled, columns = label_sinks(
-        spec, build_enriched(spark, spec, pages=pages, parse_udf=parse_udf)
-    )
+    enriched = build_enriched(spark, spec, pages=pages, parse_udf=parse_udf)
+    # lineage records the files this plan reads (an incremental tick's new
+    # files, [] for an inline frame), taken before the persist hides them
+    source_files = sorted(enriched.inputFiles())
+    labeled, columns = label_sinks(spec, enriched)
     labeled = labeled.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         observed, read_counts = observe(labeled, **_label_counts(columns))
@@ -224,16 +226,6 @@ def run_pipeline(
         observed.write.format("noop").mode("overwrite").save()
         counts = read_counts()
         input_count = counts.pop("__input")
-        # lineage must record what was ACTUALLY consumed: for an explicit
-        # pages DataFrame (e.g. an incremental tick's new-file subset)
-        # that is pages.inputFiles(), not a relisting of source_path
-        try:
-            if pages is not None:
-                source_files = sorted(pages.inputFiles())
-            else:
-                source_files = sorted(spark.read.parquet(spec.source_path).inputFiles())
-        except Exception:
-            source_files = []  # inline DataFrame with no file source
 
         fmts = {rule.name: rule.fmt for rule in spec.routes}
         paths = {name: sink_path(spec, name) for name in columns}

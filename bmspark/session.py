@@ -15,6 +15,8 @@ from contextlib import contextmanager
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
+from bmspark import worker_daemon
+
 # Confs that matter at the 10^12-doc design point (SURVEY.md §4):
 #  - AQE on: runtime shuffle-partition coalescing, skew-join splitting,
 #    dynamic broadcast conversion. At 100 TB a static shuffle.partitions
@@ -71,6 +73,13 @@ _BASE_CONFS = {
     "spark.sql.warehouse.dir": "/tmp/bmspark_warehouse",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
+# Python workers import the installed pyspark, not Spark's zip and jar
+# (worker_daemon), when its daemon can import bmspark at start: bmspark is
+# on disk in the cwd or on PYTHONPATH, not in a --py-files zip.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(worker_daemon.__file__)))
+if os.path.isfile(worker_daemon.__file__) and _ROOT in map(
+        os.path.abspath, [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]):
+    _BASE_CONFS["spark.python.daemon.module"] = worker_daemon.__name__
 
 
 def get_session(

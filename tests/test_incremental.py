@@ -125,3 +125,44 @@ def test_tick_retry_after_crash_sees_late_files(spark, tmp_path):
     }
     checks = check_routed_equality(spark, spark.read.parquet(src), sinks)
     assert all(checks.values()), checks
+
+
+def test_lineage_source_files_name_what_the_run_read(spark, tmp_path):
+    """A sink manifest's ``metrics.source_files`` names the files the run
+    planned: every file of the source for a batch run, only the new file
+    for an incremental tick, none for an inline frame."""
+    import pandas as pd
+
+    from bmspark.plans import lineage
+
+    src = tmp_path / "src"
+    fixtures.synth_pages(spark, 120, partitions=2).write.parquet(str(src))
+
+    def read(result, sink="sink_en"):
+        files = lineage.read_manifest(result.paths[sink])["metrics"]["source_files"]
+        assert files == sorted(files)
+        return [f.rsplit("/", 1)[-1] for f in files]
+
+    first = sorted(p.name for p in src.glob("*.parquet"))
+    assert len(first) == 2
+    batch = spec.run_pipeline(spark, spec.PipelineSpec(
+        source_path=str(src), out_dir=str(tmp_path / "batch"), routes=spec.DEFAULT_ROUTES))
+    assert read(batch) == read(batch, "deadletter") == first
+
+    s = spec.PipelineSpec(source_path=str(src), out_dir=str(tmp_path / "inc"),
+                          routes=spec.DEFAULT_ROUTES)
+    assert read(incremental.incremental_run(spark, s)) == first
+    spark.createDataFrame(
+        pd.DataFrame([fixtures.make_page(i) for i in range(120, 160)]),
+        schema=fixtures.PAGES_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(str(src))
+    (new,) = sorted({p.name for p in src.glob("*.parquet")} - set(first))
+    assert read(incremental.incremental_run(spark, s)) == [new]
+
+    inline = spec.run_pipeline(
+        spark,
+        spec.PipelineSpec(source_path=str(src), out_dir=str(tmp_path / "inline"),
+                          routes=spec.DEFAULT_ROUTES),
+        pages=fixtures.synth_pages(spark, 40, partitions=1),
+    )
+    assert read(inline) == []

@@ -199,8 +199,9 @@ DEDUP_CORE = {
     "array_sort(collect_list(...))": ("bmspark/functions/curation.py", ("collect_sorted",)),
     "row_number() window filtered to == 1": ("bmspark/functions/dedup.py", ("keep_first",)),
 }
-#: names of the whitespace class (functions/text.py WS and its SQL literal)
-WS_NAMES = {"WS", "_WS_SQL"}
+#: names of the whitespace class (functions/text.py WS, its RE2 spelling and
+#: that spelling's SQL literal)
+WS_NAMES = {"WS", "_RE2_WS", "_WS_SQL"}
 
 
 def _callee(n) -> str | None:
@@ -216,7 +217,7 @@ def _first_arg_calls(n, name: str) -> bool:
 
 
 def _is_whitespace_rule(n) -> bool:
-    """A use of the whitespace class (``WS``, ``_WS_SQL``), a ``\\s+``
+    """A use of the whitespace class (``WS``, ``_RE2_WS``, ``_WS_SQL``), a ``\\s+``
     pattern, or a DuckDB ``string_split_regex(`` call."""
     if isinstance(n, (ast.Name, ast.Attribute)) and isinstance(n.ctx, ast.Load):
         return (n.id if isinstance(n, ast.Name) else n.attr) in WS_NAMES
